@@ -28,36 +28,6 @@ from etl_challenge_localiza_spark.registry import QUERIES  # noqa: E402
 
 SF0001_DIR = "/root/testdata/sf0.001"
 
-#: Queries whose PHYSICAL PLAN was rewritten in optimization round N
-#: (OPTIMIZATION_r14.md changes #12-#25, OPTIMIZATION_r15.md): a plan
-#: rewrite invalidates the old driver check the same way a rows-only →
-#: full-oracle flip does (VERDICT r11 #1), so the rewritten lane
-#: re-enters the externally-checked 50-window in the next round instead
-#: of up to ceil(N/50) rounds later (VERDICT r14 "Next round" #4 — the
-#: r14 rewrites' oracle evidence was builder-run only because pure
-#: staleness ordering let the r9 cohort outrank them). The invalidation
-#: applies only once the rewrite exists relative to the newest
-#: CORRECTNESS file (rewrite_round <= max_round+1) and decays naturally:
-#: a check at >= the rewrite round restores normal staleness ordering.
-_PLAN_REWRITES: dict[str, int] = {
-    # r14 second-segment operator rewrites (not driver-checked in r14)
-    "txn_clean": 14,
-    "txn_dq_profile": 14,
-    "region_risk_avg": 14,
-    "attribution_multi_touch": 14,
-    "attribution_multi_touch_capped": 14,
-    "attribution_time_decay": 14,
-    "prefix_filter_jaccard_pairs": 14,
-    "copurchase_user_jaccard": 14,
-    "basket_lift_pairs": 14,
-    "brier_decomposition": 14,
-    "approx_event_stats": 14,
-    # r15 rewrites (this round)
-    "user_activity_streaks": 15,
-    "lsh_recall_audit": 15,
-    "label_pca_variance": 15,
-}
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -131,18 +101,11 @@ def _driver_last_checked(here: str | None = None) -> dict[str, int]:
     # bpe_train_encode / hashing_tfidf_norms) resets to never-checked
     # so the driver confirms the stronger check next round (VERDICT r11
     # directive #1) — an oracle-status change invalidates the old row.
-    # A PLAN REWRITE invalidates the old row the same way (see
-    # _PLAN_REWRITES), gated on the rewrite actually existing relative
-    # to the newest CORRECTNESS file so simulated/fixture histories
-    # whose rounds predate the rewrite are unaffected.
-    max_round = max((rnd for rnd, _ok, _ro in latest.values()), default=0)
     out: dict[str, int] = {}
     for name, (rnd, ok, rows_only) in latest.items():
         q = QUERIES.get(name)
         flipped = rows_only and q is not None and q.oracle is not None
-        rewrite = _PLAN_REWRITES.get(name, 0)
-        rewritten = rnd < rewrite <= max_round + 1
-        out[name] = rnd if (ok and not flipped and not rewritten) else 0
+        out[name] = rnd if (ok and not flipped) else 0
     return out
 
 

@@ -11,9 +11,9 @@ distributed work, comparable across runs.
 The final stdout line is kept COMPACT (required keys + totals) and
 explicitly flushed; full per-query detail (full-call, service-mode,
 per-query duck control) is written to a sidecar JSON
-($SPARK_GRAFT_BENCH_SIDECAR, default BENCH_detail.json beside this
-file) BEFORE the line prints — the old single giant line was twice
-truncated mid-write in the driver's tail capture, losing the
+($SPARK_GRAFT_BENCH_SIDECAR, default BENCH_detail_c{cpus}_sf{sf}.json
+beside this file) BEFORE the line prints — the old single giant line
+was twice truncated mid-write in the driver's tail capture, losing the
 round-over-round PERF pairing (VERDICT r14 #1).
 
 Three timers per query plus a paired control, all in the JSON:
@@ -47,6 +47,7 @@ def _duck_control(sf_dir: str, oracle_queries: dict[str, str]) -> dict[str, floa
     """Best-of-2 DuckDB timing per oracle SQL on the same parquet."""
     import duckdb
 
+    from etl_challenge_localiza_spark.session import DEFAULT_CPUS
     from etl_challenge_localiza_spark.sources.readers import TESTDATA_TABLES
 
     con = duckdb.connect()
@@ -54,7 +55,7 @@ def _duck_control(sf_dir: str, oracle_queries: dict[str, str]) -> dict[str, floa
         path = os.path.join(sf_dir, f"{t}.parquet")
         src = f"{path}/*.parquet" if os.path.isdir(path) else path
         con.execute(f"create view {t} as select * from '{src}'")
-    con.execute(f"set threads to {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.execute(f"set threads to {DEFAULT_CPUS}")
     out: dict[str, float] = {}
     for name, sql in oracle_queries.items():
         # no-transfer drain, symmetric with the Spark noop sink: the
@@ -88,7 +89,7 @@ def main() -> int:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     from etl_challenge_localiza_spark.registry import QUERIES
-    from etl_challenge_localiza_spark.session import get_spark
+    from etl_challenge_localiza_spark.session import DEFAULT_CPUS, get_spark
 
     spark = get_spark(app_name="bench")
 
@@ -171,9 +172,14 @@ def main() -> int:
         "duck_control": dict(duck_control, per_query=duck),
         "sf": sf,
     }
+    # one default file per (cpus, sf), so runs at another width or
+    # scale keep their own detail instead of overwriting it
     sidecar = os.environ.get(
         "SPARK_GRAFT_BENCH_SIDECAR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_detail.json"),
+        os.path.join(
+            os.path.dirname(os.path.abspath(__file__)),
+            f"BENCH_detail_c{DEFAULT_CPUS}_sf{sf}.json",
+        ),
     )
     try:
         with open(sidecar, "w") as f:

@@ -16,7 +16,6 @@ GraphFrames uses underneath.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -93,13 +92,12 @@ def iterative_loop_confs(spark, n_rows: int, rows_per_partition: int = 100_000):
 
 
 #: edge-count ceiling for the driver-local union-find fast path.
-#: ~16 bytes/edge → ≤ ~8 MB of bounded driver state at the default;
-#: override via $SPARK_GRAFT_CC_LOCAL_EDGES (0 disables). This is a
-#: driver-memory bound, not a machine-width tune: the SAME value is
-#: right on a laptop and a 1000-node cluster, because what it guards
-#: is one bounded collect, and past it the distributed fixpoint loop
-#: (identical results) takes over.
-CC_LOCAL_EDGE_BUDGET = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "500000"))
+#: ~16 bytes/edge → ≤ ~8 MB of bounded driver state (0 disables the
+#: fast path). This is a driver-memory bound, not a machine-width
+#: tune: the SAME value is right on a laptop and a 1000-node cluster,
+#: because what it guards is one bounded collect, and past it the
+#: distributed fixpoint loop (identical results) takes over.
+CC_LOCAL_EDGE_BUDGET = 500_000
 
 
 def _local_components(rows) -> dict:

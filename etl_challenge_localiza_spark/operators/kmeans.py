@@ -28,8 +28,6 @@ oracle's fixed unrolled CTE sweeps stay bit-equal.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -38,7 +36,7 @@ SCALE = 1_000_000
 #: vector-count ceiling for the driver-local exact Lloyd fast path —
 #: a driver-memory bound (~64 MB of int64 at d=64), not a machine-width
 #: tune (components.CC_LOCAL_EDGE_BUDGET policy).
-KM_LOCAL_VECS_BUDGET = int(os.environ.get("SPARK_GRAFT_KM_LOCAL_VECS", "100000"))
+KM_LOCAL_VECS_BUDGET = 100_000
 
 
 def _round_half_up(x: float) -> int:

@@ -30,8 +30,6 @@ shared :func:`operators.components.iterative_loop_confs` sizing policy
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,7 +41,7 @@ RANK_SCALE = 1_000_000_000_000
 #: edge-count ceiling for the driver-local exact-integer fast path —
 #: a driver-memory bound, not a machine-width tune (see
 #: components.CC_LOCAL_EDGE_BUDGET for the policy rationale).
-PR_LOCAL_EDGE_BUDGET = int(os.environ.get("SPARK_GRAFT_PR_LOCAL_EDGES", "500000"))
+PR_LOCAL_EDGE_BUDGET = 500_000
 
 
 def pagerank_scaled(

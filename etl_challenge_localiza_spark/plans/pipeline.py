@@ -26,6 +26,7 @@ from ..operators.quality import (
     MIN_CONFORMITY_POST,
     MIN_CONFORMITY_PRE,
     QualityGateError,
+    check_gate,
     dq_profile,
 )
 from ..sources.readers import read_transactions_csv
@@ -73,56 +74,60 @@ def run_pipeline(
         )
 
     df_raw = read_transactions_csv(spark, input_csv).cache()
+    df_clean = None
+    try:
+        dq_pre = dq_profile(df_raw)
+        write_json_metrics(dq_pre, os.path.join(data_dir, "dq_metrics_pre.json"), phase="pre_clean")
+        result = PipelineResult(dq_pre=dq_pre)
 
-    dq_pre = dq_profile(df_raw)
-    write_json_metrics(dq_pre, os.path.join(data_dir, "dq_metrics_pre.json"), phase="pre_clean")
-    result = PipelineResult(dq_pre=dq_pre)
+        try:
+            check_gate(dq_pre, pre_thresh, "PRE")
+        except QualityGateError as err:
+            snap = os.path.join(data_dir, "raw_snapshot.parquet")
+            df_raw.write.mode("overwrite").parquet(snap)
+            result.outputs["raw_snapshot"] = snap
+            result.failed_gate = "pre"
+            err.result = result  # expose artifacts to the caller, as the
+            raise  # reference does by leaving files on disk
 
-    if dq_pre["conformity_rate"] is not None and dq_pre["conformity_rate"] < pre_thresh:
-        snap = os.path.join(data_dir, "raw_snapshot.parquet")
-        df_raw.write.mode("overwrite").parquet(snap)
-        result.outputs["raw_snapshot"] = snap
-        result.failed_gate = "pre"
-        err = QualityGateError(
-            f"Conformity PRE ({dq_pre['conformity_rate']:.4f}) < {pre_thresh} — "
-            "failing on quality policy."
+        df_clean = clean_transactions(df_raw).cache()
+
+        dq_post = dq_profile(df_clean)
+        write_json_metrics(
+            dq_post, os.path.join(data_dir, "dq_metrics_post.json"), phase="post_clean"
         )
-        err.result = result  # expose artifacts to the caller, as the
-        raise err  # reference does by leaving files on disk
+        result.dq_post = dq_post
 
-    df_clean = clean_transactions(df_raw).cache()
+        def publish() -> None:
+            stg = os.path.join(data_dir, "stg_transactions.parquet")
+            df_clean.write.mode("overwrite").parquet(stg)
+            result.outputs["stg_transactions"] = stg
+            rra = region_risk_avg(df_clean)
+            result.outputs["region_risk_avg"] = write_single_csv(
+                rra, os.path.join(curated_dir, "region_risk_avg.csv")
+            )
+            top3 = top3_recent_sales(last_sale_per_address(df_clean))
+            result.outputs["top3_recent_sales_by_receiving"] = write_single_csv(
+                top3, os.path.join(curated_dir, "top3_recent_sales_by_receiving.csv")
+            )
 
-    dq_post = dq_profile(df_clean)
-    write_json_metrics(dq_post, os.path.join(data_dir, "dq_metrics_post.json"), phase="post_clean")
-    result.dq_post = dq_post
+        try:
+            check_gate(dq_post, post_thresh, "POST")
+        except QualityGateError as err:
+            publish()  # publish-then-raise (flows/pipeline.py:256-261)
+            result.failed_gate = "post"
+            err.result = result
+            raise
 
-    def publish() -> None:
-        stg = os.path.join(data_dir, "stg_transactions.parquet")
-        df_clean.write.mode("overwrite").parquet(stg)
-        result.outputs["stg_transactions"] = stg
-        rra = region_risk_avg(df_clean)
-        result.outputs["region_risk_avg"] = write_single_csv(
-            rra, os.path.join(curated_dir, "region_risk_avg.csv")
-        )
-        top3 = top3_recent_sales(last_sale_per_address(df_clean))
-        result.outputs["top3_recent_sales_by_receiving"] = write_single_csv(
-            top3, os.path.join(curated_dir, "top3_recent_sales_by_receiving.csv")
-        )
-
-    if dq_post["conformity_rate"] is not None and dq_post["conformity_rate"] < post_thresh:
-        publish()  # publish-then-raise (flows/pipeline.py:256-261)
-        result.failed_gate = "post"
-        err = QualityGateError(
-            f"Conformity POST ({dq_post['conformity_rate']:.4f}) < {post_thresh} — "
-            "failing on output quality policy."
-        )
-        err.result = result
-        raise err
-
-    publish()
-    df_raw.unpersist()
-    df_clean.unpersist()
-    return result
+        publish()
+        return result
+    finally:
+        # release both fan-out caches on every exit, gate failures
+        # included; the derived frame goes first so Spark never
+        # re-plans it against an uncached parent
+        if df_clean is not None:
+            df_clean.unpersist()
+        df_raw.unpersist()
 
 
 def main() -> int:

@@ -4954,7 +4954,7 @@ def q_monthly_revenue_growth(spark, sf_dir):
     decimal) keeps the ordered lag window at calendar cardinality;
     first month's growth is null (lag has no input) in both engines."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return tune(spark).sql(
+    return spark.sql(
         """
         with m as (
           select cast(date_trunc('month', o_orderdate) as timestamp_ntz)
@@ -5148,7 +5148,7 @@ def q_lateral_top2_customers(spark, sf_dir):
     (c_acctbal desc, c_name) is a total order → deterministic set."""
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation_v")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    return tune(spark).sql(
+    return spark.sql(
         """
         select n.n_name, t.c_name, t.c_acctbal
         from nation_v n,
@@ -5241,7 +5241,7 @@ def q_user_activity_streaks(spark, sf_dir):
             F.lit("1970-01-01").cast("date"),
         ).alias("d"),
     ).distinct().createOrReplaceTempView("user_days_v")
-    return tune(spark).sql(
+    return spark.sql(
         """
         with recursive streak(user_id, start_d, d) as (
           select user_id, d, d from user_days_v a

@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 # Runtime-settable confs applied even to an externally created session
 # (e.g. the verification driver's). Static confs like driver memory can
@@ -190,9 +190,9 @@ def get_spark(
 ) -> SparkSession:
     """Create (or fetch) a local SparkSession tuned for this engine.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (32). On a real cluster the
-    builder master/memory settings come from spark-submit instead; only
-    RUNTIME_CONF matters there.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS, else the machine's CPU
+    count. On a real cluster the builder master/memory settings come
+    from spark-submit instead; only RUNTIME_CONF matters there.
     """
     cpus = cpus or DEFAULT_CPUS
     driver_memory = driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "8g")

@@ -1,4 +1,4 @@
-"""Sinks: curated CSV exports (S5/S6), JSON metrics (S7), tables (S3/S4).
+"""Sinks: curated CSV exports (S5/S6), JSON metrics (S7), storage layouts.
 
 Reference sinks: DuckDB ``COPY ... TO csv (header, delim ',')``
 (flows/pipeline.py:214-215) and a driver-side ``json.dump`` of the DQ
@@ -55,16 +55,6 @@ def write_json_metrics(metrics: dict[str, Any], path: str, phase: str | None = N
     with open(path, "w") as f:
         json.dump(payload, f, indent=2, default=str)
     return path
-
-
-def save_table(df: DataFrame, name: str) -> None:
-    """S3/S4: materialize a stage table (CTAS equivalent).
-
-    ``create or replace table ... as select *`` (flows/pipeline.py:172-175,
-    238-242) becomes an overwrite saveAsTable into the session warehouse
-    (parquet). On a cluster this is the lakehouse staging write.
-    """
-    df.write.mode("overwrite").format("parquet").saveAsTable(name)
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> str:

@@ -89,6 +89,30 @@ def test_pipeline_post_gate_publishes_then_raises(spark, tmp_path):
     assert os.path.exists(tmp_path / "c" / "region_risk_avg.csv")  # still published
 
 
+def test_pipeline_gate_failures_release_caches(spark, tmp_path):
+    """Both fan-out caches (raw and clean) are released when either
+    gate raises, not only on the happy path."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    bad = [HEADER[:3]] + [["", "", "-1"]] * 10 + [["1700000000", "sale", "5"]] * 10
+    src = _write_csv(tmp_path / "bad.csv", bad)
+    with pytest.raises(QualityGateError, match="PRE") as pre:
+        run_pipeline(spark, str(src), data_dir=str(tmp_path / "d1"), curated_dir=str(tmp_path / "c1"))
+    assert pre.value.result.failed_gate == "pre"
+    assert cache_manager.isEmpty()
+
+    src = _write_csv(tmp_path / "ok.csv", _good_rows(50))
+    with pytest.raises(QualityGateError, match="POST") as post:
+        run_pipeline(
+            spark,
+            str(src),
+            data_dir=str(tmp_path / "d2"),
+            curated_dir=str(tmp_path / "c2"),
+            min_conformity_post=1.1,
+        )
+    assert post.value.result.failed_gate == "post"
+    assert cache_manager.isEmpty()
+
 def test_pipeline_missing_input(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         run_pipeline(spark, str(tmp_path / "nope.csv"), data_dir=str(tmp_path / "d"), curated_dir=str(tmp_path / "c"))

@@ -95,7 +95,7 @@ def test_prefix_filter_nondyadic_threshold_brute_force(spark, t):
         assert abs(got[k] - want[k]) < 1e-12
 
 
-def test_values_table_empty_array_typed(spark):
+def test_values_table_empty_array_typed(spark, monkeypatch):
     """ADVICE r14 (low): an empty array renders as cast(array() as
     <declared type>) so a VALUES list mixing empty and non-empty
     arrays analyzes with the right element type instead of raising
@@ -114,3 +114,22 @@ def test_values_table_empty_array_typed(spark):
     df2 = values_table(spark, [([],)], "v array<double>")
     assert df2.collect()[0]["v"] == []
     assert dict(df2.dtypes)["v"] == "array<double>"
+
+    # nested empty arrays render through VALUES too (no createDataFrame
+    # fallback), with ANSI on and off
+    def no_fallback(*args, **kwargs):
+        raise AssertionError("values_table fell back to createDataFrame")
+
+    monkeypatch.setattr(spark, "createDataFrame", no_fallback)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            for vals in ([[[1]], []], [[]], [[[]]]):
+                df3 = values_table(
+                    spark, list(enumerate(vals)), "id bigint, v array<array<bigint>>"
+                )
+                assert dict(df3.dtypes)["v"] == "array<array<bigint>>"
+                assert sorted((r["id"], r["v"]) for r in df3.collect()) == list(enumerate(vals))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
