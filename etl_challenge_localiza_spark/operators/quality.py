@@ -59,62 +59,37 @@ def _null_count(col: str) -> F.Column:
 
 def dq_profile(df: DataFrame) -> dict:
     """A2-A6 in a single aggregate pass; returns the reference's exact
-    metrics dict shape (flows/pipeline.py:53-64)."""
+    metrics dict shape (flows/pipeline.py:53-64), read off the one row
+    of :func:`dq_profile_df`."""
     cols = set(df.columns)
-    # DQ-pre type nuance: coerce amount only (flows/pipeline.py:100-101).
-    if "amount" in cols:
-        amount_dtype = dict(df.dtypes)["amount"]
-        if amount_dtype not in ("double", "float") and not amount_dtype.startswith("decimal"):
-            df = df.withColumn("amount", numeric_coerce("amount"))
-
-    aggs = [F.count(F.lit(1)).cast("long").alias("__total")]
-    for c in PROFILE_COLUMNS:
-        if c in cols:
-            aggs.append(_null_count(c).alias(f"nulls__{c}"))
-    if "amount" in cols:
-        aggs.append(
-            F.count(F.when(F.col("amount") < 0, F.lit(1))).cast("long").alias("__amount_neg")
-        )
-
-    row = df.agg(*aggs).first().asDict()
-    total = int(row["__total"])
-
+    row = dq_profile_df(df).first().asDict()
     metrics: dict = {
-        "total_rows": total,
-        "nulls": {},
+        "total_rows": int(row["total_rows"]),
+        "nulls": {c: int(row[f"nulls_{c}"]) for c in PROFILE_COLUMNS if c in cols},
         "rules": {
             "timestamp_not_null": None,
             "transaction_type_not_null": None,
             "amount_not_null": None,
             "amount_non_negative": None,
         },
-        "failed_rows_estimate": None,
-        "conformity_rate": None,
+        "failed_rows_estimate": int(row["failed_rows_estimate"]),
+        # exact formula incl. epsilon + clamp (flows/pipeline.py:89),
+        # evaluated in the plan with the same IEEE double operations
+        "conformity_rate": float(row["conformity_rate"]),
     }
-    for c in PROFILE_COLUMNS:
-        if c in cols:
-            metrics["nulls"][c] = int(row[f"nulls__{c}"])
-
-    fails = 0
     for rule, c in NOT_NULL_RULES:
         if c in cols:
-            violated = int(row[f"nulls__{c}"])
-            metrics["rules"][rule] = {"violations": violated}
-            fails += violated
+            metrics["rules"][rule] = {"violations": int(row[f"nulls_{c}"])}
     if "amount" in cols:
-        violated = int(row["__amount_neg"])
-        metrics["rules"]["amount_non_negative"] = {"violations": violated}
-        fails += violated
-
-    metrics["failed_rows_estimate"] = int(fails)
-    # exact formula incl. epsilon + clamp (flows/pipeline.py:89)
-    metrics["conformity_rate"] = max(0.0, 1.0 - (fails / (total + 1e-9)))
+        metrics["rules"]["amount_non_negative"] = {
+            "violations": int(row["violations_amount_non_negative"])
+        }
     return metrics
 
 
 def dq_profile_df(df: DataFrame) -> DataFrame:
     """The A2-A6 profile as a 1-row DataFrame (flat column names), for
-    SQL-oracle comparison. Same single-pass aggregate as
+    SQL-oracle comparison and as the single aggregate behind
     :func:`dq_profile`; conformity arithmetic is done in the plan with
     the exact reference formula (flows/pipeline.py:89).
     """

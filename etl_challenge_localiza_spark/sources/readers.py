@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
 from ..session import shuffle_width
 
@@ -99,6 +99,23 @@ def _table_cache_key(spark: SparkSession, path: str) -> tuple | None:
         return None
 
 
+def ts_nanos_to_micros(df: DataFrame) -> DataFrame:
+    """Turn a raw int64 nanosecond ``ts`` column (TIMESTAMP(NANOS) read
+    with nanosAsLong) into µs-precision TIMESTAMP_NTZ. Works on batch
+    and streaming frames alike."""
+    from pyspark.sql import functions as F
+
+    # integer `div` truncates toward zero — bit-identical to the
+    # previous decimal(38,0) divide-then-cast across the full int64
+    # domain (fuzz-checked round 9) and to DuckDB's read-time ns→µs
+    # truncation, without the per-row 128-bit decimal temporary
+    micros = F.call_function("div", F.col("ts"), F.lit(1000))
+    # NTZ so events timestamps carry the same (timezone-free)
+    # semantics as every other table and as DuckDB's read of the
+    # file — collected values are naive either way.
+    return df.withColumn("ts", F.timestamp_micros(micros).cast("timestamp_ntz"))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic-benchmark table (columnar parquet scan).
 
@@ -112,8 +129,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     file, so oracle comparisons agree. Integer `div` keeps the ns→µs
     conversion exact (a double would lose precision above 2^53).
     """
-    from pyspark.sql import functions as F
-
     path = os.path.join(sf_dir, f"{name}.parquet")
     key = _table_cache_key(spark, path)
     if key is not None:
@@ -126,16 +141,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         pass
     df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # integer `div` truncates toward zero — bit-identical to the
-        # previous decimal(38,0) divide-then-cast across the full
-        # int64 domain (fuzz-checked round 9) and to DuckDB's
-        # read-time ns→µs truncation, without the per-row 128-bit
-        # decimal temporary
-        micros = F.call_function("div", F.col("ts"), F.lit(1000))
-        # NTZ so events timestamps carry the same (timezone-free)
-        # semantics as every other table and as DuckDB's read of the
-        # file — collected values are naive either way.
-        df = df.withColumn("ts", F.timestamp_micros(micros).cast("timestamp_ntz"))
+        df = ts_nanos_to_micros(df)
     if key is not None:
         while len(_TABLE_CACHE) >= _TABLE_CACHE_MAX:
             _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
@@ -193,6 +199,43 @@ def read_transactions_csv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def _split_corrupt(
+    reader: DataFrameReader, fmt: str, path: str, schema_ddl: str
+) -> tuple[DataFrame, DataFrame]:
+    """The quarantine readers' shared split: ONE cached PERMISSIVE scan
+    that captures each malformed line in ``_corrupt_record``, split by
+    two filters into eager localCheckpoints (good, quarantine); the
+    scan cache is dropped on every exit path."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType, StructType
+
+    schema = StructType.fromDDL(schema_ddl).add("_corrupt_record", StringType())
+    raw = (
+        reader.option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .schema(schema)
+        .format(fmt)
+        .load(path)
+        # corrupt-record access requires materializing the column
+        # (Spark disallows filtering the raw scan on it alone)
+        .cache()
+    )
+    try:
+        good = (
+            raw.filter(F.col("_corrupt_record").isNull())
+            .drop("_corrupt_record")
+            .localCheckpoint(eager=True)
+        )
+        quarantine = (
+            raw.filter(F.col("_corrupt_record").isNotNull())
+            .select(F.col("_corrupt_record").alias("raw_line"))
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        raw.unpersist()
+    return good, quarantine
+
+
 def read_csv_with_quarantine(
     spark: SparkSession, path: str, schema_ddl: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -224,34 +267,7 @@ def read_csv_with_quarantine(
     straight to their sinks inside this lifetime; the eager shape makes
     that a drop-in change.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructType
-
-    schema = StructType.fromDDL(schema_ddl).add("_corrupt_record", StringType())
-    raw = (
-        spark.read.option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(schema)
-        .csv(path)
-        # corrupt-record access requires materializing the column
-        # (Spark disallows filtering the raw scan on it alone)
-        .cache()
-    )
-    try:
-        good = (
-            raw.filter(F.col("_corrupt_record").isNull())
-            .drop("_corrupt_record")
-            .localCheckpoint(eager=True)
-        )
-        quarantine = (
-            raw.filter(F.col("_corrupt_record").isNotNull())
-            .select(F.col("_corrupt_record").alias("raw_line"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        raw.unpersist()
-    return good, quarantine
+    return _split_corrupt(spark.read.option("header", True), "csv", path, schema_ddl)
 
 
 def read_binary_assets(
@@ -307,31 +323,7 @@ def read_jsonl_with_quarantine(
     missing field is a NULL, not corruption — schema-presence policy
     belongs to the DQ gates downstream, not the parser.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructType
-
-    schema = StructType.fromDDL(schema_ddl).add("_corrupt_record", StringType())
-    raw = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(schema)
-        .json(path)
-        .cache()
-    )
-    try:
-        good = (
-            raw.filter(F.col("_corrupt_record").isNull())
-            .drop("_corrupt_record")
-            .localCheckpoint(eager=True)
-        )
-        quarantine = (
-            raw.filter(F.col("_corrupt_record").isNotNull())
-            .select(F.col("_corrupt_record").alias("raw_line"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        raw.unpersist()
-    return good, quarantine
+    return _split_corrupt(spark.read, "json", path, schema_ddl)
 
 
 def read_xml(

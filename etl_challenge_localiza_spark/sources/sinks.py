@@ -214,7 +214,6 @@ def snapshot_vacuum(
     path: str,
     keep_last: int = 2,
     pinned: set[int] | None = None,
-    stale_sec: float = 3600.0,
 ) -> list[int]:
     """Retention for versioned snapshot tables: prune old versions so
     history stops growing without bound (the plain-parquet analog of
@@ -242,7 +241,7 @@ def snapshot_vacuum(
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     pins = set(pinned or ())
     removed: list[int] = []
-    with snapshot_writer_lock(path, stale_sec=stale_sec):
+    with snapshot_writer_lock(path):
         cur = snapshot_current_version(path)
         if cur == 0:
             return []
@@ -292,7 +291,7 @@ class ConcurrentWriterError(RuntimeError):
 
 
 @contextmanager
-def snapshot_writer_lock(path: str, stale_sec: float = 3600.0):
+def snapshot_writer_lock(path: str):
     """Single-writer enforcement for snapshot tables: an exclusive
     ``flock`` on a persistent lock file under the table path. The
     snapshot design is single-writer (the commit-log/conflict-detection
@@ -317,12 +316,10 @@ def snapshot_writer_lock(path: str, stale_sec: float = 3600.0):
     inode while C locks the new file — two holders). A zero-byte
     ``_writer_lock`` at rest is the correct steady state.
 
-    ``stale_sec`` is retained for API compatibility but unused: crash
-    release is kernel-side. Scope: flock coordinates writers on ONE
-    host (or a correctly-configured NFSv4 mount); multi-host writers
-    need a real table format's commit log — documented out of scope.
+    Scope: flock coordinates writers on ONE host (or a
+    correctly-configured NFSv4 mount); multi-host writers need a real
+    table format's commit log — documented out of scope.
     """
-    del stale_sec  # crash recovery is kernel-side now
     import fcntl
 
     os.makedirs(path, exist_ok=True)

@@ -20,10 +20,15 @@ Two shapes:
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from ..sources.readers import load_table, ts_nanos_to_micros
 
 
 def _event_stream(
@@ -41,38 +46,69 @@ def _event_stream(
         pass
     path = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema
+    reader = spark.readStream.schema(schema).options(**(options or {}))
     if os.path.isdir(path):
         # directory-of-part-files layout (any real table, and the
         # clone tiers): stream the table directory itself — every
         # part file becomes streamable input
-        reader = spark.readStream.schema(schema)
-        for k, v in (options or {}).items():
-            reader = reader.option(k, v)
         stream = reader.parquet(path)
     else:
         # single-file testdata layout: FileStreamSource needs a
         # directory basePath; select the one file via pathGlobFilter
         # so the stream watches the table's directory.
-        reader = spark.readStream.schema(schema).option(
-            "pathGlobFilter", "events.parquet"
+        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    if schema["ts"].dataType.simpleString() == "bigint":
+        # TIMESTAMP(NANOS) storage read as raw int64 (nanosAsLong)
+        return ts_nanos_to_micros(stream)
+    # µs-precision storage arrives as a native timestamp type;
+    # normalize to NTZ for parity with the batch reader.
+    return stream.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+
+
+def _await_available_now(q: StreamingQuery, timeout_sec: float, label: str) -> None:
+    """Wait for an availableNow query to drain its input; the query is
+    stopped on every exit path. A query still running at the deadline
+    raises TimeoutError: its sink holds a partial (possibly empty)
+    result, and handing that back would be a silent wrong answer."""
+    try:
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"availableNow {label} did not finish within {timeout_sec}s"
+            )
+    finally:
+        if q.isActive:
+            q.stop()
+
+
+def _run_to_memory(
+    df: DataFrame, output_mode: str, name_prefix: str, timeout_sec: float
+) -> DataFrame:
+    """Run the finite stream ``df`` to completion (availableNow) into a
+    memory sink and return the sink's rows as a batch DataFrame.
+
+    The query gets its own temp checkpoint. On every exit path the
+    query is stopped, its temp view dropped and the checkpoint removed:
+    the returned frame holds the sink's in-memory plan, not the view
+    name, so it stays readable after the drop."""
+    spark = df.sparkSession
+    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
+    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    try:
+        q = (
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
         )
-        for k, v in (options or {}).items():
-            reader = reader.option(k, v)
-        stream = reader.parquet(sf_dir)
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type == "bigint":
-        # TIMESTAMP(NANOS) storage read as raw int64 (nanosAsLong):
-        # truncate ns→µs exactly, as the batch reader does (integer
-        # div — bit-identical to the former decimal path, round 9).
-        micros = F.call_function("div", F.col("ts"), F.lit(1000))
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(micros).cast("timestamp_ntz")
-        )
-    else:
-        # µs-precision storage arrives as a native timestamp type;
-        # normalize to NTZ for parity with the batch reader.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    return stream
+        try:
+            _await_available_now(q, timeout_sec, f"streaming query {name!r}")
+            return spark.table(name)
+        finally:
+            spark.catalog.dropTempView(name)
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def _hourly_agg(stream: DataFrame) -> DataFrame:
@@ -91,28 +127,8 @@ def _hourly_agg(stream: DataFrame) -> DataFrame:
 def run_streaming_hourly(spark: SparkSession, sf_dir: str, timeout_sec: int = 300) -> DataFrame:
     """Run the finite stream to completion; return the result as a
     batch DataFrame (from the memory sink's table)."""
-    name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    q = (
-        _hourly_agg(_event_stream(spark, sf_dir))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # returning the memory sink here would silently hand back a
-            # partially-populated (possibly empty) table — fail loudly
-            raise TimeoutError(
-                f"availableNow streaming query {name!r} did not finish "
-                f"within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    agg = _hourly_agg(_event_stream(spark, sf_dir))
+    return _run_to_memory(agg, "complete", "stream_hourly", timeout_sec)
 
 
 def run_streaming_sliding(
@@ -123,7 +139,6 @@ def run_streaming_sliding(
     mode with availableNow. On the finite input this equals the batch
     ``events_sliding_counts`` result — the registry pairs it with the
     identical SQL oracle."""
-    name = f"stream_sliding_{uuid.uuid4().hex[:8]}"
     agg = (
         _event_stream(spark, sf_dir)
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
@@ -137,26 +152,7 @@ def run_streaming_sliding(
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # returning the memory sink here would silently hand back a
-            # partially-populated (possibly empty) table — fail loudly
-            raise TimeoutError(
-                f"availableNow streaming query {name!r} did not finish "
-                f"within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return _run_to_memory(agg, "complete", "stream_sliding", timeout_sec)
 
 
 def run_streaming_dedup(
@@ -178,32 +174,12 @@ def run_streaming_dedup(
     evicted — covered by the watermark variant in
     :func:`hourly_stream_with_watermark`.
     """
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     deduped = (
         _event_stream(spark, sf_dir)
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # returning the memory sink here would silently hand back a
-            # partially-populated (possibly empty) table — fail loudly
-            raise TimeoutError(
-                f"availableNow streaming query {name!r} did not finish "
-                f"within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return _run_to_memory(deduped, "append", "stream_dedup", timeout_sec)
 
 
 def run_streaming_dedup_within_watermark(
@@ -227,7 +203,6 @@ def run_streaming_dedup_within_watermark(
     finding). tests/test_streaming.py drives the multi-batch case
     where a beyond-watermark duplicate IS re-emitted, proving the
     eviction actually happens."""
-    name = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
     deduped = (
         _event_stream(spark, sf_dir, options={"maxFilesPerTrigger": "1000000000"})
         .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -235,25 +210,7 @@ def run_streaming_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # a partial memory sink is a silent wrong answer — fail loudly
-            raise TimeoutError(
-                f"availableNow streaming query {name!r} did not finish "
-                f"within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return _run_to_memory(deduped, "append", "stream_dedup_wm", timeout_sec)
 
 
 def hourly_stream_with_watermark(
@@ -328,29 +285,10 @@ def run_streaming_interval_join(
     range join restricted to click→purchase pairs — the registry pairs
     it with that SQL oracle (the events_followup_pairs shape,
     operators/rangejoin.py)."""
-    name = f"stream_ivjoin_{uuid.uuid4().hex[:8]}"
     clicks = _event_stream(spark, sf_dir).filter(F.col("event_type") == "click")
     purchases = _event_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
     joined = interval_join_streams(clicks, purchases, window_minutes=30)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # a partial memory sink is a silent wrong answer — fail loudly
-            raise TimeoutError(
-                f"availableNow streaming query {name!r} did not finish "
-                f"within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return _run_to_memory(joined, "append", "stream_ivjoin", timeout_sec)
 
 
 def run_streaming_nation_rollup(
@@ -367,9 +305,6 @@ def run_streaming_nation_rollup(
     (that's how Structured Streaming picks up dim updates); a
     fixed-cardinality dim broadcast keeps the join shuffle-free on the
     stream side."""
-    from ..sources.readers import load_table
-
-    name = f"stream_nation_{uuid.uuid4().hex[:8]}"
     stream = _event_stream(spark, sf_dir)
     nation = load_table(spark, sf_dir, "nation")
     agg = (
@@ -386,25 +321,7 @@ def run_streaming_nation_rollup(
             .alias("sum_value"),
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # a partial memory sink is a silent wrong answer — fail loudly
-            raise TimeoutError(
-                f"availableNow streaming query {name!r} did not finish "
-                f"within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return _run_to_memory(agg, "complete", "stream_nation", timeout_sec)
 
 
 def run_streaming_sessions(
@@ -421,7 +338,6 @@ def run_streaming_sessions(
     swaps COMPLETE for append + ``withWatermark`` so closed sessions
     emit once and state is evicted (the streaming_dedup eviction
     pattern, proven in tests/test_streaming.py)."""
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
     agg = (
         _event_stream(spark, sf_dir)
         .groupBy(F.session_window(F.col("ts"), "30 minutes").alias("sw"), "user_id")
@@ -433,21 +349,4 @@ def run_streaming_sessions(
             "n_events",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"availableNow streaming query {name!r} did not finish "
-                f"within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return _run_to_memory(agg, "complete", "stream_sessions", timeout_sec)

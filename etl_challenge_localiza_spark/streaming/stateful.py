@@ -10,14 +10,15 @@ stores / per-entity counters that windowed aggregates can't express.
 
 from __future__ import annotations
 
-import os
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .events_stream import _event_stream, _run_to_memory
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n_events long, total_value double"
@@ -52,46 +53,26 @@ def running_user_totals(events_stream: DataFrame) -> DataFrame:
     )
 
 
-def run_stateful_user_totals(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
-) -> DataFrame:
-    """Run the stateful operator over the finite events stream
-    (availableNow) and return the final per-user totals."""
-    from .events_stream import _event_stream
-
-    name = f"stateful_totals_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join("/tmp", f"ckpt_{name}")
-    q = (
-        running_user_totals(_event_stream(spark, sf_dir).select("user_id", "value"))
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # a partial memory sink is a silent wrong answer — fail loudly
-            raise TimeoutError(
-                f"availableNow streaming query {name!r} did not finish "
-                f"within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    # update-mode memory sink may hold one row per state update; keep
-    # the final emission per user.
-    out = spark.table(name)
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+def _final_per_user(out: DataFrame) -> DataFrame:
+    """An update-mode memory sink may hold one row per state update;
+    keep the final emission per user (its highest running count)."""
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         out.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+def run_stateful_user_totals(
+    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
+) -> DataFrame:
+    """Run the stateful operator over the finite events stream
+    (availableNow) and return the final per-user totals."""
+    events = _event_stream(spark, sf_dir).select("user_id", "value")
+    stream = running_user_totals(events)
+    return _final_per_user(
+        _run_to_memory(stream, "update", "stateful_totals", timeout_sec)
     )
 
 
@@ -142,17 +123,13 @@ def run_tws_user_totals(
         def close(self) -> None:
             pass
 
-    from .events_stream import _event_stream
-
     # transformWithState requires the RocksDB state store provider
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    name = f"tws_totals_{uuid.uuid4().hex[:8]}"
-    checkpoint = os.path.join("/tmp", f"ckpt_{name}")
     try:
-        q = (
+        stream = (
             _event_stream(spark, sf_dir)
             .select("user_id", "value")
             .groupBy("user_id")
@@ -162,37 +139,12 @@ def run_tws_user_totals(
                 outputMode="Update",
                 timeMode="None",
             )
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
-                # a partial memory sink is a silent wrong answer — fail loudly
-                raise TimeoutError(
-                    f"availableNow streaming query {name!r} did not finish "
-                    f"within {timeout_sec}s"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
+        out = _run_to_memory(stream, "update", "tws_totals", timeout_sec)
     finally:
         # restore the default provider for subsequent queries
         try:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         except Exception:
             pass
-    out = spark.table(name)
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return _final_per_user(out)

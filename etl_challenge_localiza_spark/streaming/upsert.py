@@ -22,15 +22,18 @@ import json
 import os
 import shutil
 import tempfile
-import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.merge import merge_latest
 from ..sources.readers import load_table
+from .events_stream import _await_available_now
 
 _COLS = ["user_id", "event_id", "ts", "event_type", "value"]
+_ORDER_COLS = ["o_orderkey", "o_totalprice"]
 
 
 def apply_latest_batch(target: DataFrame | None, batch: DataFrame) -> DataFrame:
@@ -42,34 +45,43 @@ def apply_latest_batch(target: DataFrame | None, batch: DataFrame) -> DataFrame:
     return merge_latest(target, latest, "user_id", ["ts", "event_id"])
 
 
-def _staged_event_stream(
+@contextmanager
+def _staged_stream(
     spark: SparkSession,
     sf_dir: str,
+    table: str,
+    cols: list[str],
     n_input_files: int,
     base: str | None = None,
-):
-    """Stage the events table as ``n_input_files`` parquet files in a
-    temp dir and return (stream, base_dir): a file stream delivering
-    ONE file per micro-batch (maxFilesPerTrigger=1) plus the staging
-    dir (sources under base/src, checkpoint under base/ckpt — outside
-    the watched directory). Caller owns base_dir cleanup.
+) -> Iterator[tuple[DataFrame, str]]:
+    """Stage ``cols`` of ``table`` as ``n_input_files`` parquet files
+    and yield (stream, base_dir): a file stream delivering ONE file per
+    micro-batch (maxFilesPerTrigger=1) plus the staging dir (sources
+    under base/src, checkpoint under base/ckpt — outside the watched
+    directory). On exit a staging dir created here is removed; a
+    caller's ``base`` is kept.
 
     When ``base`` is given and already staged, the existing src files
     are REUSED (re-staging would write new file names, which the
     checkpoint's file log would treat as new data — a restart from
     the same checkpoint must see the same file set)."""
-    if base is None:
-        base = tempfile.mkdtemp(prefix=f"stream_stage_{uuid.uuid4().hex[:8]}_")
-    src = os.path.join(base, "src")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").select(*_COLS).repartition(
-            n_input_files
-        ).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    return stream, base
+    owned = base is None
+    if owned:
+        base = tempfile.mkdtemp(prefix="stream_stage_")
+    try:
+        src = os.path.join(base, "src")
+        if not os.path.exists(os.path.join(src, "_SUCCESS")):
+            load_table(spark, sf_dir, table).select(*cols).repartition(
+                n_input_files
+            ).write.mode("overwrite").parquet(src)
+        schema = spark.read.parquet(src).schema
+        stream = (
+            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        )
+        yield stream, base
+    finally:
+        if owned:
+            shutil.rmtree(base, ignore_errors=True)
 
 
 def _read_applied(base: str) -> dict | None:
@@ -139,14 +151,7 @@ def _run_foreach_batch(stream, base: str, apply_fn, timeout_sec: int, label: str
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"availableNow {label} did not finish within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _await_available_now(q, timeout_sec, label)
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -174,18 +179,18 @@ def run_streaming_upsert_latest(
     batch reads the previous version and writes the next — the plain-
     parquet stand-in for a Delta/Iceberg MERGE INTO target.
     """
-    stream, base = _staged_event_stream(spark, sf_dir, n_input_files)
+    with _staged_stream(
+        spark, sf_dir, "events", _COLS, n_input_files
+    ) as (stream, base):
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            apply_versioned_batch(
+                batch_df.sparkSession,
+                base,
+                "v",
+                batch_id,
+                lambda prev: apply_latest_batch(prev, batch_df),
+            )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_versioned_batch(
-            batch_df.sparkSession,
-            base,
-            "v",
-            batch_id,
-            lambda prev: apply_latest_batch(prev, batch_df),
-        )
-
-    try:
         _run_foreach_batch(stream, base, _apply, timeout_sec, "foreachBatch upsert")
         # materialize before the staging dir disappears
         return (
@@ -193,8 +198,6 @@ def run_streaming_upsert_latest(
             .select(*_COLS)
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def run_streaming_snapshot_cdc(
@@ -232,30 +235,29 @@ def run_streaming_snapshot_cdc(
     monotonicity)."""
     from ..operators.merge import snapshot_merge
 
-    stream, base = _staged_event_stream(spark, sf_dir, n_input_files)
+    with _staged_stream(
+        spark, sf_dir, "events", _COLS, n_input_files
+    ) as (stream, base):
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            # within-run replay guard (ADVICE r9): a retried micro-batch
+            # would otherwise commit a duplicate snapshot version (final
+            # state stays correct — the argmax apply is idempotent — but
+            # version history inflates). Marker commits AFTER the merge,
+            # so a crash mid-merge replays into at most one extra version.
+            m = _read_applied(base)
+            if m is not None and batch_id <= m["batch_id"]:
+                return
+            snapshot_merge(
+                batch_df.sparkSession,
+                table_path,
+                _latest_per_user(batch_df),
+                key="user_id",
+                order_cols=["ts", "event_id"],
+            )
+            _commit_applied(base, batch_id, m["version"] + 1 if m else 1)
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # within-run replay guard (ADVICE r9): a retried micro-batch
-        # would otherwise commit a duplicate snapshot version (final
-        # state stays correct — the argmax apply is idempotent — but
-        # version history inflates). Marker commits AFTER the merge,
-        # so a crash mid-merge replays into at most one extra version.
-        m = _read_applied(base)
-        if m is not None and batch_id <= m["batch_id"]:
-            return
-        snapshot_merge(
-            batch_df.sparkSession,
-            table_path,
-            _latest_per_user(batch_df),
-            key="user_id",
-            order_cols=["ts", "event_id"],
-        )
-        _commit_applied(base, batch_id, m["version"] + 1 if m else 1)
-
-    try:
         _run_foreach_batch(stream, base, _apply, timeout_sec, "snapshot-CDC stream")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
     from ..sources.sinks import snapshot_read
 
     return snapshot_read(spark, table_path).select(*_COLS)
@@ -288,22 +290,20 @@ def run_streaming_mv_refresh(
     removed on return."""
     from ..operators.merge import agg_state, merge_agg_states
 
-    stream, base = _staged_event_stream(
-        spark, sf_dir, n_input_files, base=state_base
-    )
+    with _staged_stream(
+        spark, sf_dir, "events", _COLS, n_input_files, base=state_base
+    ) as (stream, base):
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            def compute(prev: DataFrame | None) -> DataFrame:
+                delta = agg_state(batch_df, "event_type", "value")
+                return (
+                    merge_agg_states(prev, delta, "event_type")
+                    if prev is not None
+                    else delta
+                )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        def compute(prev: DataFrame | None) -> DataFrame:
-            delta = agg_state(batch_df, "event_type", "value")
-            return (
-                merge_agg_states(prev, delta, "event_type")
-                if prev is not None
-                else delta
-            )
+            apply_versioned_batch(batch_df.sparkSession, base, "mv", batch_id, compute)
 
-        apply_versioned_batch(batch_df.sparkSession, base, "mv", batch_id, compute)
-
-    try:
         _run_foreach_batch(stream, base, _apply, timeout_sec, "streaming MV refresh")
         final = _final_version(spark, base, "mv", "streaming MV refresh")
         return final.select(
@@ -313,55 +313,6 @@ def run_streaming_mv_refresh(
             "vmin",
             "vmax",
         ).localCheckpoint(eager=True)
-    finally:
-        if state_base is None:
-            shutil.rmtree(base, ignore_errors=True)
-
-
-def _staged_document_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    n_input_files: int,
-    base: str | None = None,
-):
-    """documents-table twin of _staged_event_stream: stage (doc_id,
-    text) as ``n_input_files`` parquet files, stream one per trigger;
-    same restart-safe reuse rule when ``base`` is given."""
-    if base is None:
-        base = tempfile.mkdtemp(prefix=f"stream_stage_{uuid.uuid4().hex[:8]}_")
-    src = os.path.join(base, "src")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        load_table(spark, sf_dir, "documents").select("doc_id", "text").repartition(
-            n_input_files
-        ).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    return stream, base
-
-
-def _staged_orders_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    n_input_files: int,
-    base: str | None = None,
-):
-    """orders-table twin of _staged_event_stream: stage (o_orderkey,
-    o_totalprice) as ``n_input_files`` parquet files, stream one per
-    trigger; same restart-safe reuse rule when ``base`` is given."""
-    if base is None:
-        base = tempfile.mkdtemp(prefix=f"stream_stage_{uuid.uuid4().hex[:8]}_")
-    src = os.path.join(base, "src")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice"
-        ).repartition(n_input_files).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    return stream, base
 
 
 def run_streaming_hdr_refresh(
@@ -392,23 +343,21 @@ def run_streaming_hdr_refresh(
 
     if probes is None:
         probes = [(1, 100), (1, 4), (1, 2), (3, 4), (9, 10), (99, 100)]
-    stream, base = _staged_orders_stream(
-        spark, sf_dir, n_input_files, base=state_base
-    )
+    with _staged_stream(
+        spark, sf_dir, "orders", _ORDER_COLS, n_input_files, base=state_base
+    ) as (stream, base):
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            def compute(prev: DataFrame | None) -> DataFrame:
+                cents = batch_df.select(
+                    (F.col("o_totalprice").cast("decimal(14,2)") * 100)
+                    .cast("bigint")
+                    .alias("v")
+                )
+                delta = hdr_cells(cents, "v", mantissa_bits)
+                return merge_hdr_cells(prev, delta) if prev is not None else delta
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        def compute(prev: DataFrame | None) -> DataFrame:
-            cents = batch_df.select(
-                (F.col("o_totalprice").cast("decimal(14,2)") * 100)
-                .cast("bigint")
-                .alias("v")
-            )
-            delta = hdr_cells(cents, "v", mantissa_bits)
-            return merge_hdr_cells(prev, delta) if prev is not None else delta
+            apply_versioned_batch(batch_df.sparkSession, base, "hdr", batch_id, compute)
 
-        apply_versioned_batch(batch_df.sparkSession, base, "hdr", batch_id, compute)
-
-    try:
         _run_foreach_batch(stream, base, _apply, timeout_sec, "streaming HDR refresh")
         cells = _final_version(spark, base, "hdr", "streaming HDR refresh")
         w = Window.orderBy("blo").rowsBetween(Window.unboundedPreceding, 0)
@@ -439,32 +388,6 @@ def run_streaming_hdr_refresh(
             .orderBy("q")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if state_base is None:
-            shutil.rmtree(base, ignore_errors=True)
-
-
-def _staged_embedding_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    n_input_files: int,
-    base: str | None = None,
-):
-    """embeddings-table twin of _staged_event_stream: stage (vec_id,
-    label, embedding) as ``n_input_files`` parquet files, stream one
-    per trigger; same restart-safe reuse rule when ``base`` is given."""
-    if base is None:
-        base = tempfile.mkdtemp(prefix=f"stream_stage_{uuid.uuid4().hex[:8]}_")
-    src = os.path.join(base, "src")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", "embedding"
-        ).repartition(n_input_files).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    return stream, base
 
 
 def run_streaming_ivf_refresh(
@@ -515,38 +438,43 @@ def run_streaming_ivf_refresh(
     from ..functions.vectors import cosine
     from ..operators.similarity import euclidean_sq, ivf_assign_against
 
-    stream, base = _staged_embedding_stream(
-        spark, sf_dir, n_input_files, base=state_base
-    )
-    idx_path = os.path.join(base, "index")
-    cents_path = os.path.join(base, "centroids")
-    emb = load_table(spark, sf_dir, "embeddings")
-    if not os.path.exists(os.path.join(cents_path, "_SUCCESS")):
-        emb.filter(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("centroid_id"), "embedding"
-        ).write.mode("overwrite").parquet(cents_path)
-    crows = spark.read.parquet(cents_path).collect()  # model fetch: n_centroids rows
-    cents = F.array(
-        *[
-            F.struct(
-                F.lit(int(r.centroid_id)).alias("centroid_id"),
-                F.array(*[F.lit(float(x)) for x in r.embedding]).alias("c_emb"),
-            )
-            for r in sorted(crows, key=lambda r: r.centroid_id)
-        ]
-    )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            ivf_assign_against(batch_df, cents)
-            .withColumn("batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch", "centroid_id")
-            .parquet(idx_path)
+    with _staged_stream(
+        spark,
+        sf_dir,
+        "embeddings",
+        ["vec_id", "label", "embedding"],
+        n_input_files,
+        base=state_base,
+    ) as (stream, base):
+        idx_path = os.path.join(base, "index")
+        cents_path = os.path.join(base, "centroids")
+        emb = load_table(spark, sf_dir, "embeddings")
+        if not os.path.exists(os.path.join(cents_path, "_SUCCESS")):
+            emb.filter(F.col("vec_id") < n_centroids).select(
+                F.col("vec_id").alias("centroid_id"), "embedding"
+            ).write.mode("overwrite").parquet(cents_path)
+        # model fetch: n_centroids rows
+        crows = spark.read.parquet(cents_path).collect()
+        cents = F.array(
+            *[
+                F.struct(
+                    F.lit(int(r.centroid_id)).alias("centroid_id"),
+                    F.array(*[F.lit(float(x)) for x in r.embedding]).alias("c_emb"),
+                )
+                for r in sorted(crows, key=lambda r: r.centroid_id)
+            ]
         )
 
-    try:
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                ivf_assign_against(batch_df, cents)
+                .withColumn("batch", F.lit(int(batch_id)))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch", "centroid_id")
+                .parquet(idx_path)
+            )
+
         _run_foreach_batch(stream, base, _apply, timeout_sec, "streaming IVF refresh")
         # answer the vec-0 probe purely from the persisted streamed
         # index (the ivf_index_roundtrip read path: probe ids arrive
@@ -595,9 +523,6 @@ def run_streaming_ivf_refresh(
             .limit(10)
             .localCheckpoint(eager=True)
         )
-    finally:
-        if state_base is None:
-            shutil.rmtree(base, ignore_errors=True)
 
 
 def run_streaming_cms_refresh(
@@ -629,27 +554,22 @@ def run_streaming_cms_refresh(
     from ..functions.text import tokens as _tokens
     from ..operators.sketches import cms_cells, cms_point_query, merge_cms_cells
 
-    stream, base = _staged_document_stream(
-        spark, sf_dir, n_input_files, base=state_base
-    )
+    with _staged_stream(
+        spark, sf_dir, "documents", ["doc_id", "text"], n_input_files, base=state_base
+    ) as (stream, base):
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            def compute(prev: DataFrame | None) -> DataFrame:
+                items = batch_df.select(F.explode(_tokens(F.col("text"))).alias("item"))
+                delta = cms_cells(items, "item", depth=depth, width=width)
+                return merge_cms_cells(prev, delta) if prev is not None else delta
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        def compute(prev: DataFrame | None) -> DataFrame:
-            items = batch_df.select(F.explode(_tokens(F.col("text"))).alias("item"))
-            delta = cms_cells(items, "item", depth=depth, width=width)
-            return merge_cms_cells(prev, delta) if prev is not None else delta
+            apply_versioned_batch(batch_df.sparkSession, base, "cms", batch_id, compute)
 
-        apply_versioned_batch(batch_df.sparkSession, base, "cms", batch_id, compute)
-
-    try:
         _run_foreach_batch(stream, base, _apply, timeout_sec, "streaming CMS refresh")
         cells = _final_version(spark, base, "cms", "streaming CMS refresh")
         return cms_point_query(
             cells, list(terms), depth=depth, width=width
         ).localCheckpoint(eager=True)
-    finally:
-        if state_base is None:
-            shutil.rmtree(base, ignore_errors=True)
 
 
 def run_streaming_kmv_refresh(
@@ -677,25 +597,23 @@ def run_streaming_kmv_refresh(
     after write); ``state_base`` as in run_streaming_mv_refresh."""
     from ..operators.sketches import kmv_bottomk
 
-    stream, base = _staged_orders_stream(
-        spark, sf_dir, n_input_files, base=state_base
-    )
+    with _staged_stream(
+        spark, sf_dir, "orders", _ORDER_COLS, n_input_files, base=state_base
+    ) as (stream, base):
+        def _apply(batch_df: DataFrame, batch_id: int) -> None:
+            def compute(prev: DataFrame | None) -> DataFrame:
+                delta = kmv_bottomk(batch_df, "o_orderkey", k)
+                if prev is None:
+                    return delta
+                return (
+                    prev.unionByName(delta)
+                    .distinct()
+                    .orderBy("h", "key")
+                    .limit(k)
+                )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        def compute(prev: DataFrame | None) -> DataFrame:
-            delta = kmv_bottomk(batch_df, "o_orderkey", k)
-            if prev is None:
-                return delta
-            return (
-                prev.unionByName(delta)
-                .distinct()
-                .orderBy("h", "key")
-                .limit(k)
-            )
+            apply_versioned_batch(batch_df.sparkSession, base, "kmv", batch_id, compute)
 
-        apply_versioned_batch(batch_df.sparkSession, base, "kmv", batch_id, compute)
-
-    try:
         _run_foreach_batch(stream, base, _apply, timeout_sec, "streaming KMV refresh")
         sk = _final_version(spark, base, "kmv", "streaming KMV refresh")
         s = sk.agg(
@@ -731,6 +649,3 @@ def run_streaming_kmv_refresh(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        if state_base is None:
-            shutil.rmtree(base, ignore_errors=True)

@@ -810,3 +810,55 @@ def test_streaming_ivf_restart_is_idempotent(spark, sf0001, tmp_path):
     assert rows1 == rows2
     key = lambda r: tuple(str(v) for v in r)
     assert sorted(map(key, first.collect())) == sorted(map(key, second.collect()))
+
+
+@pytest.mark.parametrize("timed_out", [False, True], ids=["finished", "timeout"])
+@pytest.mark.parametrize(
+    "query",
+    [
+        "stateful_user_totals",
+        "streaming_hourly",
+        "streaming_dedup_events",
+        "streaming_upsert_latest",
+    ],
+)
+def test_streaming_runner_leaves_nothing_behind(
+    spark, sf0001, tmp_path, monkeypatch, query, timed_out
+):
+    """Every exit path of a runner releases what it acquired: no active
+    stream, no memory-sink temp view, no checkpoint or staging dir. A
+    forced timeout must raise TimeoutError (never hand back a partial
+    sink), and a finished run's batch result must stay readable after
+    its view is gone."""
+    import tempfile
+
+    from etl_challenge_localiza_spark.streaming.events_stream import (
+        run_streaming_dedup,
+    )
+    from etl_challenge_localiza_spark.streaming.stateful import (
+        run_stateful_user_totals,
+    )
+    from etl_challenge_localiza_spark.streaming.upsert import (
+        run_streaming_upsert_latest,
+    )
+
+    run = {
+        "stateful_user_totals": run_stateful_user_totals,
+        "streaming_hourly": run_streaming_hourly,
+        "streaming_dedup_events": run_streaming_dedup,
+        "streaming_upsert_latest": run_streaming_upsert_latest,
+    }[query]
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def held():
+        views = sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+        return views, sorted(q.id for q in spark.streams.active)
+
+    before = held()
+    if timed_out:
+        with pytest.raises(TimeoutError):
+            run(spark, sf0001, timeout_sec=0.001)
+    else:
+        assert run(spark, sf0001).count() > 0
+    assert held() == before
+    assert os.listdir(tmp_path) == []

@@ -6,7 +6,9 @@ round's close-out claim comes from, in the order the claims are made.
    gate scale, every registry query;
 3. determinism audit at sf0.1 — two same-session runs of every query,
    value-hash compared;
-4. bench.py — the headline timing line.
+4. the declared benchmark (BENCHMARK.json): one untraced
+   ``perfbench/run.py`` run of each workload, ``pipeline_csv`` and
+   ``headliners_cold`` (``--seed 1 --seconds 16 --trace 0``).
 
 Any step failing stops the chain (the later claims would be
 meaningless). Total ~25 min on the 32-core box.
@@ -44,7 +46,14 @@ def main() -> int:
             "determinism sf0.1",
             [py, "-m", "tools.determinism_audit", "--sf", "/root/testdata/sf0.1"],
         )
-    _run("bench", [py, "bench.py"])
+    for workload in ("pipeline_csv", "headliners_cold"):
+        _run(
+            f"perfbench {workload}",
+            [
+                py, "perfbench/run.py", "--workload", workload,
+                "--seed", "1", "--seconds", "16", "--trace", "0",
+            ],
+        )
     print("PREFLIGHT GREEN", flush=True)
     return 0
 
