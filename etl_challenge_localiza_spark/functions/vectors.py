@@ -59,18 +59,30 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 
 def embedding_dim(df, col: str = "embedding") -> int:
     """Plan-build-time dimension probe: one 1-row aggregate over the
-    array column (null-safe — max(size) ignores null rows; uniform
-    width is the documented embedding-table invariant). Memoized on
-    the DataFrame object — sources.readers.load_table caches frames
-    per (session, path), so each table pays the probe job once per
+    array column. NULL embeddings are ignored. Raises ``ValueError``
+    when no non-NULL embedding has a positive width, or when the
+    non-NULL widths differ — uniform width is the embedding-table
+    invariant every fixed-width fold indexes by. Memoized on the
+    DataFrame object — sources.readers.load_table caches frames per
+    (session, path), so each table pays the probe job once per
     session, not once per query dispatch."""
     memo = getattr(df, "_sg_embedding_dim", None)
     if isinstance(memo, dict) and col in memo:
         return memo[col]
-    row = df.select(F.max(F.size(F.col(col))).alias("d")).first()
+    # size(NULL) is -1 with ANSI off (NULL with it on): max ignores
+    # NULL rows either way, min needs them masked out
+    size = F.size(F.col(col))
+    row = df.select(
+        F.max(size).alias("d"),
+        F.min(F.when(F.col(col).isNotNull(), size)).alias("lo"),
+    ).first()
     d = row["d"] if row is not None else None
     if d is None or d <= 0:
         raise ValueError(f"cannot infer embedding dim of column {col!r}")
+    if row["lo"] != d:
+        raise ValueError(
+            f"embedding column {col!r} has mixed widths {row['lo']}..{d}"
+        )
     try:
         if not isinstance(memo, dict):
             memo = {}
@@ -81,16 +93,13 @@ def embedding_dim(df, col: str = "embedding") -> int:
     return int(d)
 
 
-# String operands take the SQL-text fast path (optimization r14,
-# second segment): building a 64-d unrolled fold through the Column
-# API costs ~6 py4j round trips per element (~2.0 s of pure
-# plan-BUILD time per cosine at d=64, measured), while one F.expr
-# over the equivalent SQL text builds in ~4 ms and parses JVM-side
-# into the IDENTICAL expression tree (same left-fold order, same
-# 0.0D seed, same casts — collect()-equal, asserted by
-# tests/test_vectors_fixed.py). Column operands keep the API loop
-# (no reliable SQL text for an arbitrary Column); every call site in
-# this repo passes SQL text.
+# Operands are SQL text (optimization r14, second segment): building a
+# 64-d unrolled fold through the Column API costs ~6 py4j round trips
+# per element (~2.0 s of pure plan-BUILD time per cosine at d=64,
+# measured), while one F.expr over the equivalent SQL text builds in
+# ~4 ms and parses JVM-side into one flat expression tree with the
+# same left-fold order, 0.0D seed and casts as the higher-order folds
+# above (collect()-equal, asserted by tests/test_vectors_fixed.py).
 
 
 def dot_fixed_sql(a: str, b: str, d: int) -> str:
@@ -117,32 +126,19 @@ def cosine_fixed_sql(a: str, b: str, d: int) -> str:
     )
 
 
-def dot_fixed(a: Column | str, b: Column | str, d: int) -> Column:
+def dot_fixed(a: str, b: str, d: int) -> Column:
     """Σ aᵢ·bᵢ unrolled over a known width ``d`` — identical values to
-    :func:`dot` (same element-order left fold, 0.0 seed), codegen-able."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_fixed_sql(a, b, d))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    acc: Column = F.lit(0.0)
-    for i in range(d):
-        acc = acc + _d(a[i]) * _d(b[i])
-    return acc
+    :func:`dot` (same element-order left fold, 0.0 seed), codegen-able.
+    ``a``/``b`` are SQL expressions of array type."""
+    return F.expr(dot_fixed_sql(a, b, d))
 
 
-def norm_sq_fixed(a: Column | str, d: int) -> Column:
-    if isinstance(a, str):
-        return F.expr(norm_sq_fixed_sql(a, d))
-    acc: Column = F.lit(0.0)
-    for i in range(d):
-        acc = acc + _d(a[i]) * _d(a[i])
-    return acc
+def norm_sq_fixed(a: str, d: int) -> Column:
+    return F.expr(norm_sq_fixed_sql(a, d))
 
 
-def cosine_fixed(a: Column | str, b: Column | str, d: int) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(cosine_fixed_sql(a, b, d))
-    return dot_fixed(a, b, d) / F.sqrt(norm_sq_fixed(a, d) * norm_sq_fixed(b, d))
+def cosine_fixed(a: str, b: str, d: int) -> Column:
+    return F.expr(cosine_fixed_sql(a, b, d))
 
 
 def make_cosine_pandas_udf():

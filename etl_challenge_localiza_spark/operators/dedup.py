@@ -12,13 +12,17 @@ Scale design:
   self-join is quadratic in docs-per-shingle, so real pipelines always
   block (or use LSH). Within-block join keys are (lang, source,
   shingle), which also co-partitions the pair aggregation.
-- MinHash-LSH: signatures via ONE aggregate pass (k min-aggs over
-  xxhash64(shingle, seed)), banded into buckets; candidate pairs only
-  ever meet inside a (band, bucket) shuffle partition — the textbook
-  sub-quadratic path. Verification joins shingle sets only for
-  candidates.
-- SimHash: 64 conditional sums in one aggregate pass, banded by 16-bit
-  chunks for candidate generation, exact Hamming verify via xor+bit_count.
+- MinHash-LSH: signatures via ONE aggregate pass (k min-aggs over a
+  universal-hash family of one md5-derived base hash per shingle),
+  banded into md5 buckets; candidate pairs only ever meet inside a
+  (band, bucket) shuffle partition — the textbook sub-quadratic path.
+  Verification joins shingle sets only for candidates.
+- SimHash: 64 conditional sums (bits of md5(token)) in one aggregate
+  pass, banded by 16-bit chunks for candidate generation, exact
+  Hamming verify via xor+bit_count.
+
+Every hash is md5-derived, so a DuckDB oracle replays each stage
+bit-for-bit (tests/oracle_harness.py value-checks both LSH operators).
 """
 
 from __future__ import annotations
@@ -201,8 +205,7 @@ def portable_hash60(c, salt: str = ""):
     md5(salt || value). DuckDB mirrors it as
     ``cast(concat('0x', substr(md5(concat(salt, v)), 1, 15)) as bigint)``
     — the same trick the deterministic_split / weighted_sample_docs
-    oracles use. Slower than xxhash64 (md5 + string slice + base
-    conversion), so it is the VERIFICATION mode, not the default."""
+    oracles use."""
     base = F.concat(F.lit(salt), c) if salt else c
     return F.conv(F.substring(F.md5(base), 1, 15), 16, 10).cast("bigint")
 
@@ -221,18 +224,15 @@ def minhash_params(i: int) -> tuple[int, int]:
     return 2654435761 + 2 * i, 40503 * (i + 1)
 
 
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 16, hash_mode: str = "xxhash64"
-) -> DataFrame:
+def minhash_signatures(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
     """MinHash signatures in ONE aggregate pass: num_hashes min-aggs
     over a seeded hash of each shingle (no per-hash shuffle).
 
-    hash_mode="xxhash64" (default): fastest, JVM-native, engine-
-    specific. hash_mode="portable": ONE md5-derived 60-bit base hash
-    per shingle (see :func:`portable_hash60`), then the classic
-    universal-hash family h_i(x) = (a_i·x + b_i) mod (2^61−1) — one
-    md5 instead of num_hashes of them, and a SQL oracle mirrors every
-    h_i bit-for-bit via hugeint.
+    ONE md5-derived 60-bit base hash per shingle (see
+    :func:`portable_hash60`), then the classic universal-hash family
+    h_i(x) = (a_i·x + b_i) mod (2^61−1) — one md5 instead of
+    num_hashes of them, and a SQL oracle mirrors every h_i
+    bit-for-bit via hugeint.
 
     The modmul runs in EXACT int64 Mersenne-prime arithmetic, not
     decimal(38,0) (guide §1.2 step 2 / optimization r14): BigDecimal
@@ -247,25 +247,22 @@ def minhash_signatures(
     int64 never overflows, and one final ``% M`` of the < 2^63 sum
     gives exactly (a·x + b) mod M.
     """
-    if hash_mode == "portable":
-        base = portable_hash60(F.col("shingle"))
-        mask30 = F.lit((1 << 30) - 1)
-        mask31 = F.lit((1 << 31) - 1)
-        x1 = F.shiftright(base, 31)
-        x0 = base.bitwiseAND(mask31)
-        hashes = []
-        for i in range(num_hashes):
-            a, b = minhash_params(i)
-            y = x1 * F.lit(a)
-            t = (
-                F.shiftright(y, 30)
-                + F.shiftleft(y.bitwiseAND(mask30), 31)
-                + x0 * F.lit(a)
-                + F.lit(b)
-            )
-            hashes.append(t % F.lit(MINHASH_MOD))
-    else:
-        hashes = [F.xxhash64(F.col("shingle"), F.lit(i)) for i in range(num_hashes)]
+    base = portable_hash60(F.col("shingle"))
+    mask30 = F.lit((1 << 30) - 1)
+    mask31 = F.lit((1 << 31) - 1)
+    x1 = F.shiftright(base, 31)
+    x0 = base.bitwiseAND(mask31)
+    hashes = []
+    for i in range(num_hashes):
+        a, b = minhash_params(i)
+        y = x1 * F.lit(a)
+        t = (
+            F.shiftright(y, 30)
+            + F.shiftleft(y.bitwiseAND(mask30), 31)
+            + x0 * F.lit(a)
+            + F.lit(b)
+        )
+        hashes.append(t % F.lit(MINHASH_MOD))
     return sh.groupBy("doc_id").agg(
         *[F.min(h).alias(f"mh_{i}") for i, h in enumerate(hashes)]
     )
@@ -277,7 +274,6 @@ def minhash_near_dup_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.2,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs (UNBLOCKED — the scale
     path when no natural blocking key exists).
@@ -287,34 +283,24 @@ def minhash_near_dup_pairs(
     exact shingle-set Jaccard. Deterministic (hashes are seeded).
     Returns (doc_id_a, doc_id_b, jaccard).
 
-    hash_mode="xxhash64" (default): pre-hashed long shingles + seeded
-    xxhash64 signatures + F.hash band buckets — all JVM-native, the
-    fast path. hash_mode="portable": string shingles + md5-derived
-    signatures + md5 band buckets, every stage mirrorable in ANSI SQL
-    so a DuckDB oracle value-checks the whole LSH pipeline.
+    String shingles + md5-derived signatures + md5 band buckets: every
+    stage is mirrorable in ANSI SQL, so a DuckDB oracle value-checks
+    the whole LSH pipeline.
     """
     rows = num_hashes // bands
     # signatures don't need distinct shingles (min over a multiset ==
     # min over its set), so they aggregate straight off the explode —
     # partial min-aggs run map-side and the distinct-shingle exchange
-    # is skipped entirely on this path. In the default mode shingles
-    # are pre-hashed longs (functions.text.shingle_hashes):
-    # identity-only use throughout.
-    shingle_expr = (
-        shingles(tokens("text"), n)
-        if hash_mode == "portable"
-        else shingle_hashes(tokens("text"), n)
-    )
+    # is skipped entirely on this path.
+    shingle_expr = shingles(tokens("text"), n)
     sh_raw = spread_small_scan(docs).select(
         "doc_id", F.explode(shingle_expr).alias("shingle")
     )
-    sig = minhash_signatures(sh_raw, num_hashes, hash_mode=hash_mode)
+    sig = minhash_signatures(sh_raw, num_hashes)
 
     def band_bucket(bi: int):
         cols = [F.col(f"mh_{bi * rows + r}") for r in range(rows)]
-        if hash_mode == "portable":
-            return F.md5(F.concat_ws(",", *[c.cast("string") for c in cols]))
-        return F.hash(*cols).cast("string")
+        return F.md5(F.concat_ws(",", *[c.cast("string") for c in cols]))
 
     band_structs = F.array(
         *[
@@ -417,17 +403,16 @@ def minhash_near_dup_pairs(
     )
 
 
-def simhash_signatures(docs: DataFrame, hash_mode: str = "xxhash64") -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """64-bit SimHash per document in one aggregate pass.
 
     For each bit b: sign of Σ_tokens (±1 by bit b of hash(token)).
     The signature is assembled bit-by-bit into a long. All JVM-side.
 
-    hash_mode="xxhash64" (default): bit b of xxhash64(token).
-    hash_mode="portable": bit b = bit (b mod 4) of hex digit (b div 4)
-    of md5(token) — the first 16 hex chars give 64 independent bits
-    that ANSI SQL reproduces via substr(md5(x)) + hex-digit decode, so
-    a DuckDB oracle can mirror the signature exactly.
+    Bit b = bit (b mod 4) of hex digit (b div 4) of md5(token) — the
+    first 16 hex chars give 64 independent bits that ANSI SQL
+    reproduces via substr(md5(x)) + hex-digit decode, so a DuckDB
+    oracle can mirror the signature exactly.
     """
     tok = spread_small_scan(docs).select("doc_id", F.explode(tokens("text")).alias("token"))
     # The 64 bit-sum aggregates and the 64-term signature assembly are
@@ -436,16 +421,12 @@ def simhash_signatures(docs: DataFrame, hash_mode: str = "xxhash64") -> DataFram
     # paid ~700 py4j round trips per dispatch (~1.9 s of fn-side
     # plan-build time at sf0.1); F.expr parses JVM-side into the
     # identical expression trees, values unchanged.
-    if hash_mode == "portable":
-        def bit_sql(b: int) -> str:
-            # bit (b mod 4) of hex digit (b div 4) of md5(token)
-            return (
-                f"(shiftright(cast(conv(substring(md5(token), {b // 4 + 1}, 1), "
-                f"16, 10) as int), {b % 4}) & 1)"
-            )
-    else:
-        def bit_sql(b: int) -> str:
-            return f"(shiftright(xxhash64(token), {b}) & 1)"
+    def bit_sql(b: int) -> str:
+        # bit (b mod 4) of hex digit (b div 4) of md5(token)
+        return (
+            f"(shiftright(cast(conv(substring(md5(token), {b // 4 + 1}, 1), "
+            f"16, 10) as int), {b % 4}) & 1)"
+        )
 
     bit_sums = tok.groupBy("doc_id").agg(
         *[
@@ -464,14 +445,12 @@ def simhash_signatures(docs: DataFrame, hash_mode: str = "xxhash64") -> DataFram
     return bit_sums.select("doc_id", sig.alias("simhash"))
 
 
-def simhash_near_dup_pairs(
-    docs: DataFrame, max_hamming: int = 3, hash_mode: str = "xxhash64"
-) -> DataFrame:
+def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup candidates banded by 16-bit chunks (a pair
     within Hamming distance ≤ 3 of 64 bits must share at least one of 4
     chunks), verified with exact xor+bit_count Hamming distance.
     Returns (doc_id_a, doc_id_b, hamming)."""
-    sig = simhash_signatures(docs, hash_mode=hash_mode)
+    sig = simhash_signatures(docs)
     chunks = F.array(
         *[
             F.struct(

@@ -6,10 +6,10 @@
 - :func:`cosine_nn_within_label` — exact nearest neighbour per vector,
   restricted by a blocking column to stay sub-quadratic.
 - :func:`brp_lsh_ann_pairs` — approximate pair search via
-  pyspark.ml BucketedRandomProjectionLSH (random hyperplane buckets;
-  embeddings here are unit-norm so euclidean distance is a monotone
-  proxy for cosine). The 100-TB path: candidates meet only inside
-  hash buckets.
+  bucketed random projections (md5-derived unit directions, so a
+  DuckDB oracle replays every bucket; embeddings here are unit-norm
+  so euclidean distance is a monotone proxy for cosine). The 100-TB
+  path: candidates meet only inside hash buckets.
 """
 
 from __future__ import annotations
@@ -281,11 +281,11 @@ def ivf_assign_against(df: DataFrame, cents: F.Column) -> DataFrame:
 
 
 def brp_lsh_projections(num_hash_tables: int, d: int) -> list[tuple[int, list[float]]]:
-    """Deterministic md5-derived projection directions for the
-    portable BRP-LSH mode: r[h][i] = (md5_60bit("h:i") / 2^60)·2 − 1,
+    """Deterministic md5-derived projection directions for
+    :func:`brp_lsh_ann_pairs`: r[h][i] = (md5_60bit("h:i") / 2^60)·2 − 1,
     uniform in [−1, 1). Both engines recompute the identical doubles —
     Python hashlib here, DuckDB md5() in the oracle — so the whole
-    blocking layer is engine-portable (the minhash portable-mode
+    blocking layer is engine-portable (the md5-derived minhash
     principle applied to random projections)."""
     import hashlib
     import math
@@ -299,8 +299,8 @@ def brp_lsh_projections(num_hash_tables: int, d: int) -> list[tuple[int, list[fl
         # normalize to UNIT norm — MLlib's BRP-LSH draws randUnitVectors,
         # and bucket granularity scales with ||r||: raw uniform [-1,1)
         # directions (||r|| ~ sqrt(d/3)) measured recall 0.873 and a
-        # sqrt(3)-scaled variant 0.677 vs the engine mode's >= 0.9; the
-        # unit-norm match restores parity. Same left-fold + sqrt + divide
+        # sqrt(3)-scaled variant 0.677 vs MLlib's >= 0.9; the unit-norm
+        # match restores parity. Same left-fold + sqrt + divide
         # op order as the SQL oracle, so the doubles agree bit-for-bit.
         nrm = math.sqrt(sum(x * x for x in rv))
         rows.append((h, [x / nrm for x in rv]))
@@ -312,162 +312,125 @@ def brp_lsh_ann_pairs(
     bucket_length: float = 1.0,
     num_hash_tables: int = 3,
     max_distance: float = 1.2,
-    seed: int = 42,
-    hash_mode: str = "engine",
 ) -> DataFrame:
     """Approximate near-neighbour PAIRS via random-projection LSH.
 
     Returns (vec_id_a, vec_id_b, euclidean_dist) with a < b and
-    distance < max_distance. Deterministic for a fixed seed. This is
-    the sub-quadratic ANN path; the brute-force functions above are its
-    accuracy oracle.
+    distance < max_distance. Deterministic. This is the sub-quadratic
+    ANN path; the brute-force functions above are its accuracy oracle.
 
-    hash_mode="engine" (default): Spark ML's BucketedRandomProjectionLSH
-    — JVM-native, seeded-RNG gaussian hyperplanes, engine-specific.
-    hash_mode="portable" (FULL-ORACLE since r12, r11 directive #2):
-    md5-derived uniform projection directions (brp_lsh_projections)
-    with the same floor(v·r / bucketLength) bucketing, candidate join
-    on equal (table, bucket), and the exact euclidean verify — every
-    stage SQL-replayable, because the only randomness is a hash both
-    engines compute. Plan shape is identical to the engine mode's
-    (explode ×H, equi-join blocking, never all-pairs)."""
-    if hash_mode == "portable":
-        head = emb.select("embedding").head(1)
-        if not head:
-            return emb.sparkSession.createDataFrame(
-                [], "vec_id_a long, vec_id_b long, euclidean_dist double"
-            )
-        d = len(head[0][0])
-        pv = values_table(
-            emb.sparkSession,
-            brp_lsh_projections(num_hash_tables, d),
-            "h int, rv array<double>",
-        )
-        pscal = pv.agg(
-            F.sort_array(F.collect_list(F.struct("h", "rv"))).alias("parr")
-        )
-        # optimization r14 (guide §8 / §2.3): candidates are decided by
-        # 16-byte (h, bucket, vec_id) keys, then embeddings are joined
-        # back for the verify ONLY on the distinct candidate pairs. The
-        # previous shape self-joined the hashed stream WITH the full
-        # 64-double array on both sides, so every raw bucket collision
-        # (×H tables) shuffled two embedding payloads and the pair
-        # dedup exchanged them again — the §8 antipattern (heavy rows
-        # moving to make a decision only keys participate in). The
-        # candidate join stays a JOIN (not minhash's collect_set pair
-        # expansion: a degenerate bucketing — observed at sf0.1, 2
-        # buckets/table of ~1000 members — would materialize million-
-        # struct arrays per bucket row, measured 22 s; a join streams
-        # the same pairs and AQE skew-join can split oversized bucket
-        # partitions). The dot / distance folds are fixed-width
-        # unrolled (codegen) instead of interpreted HOFs —
-        # bit-identical values (same element-order fold, same 0.0
-        # seed). Measured 12.6 s → 2.9 s at sf0.1.
-        from ..functions.vectors import dot_fixed_sql
+    md5-derived unit projection directions (brp_lsh_projections), the
+    floor(v·r / bucketLength) bucketing, candidate join on equal
+    (table, bucket), and the exact euclidean verify — every stage is
+    SQL-replayable, because the only randomness is a hash both engines
+    compute (full oracle since r12). Plan shape: explode ×H, equi-join
+    blocking, never all-pairs.
 
-        ve = emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-        # one SQL-text expression instead of a Column-API lambda
-        # (optimization r14, second segment): the unrolled d-term dot
-        # built per-element through py4j cost ~2 s of plan-BUILD time
-        # per dispatch; the equivalent SQL text parses JVM-side into
-        # the identical tree (same fold order — collect()-equal).
-        bl = f"cast('{float(bucket_length)!r}' as double)"
-        hashed = (
-            ve.crossJoin(F.broadcast(pscal))
-            .select(
-                "vec_id",
-                F.explode(
-                    F.expr(
-                        "transform(parr, s -> struct(s.h as h, "
-                        f"cast(floor(({dot_fixed_sql('e', 's.rv', d)}) / {bl}) "
-                        "as bigint) as bucket))"
-                    )
-                ).alias("hb"),
-            )
-            .select(
-                "vec_id",
-                F.col("hb.h").alias("h"),
-                F.col("hb.bucket").alias("bucket"),
-            )
-        )
-        # Pin the candidate-join width (the semdedup pinning rationale):
-        # the hashed stream is a few KB, so AQE's byte-based coalescing
-        # ran the bucket self-join — whose OUTPUT is the ~per-bucket-
-        # quadratic candidate stream — on ONE post-shuffle partition
-        # (measured: a single task emitting the full match volume at
-        # sf0.1). An explicit-width repartition on the join key is
-        # exempt from coalescing; both aliases share the one exchange.
-        hashed = hashed.repartition(shuffle_width(emb.sparkSession), "h", "bucket")
-        cand = (
-            hashed.alias("x")
-            .join(
-                hashed.alias("y"),
-                (F.col("x.h") == F.col("y.h"))
-                & (F.col("x.bucket") == F.col("y.bucket"))
-                & (F.col("x.vec_id") < F.col("y.vec_id")),
-            )
-            .select(
-                F.col("x.vec_id").alias("vec_id_a"),
-                F.col("y.vec_id").alias("vec_id_b"),
-            )
-            .dropDuplicates(["vec_id_a", "vec_id_b"])
-        )
-        ea = ve.select(F.col("vec_id").alias("vec_id_a"), F.col("e").alias("ea"))
-        eb = ve.select(F.col("vec_id").alias("vec_id_b"), F.col("e").alias("eb"))
-        # same SQL-text build as `hashed` above (arrays are already
-        # double, so no per-element cast — identical fold to the old
-        # Column-API loop)
-        dist_sq = F.expr(
-            "0.0D + "
-            + " + ".join(
-                f"(ea[{i}] - eb[{i}]) * (ea[{i}] - eb[{i}])" for i in range(d)
-            )
-            if d
-            else "0.0D"
-        )
-        return (
-            cand.join(ea, "vec_id_a")
-            .join(eb, "vec_id_b")
-            .withColumn("__dist", F.sqrt(dist_sq))
-            .filter(F.col("__dist") < F.lit(float(max_distance)))
-            .select(
-                "vec_id_a",
-                "vec_id_b",
-                F.round(F.col("__dist"), 6).alias("euclidean_dist"),
-            )
-        )
+    Rows with a NULL embedding never form a pair; an input with no
+    non-NULL embedding returns the empty pair frame, and mixed
+    embedding widths raise ``ValueError`` (see
+    :func:`functions.vectors.embedding_dim`)."""
+    from ..functions.vectors import dot_fixed_sql, embedding_dim
 
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    vecs = emb.select(
-        "vec_id", array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
-    )
-    if not vecs.head(1):
-        # Spark ML's LSH fit infers the vector dim from the first row
-        # and dies on an empty frame with an opaque NoSuchElementException;
-        # return the empty pair frame instead (one first-row probe is
-        # marginal next to the fit scan that follows on the live path)
+    if not emb.filter(F.col("embedding").isNotNull()).head(1):
         return emb.sparkSession.createDataFrame(
             [], "vec_id_a long, vec_id_b long, euclidean_dist double"
         )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
+    d = embedding_dim(emb)
+    pv = values_table(
+        emb.sparkSession,
+        brp_lsh_projections(num_hash_tables, d),
+        "h int, rv array<double>",
     )
-    model = lsh.fit(vecs)
-    joined = model.approxSimilarityJoin(vecs, vecs, max_distance, distCol="euclidean_dist")
-    return (
-        joined.filter(F.col("datasetA.vec_id") < F.col("datasetB.vec_id"))
+    pscal = pv.agg(
+        F.sort_array(F.collect_list(F.struct("h", "rv"))).alias("parr")
+    )
+    # optimization r14 (guide §8 / §2.3): candidates are decided by
+    # 16-byte (h, bucket, vec_id) keys, then embeddings are joined
+    # back for the verify ONLY on the distinct candidate pairs. The
+    # previous shape self-joined the hashed stream WITH the full
+    # 64-double array on both sides, so every raw bucket collision
+    # (×H tables) shuffled two embedding payloads and the pair
+    # dedup exchanged them again — the §8 antipattern (heavy rows
+    # moving to make a decision only keys participate in). The
+    # candidate join stays a JOIN (not minhash's collect_set pair
+    # expansion: a degenerate bucketing — observed at sf0.1, 2
+    # buckets/table of ~1000 members — would materialize million-
+    # struct arrays per bucket row, measured 22 s; a join streams
+    # the same pairs and AQE skew-join can split oversized bucket
+    # partitions). The dot / distance folds are fixed-width
+    # unrolled (codegen) instead of interpreted HOFs —
+    # bit-identical values (same element-order fold, same 0.0
+    # seed). Measured 12.6 s → 2.9 s at sf0.1.
+    ve = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+    # one SQL-text expression instead of a Column-API lambda
+    # (optimization r14, second segment): the unrolled d-term dot
+    # built per-element through py4j cost ~2 s of plan-BUILD time
+    # per dispatch; the equivalent SQL text parses JVM-side into
+    # the identical tree (same fold order — collect()-equal).
+    bl = f"cast('{float(bucket_length)!r}' as double)"
+    hashed = (
+        ve.crossJoin(F.broadcast(pscal))
         .select(
-            F.col("datasetA.vec_id").alias("vec_id_a"),
-            F.col("datasetB.vec_id").alias("vec_id_b"),
-            F.round(F.col("euclidean_dist"), 6).alias("euclidean_dist"),
+            "vec_id",
+            F.explode(
+                F.expr(
+                    "transform(parr, s -> struct(s.h as h, "
+                    f"cast(floor(({dot_fixed_sql('e', 's.rv', d)}) / {bl}) "
+                    "as bigint) as bucket))"
+                )
+            ).alias("hb"),
+        )
+        .select(
+            "vec_id",
+            F.col("hb.h").alias("h"),
+            F.col("hb.bucket").alias("bucket"),
+        )
+    )
+    # Pin the candidate-join width (the semdedup pinning rationale):
+    # the hashed stream is a few KB, so AQE's byte-based coalescing
+    # ran the bucket self-join — whose OUTPUT is the ~per-bucket-
+    # quadratic candidate stream — on ONE post-shuffle partition
+    # (measured: a single task emitting the full match volume at
+    # sf0.1). An explicit-width repartition on the join key is
+    # exempt from coalescing; both aliases share the one exchange.
+    hashed = hashed.repartition(shuffle_width(emb.sparkSession), "h", "bucket")
+    cand = (
+        hashed.alias("x")
+        .join(
+            hashed.alias("y"),
+            (F.col("x.h") == F.col("y.h"))
+            & (F.col("x.bucket") == F.col("y.bucket"))
+            & (F.col("x.vec_id") < F.col("y.vec_id")),
+        )
+        .select(
+            F.col("x.vec_id").alias("vec_id_a"),
+            F.col("y.vec_id").alias("vec_id_b"),
+        )
+        .dropDuplicates(["vec_id_a", "vec_id_b"])
+    )
+    ea = ve.select(F.col("vec_id").alias("vec_id_a"), F.col("e").alias("ea"))
+    eb = ve.select(F.col("vec_id").alias("vec_id_b"), F.col("e").alias("eb"))
+    # same SQL-text build as `hashed` above (arrays are already
+    # double, so no per-element cast — identical fold to the old
+    # Column-API loop)
+    dist_sq = F.expr(
+        "0.0D + "
+        + " + ".join(
+            f"(ea[{i}] - eb[{i}]) * (ea[{i}] - eb[{i}])" for i in range(d)
+        )
+    )
+    return (
+        cand.join(ea, "vec_id_a")
+        .join(eb, "vec_id_b")
+        .withColumn("__dist", F.sqrt(dist_sq))
+        .filter(F.col("__dist") < F.lit(float(max_distance)))
+        .select(
+            "vec_id_a",
+            "vec_id_b",
+            F.round(F.col("__dist"), 6).alias("euclidean_dist"),
         )
     )
 
@@ -638,7 +601,8 @@ def semdedup_drop(
     drop the higher vec_id of each pair.
 
     Returns (centroid_id, n_kept, n_dropped) per cluster, every
-    cluster present.
+    cluster present. Rows with a NULL embedding are filtered out on
+    entry: they are neither kept nor dropped.
 
     Scale shape: the only quadratic step is blocked by the trained
     clusters (at 100 TB, k grows with N — SemDeDup uses k ≈ N/100 so
@@ -652,6 +616,7 @@ def semdedup_drop(
     from ..sources.readers import spread_small_scan
 
     spark = emb.sparkSession
+    emb = emb.filter(F.col("embedding").isNotNull())
     cents, _ = kmeans_fit(emb, k, max_sweeps)
     # spread before the assignment projection (optimization r14,
     # second segment): the argmin over k centroids is an interpreted
@@ -730,8 +695,6 @@ def semdedup_drop_pruned(
     max_sweeps: int = 3,
     threshold: float = 0.999,
     sample_cap: int = 32768,
-    hash_mode: str = "engine",
-    max_cluster_size: int | None = None,
 ) -> DataFrame:
     """SemDeDup with the assignment cost PRUNED for k ∝ N (the Abbas
     et al. production regime, k ≈ N/100). ``semdedup_drop`` holds its
@@ -742,7 +705,9 @@ def semdedup_drop_pruned(
     ×900 pair-join regime). This operator is the faiss-IVF recipe:
 
     1. FIT ON A SAMPLE — ≤``sample_cap`` vectors chosen
-       deterministically (TakeOrdered by xxhash64(vec_id)), collected
+       deterministically (TakeOrdered by the md5-derived
+       ``portable_hash60(vec_id)``, so a DuckDB oracle replays the
+       sample order bit-for-bit), collected
        once, and clustered in the driver with the same 1e6-scaled
        exact-int Lloyd discipline as operators/kmeans.py (int64
        distance sums, floor-division centroid update, first-min
@@ -769,7 +734,9 @@ def semdedup_drop_pruned(
     boundary may land apart from its near-duplicate, trading recall —
     never precision, since every reported pair still passes the exact
     cosine test. Identical vectors always co-locate (same argmin).
-    Returns (centroid_id, n_kept, n_dropped) per fine centroid.
+    Returns (centroid_id, n_kept, n_dropped) per fine centroid. Rows
+    with a NULL embedding are filtered out on entry: they are neither
+    kept nor dropped.
 
     Beyond broadcast-sized codebooks (k·d ≳ 10⁸ entries — past the
     executor broadcast budget) the same two-level structure splits
@@ -777,36 +744,20 @@ def semdedup_drop_pruned(
     an Arrow-batched matmul assignment; the plan shape is unchanged."""
     import math
 
+    from .dedup import portable_hash60
     from .kmeans import SCALE, _best, scaled_vectors
 
     spark = emb.sparkSession
+    emb = emb.filter(F.col("embedding").isNotNull())
     if coarse is None:
         coarse = max(2, int(math.isqrt(k)))
     k_cell = max(1, -(-k // coarse))
 
     import numpy as np
 
-    if hash_mode == "portable":
-        # md5-derived 60-bit hash (operators/dedup.portable_hash60) so a
-        # DuckDB oracle replays the sample ORDER bit-for-bit — the same
-        # engine/portable split as minhash_signatures. xxhash64 stays
-        # the fast default.
-        from .dedup import portable_hash60
-
-        order_hash = portable_hash60(F.col("vec_id").cast("string"))
-    else:
-        order_hash = F.xxhash64("vec_id")
-    # piggyback the exact corpus count on the sample job (VERDICT r13
-    # "what's wrong" #3): the hash-ordered TakeOrdered already streams
-    # EVERY row, so an observed count() metric rides along for free —
-    # the cap detector's n_total never pays its own emb.count() scan.
-    from pyspark.sql import Observation
-
-    _n_obs = Observation()
     sample = (
         scaled_vectors(emb)
-        .observe(_n_obs, F.count(F.lit(1)).alias("n"))
-        .orderBy(order_hash, "vec_id")
+        .orderBy(portable_hash60(F.col("vec_id").cast("string")), "vec_id")
         .limit(sample_cap)
         .collect()
     )
@@ -829,7 +780,7 @@ def semdedup_drop_pruned(
             - 2 * (P @ C.T)
         )
 
-    def lloyd(P: "np.ndarray", kk: int, sweeps: int) -> "np.ndarray":
+    def lloyd(P: "np.ndarray", kk: int) -> "np.ndarray":
         """Exact-int driver Lloyd over ≤sample_cap points: int64-exact
         squared distances, floor-division update, first-min argmin —
         deterministic for a given (hash-ordered) sample order."""
@@ -838,7 +789,7 @@ def semdedup_drop_pruned(
             return P[:0]
         step = max(1, len(P) // kk)
         cents = P[[i * step for i in range(kk)]].copy()
-        for _ in range(sweeps):
+        for _ in range(max_sweeps):
             assign = dist2(P, cents).argmin(axis=1)  # first-min ties
             cnts = np.bincount(assign, minlength=kk)
             sums = np.zeros_like(cents)
@@ -851,14 +802,14 @@ def semdedup_drop_pruned(
             cents = new
         return cents
 
-    coarse_cents = lloyd(pts, coarse, max_sweeps)
+    coarse_cents = lloyd(pts, coarse)
     cell_of = dist2(pts, coarse_cents).argmin(axis=1)
 
     fine: dict[int, list[tuple[int, list[int]]]] = {}
     next_cid = 0
     for ci in range(len(coarse_cents)):
         members = pts[cell_of == ci]
-        cell_cents = lloyd(members, k_cell, max_sweeps)
+        cell_cents = lloyd(members, k_cell)
         rows = cell_cents if len(cell_cents) else coarse_cents[ci : ci + 1]
         fine[ci] = [
             (next_cid + j, [int(x) for x in c]) for j, c in enumerate(rows)
@@ -909,7 +860,6 @@ def semdedup_drop_pruned(
     asg = vecs.select(
         "vec_id",
         "embedding",
-        "v",
         F.array_min(
             F.transform(
                 cell_arr,
@@ -924,143 +874,6 @@ def semdedup_drop_pruned(
             )
         )["cid"].alias("cid"),
     )
-    model_cids = [int(cid) for ci in fine for cid, _ in fine[ci]]
-    if max_cluster_size is not None:
-        # PAIR-WORK CAP (VERDICT r11 #5): the within-cluster cosine
-        # stage costs Σ size² — at k ∝ N one outlier cluster can
-        # dominate the whole job. Split every cluster over budget with
-        # ONE extra driver-Lloyd sweep on its SAMPLE members
-        # (⌈size/budget⌉ sub-centroids) and reassign ONLY that
-        # cluster's vectors against a broadcast sub-codebook.
-        # Blocking-only approximation, same contract as the two-level
-        # codebook itself: reported drops still pass the exact cosine
-        # test; recall may drop across sub-cluster boundaries.
-        # In-budget clusters (and the oracle-checked cap=None path)
-        # are untouched byte-for-byte.
-        #
-        # DETECTOR = the fit SAMPLE, not a Spark pass over the
-        # assignment: the first cut measured real sizes with a
-        # groupBy-count over the assignment — at ×1000 that extra full
-        # two-level-argmin pass (plus the recompute the reassignment
-        # layer forces without a persist) made the capped run 28%
-        # SLOWER than uncapped on mildly skewed data (3557 s vs 2778 s
-        # same-day). The sample already sits on the driver; estimating
-        # size(cid) ≈ sample_count × N/|sample| needs only N — free
-        # when the sample IS the whole corpus (sub-cap input), and an
-        # observed metric on the sample job otherwise (zero extra
-        # jobs — never the two-level argmin, never its own scan). The
-        # cap is an insurance mechanism against
-        # PATHOLOGICAL skew, where the estimate's ±relative error at
-        # budget scale is negligible (a cluster at 2× budget has
-        # ~2·budget·|sample|/N sample members — e.g. ~33 at the ×1000
-        # tier's budget, std ~√33 → detection is reliable precisely
-        # where splitting pays).
-        import sys as _sys
-
-        n_total = len(pts) if len(pts) < sample_cap else int(_n_obs.get["n"])
-        scale_up = n_total / max(len(pts), 1)
-        # the sample points' own fine assignment, driver-side (same
-        # exact-int argmin, first-min ties on ascending cids)
-        samp_cid = np.full(len(pts), -1, dtype=np.int64)
-        for ci in fine:
-            idx = np.nonzero(cell_of == ci)[0]
-            if len(idx) == 0:
-                continue
-            cents_arr = np.array([c for _, c in fine[ci]], dtype=np.int64)
-            cids_arr = np.array([cid for cid, _ in fine[ci]], dtype=np.int64)
-            a_idx = dist2(pts[idx], cents_arr).argmin(axis=1)
-            samp_cid[idx] = cids_arr[a_idx]
-        samp_counts: dict[int, int] = {}
-        for c in samp_cid:
-            samp_counts[int(c)] = samp_counts.get(int(c), 0) + 1
-        over = {
-            c: int(round(n * scale_up))
-            for c, n in samp_counts.items()
-            if n * scale_up > max_cluster_size
-        }
-        sub_rows: list[tuple[int, int, list[int]]] = []
-        if over:
-            for cid, n_over in sorted(over.items()):
-                members = pts[samp_cid == cid]
-                m = min(-(-n_over // max_cluster_size), max(len(members), 1))
-                if len(members) < 2 or m < 2:
-                    print(
-                        f"semdedup cap: cluster {cid} (~{n_over} rows est.) has "
-                        f"too few sample members ({len(members)}) to split",
-                        file=_sys.stderr,
-                    )
-                    continue
-                for c in lloyd(members, m, 1):
-                    sub_rows.append((int(cid), int(next_cid), [int(x) for x in c]))
-                    next_cid += 1
-        if sub_rows:
-            split_cids = {ocid for ocid, _, _ in sub_rows}
-            print(
-                f"semdedup cap: split {len(split_cids)} oversized clusters "
-                f"(max est. size {max(over.values())}, budget {max_cluster_size}) "
-                f"into {len(sub_rows)} sub-clusters",
-                file=_sys.stderr,
-            )
-            model_cids = [c for c in model_cids if c not in split_cids] + [
-                cid for _, cid, _ in sub_rows
-            ]
-            sub_cb = values_table(
-                spark, sub_rows, "ocid int, cid int, c array<long>"
-            )
-            sub_scal = (
-                sub_cb.groupBy("ocid")
-                .agg(
-                    F.sort_array(F.collect_list(F.struct("cid", "c"))).alias(
-                        "sub_arr"
-                    )
-                )
-                .agg(
-                    F.map_from_entries(
-                        F.sort_array(F.collect_list(F.struct("ocid", "sub_arr")))
-                    ).alias("sub_map")
-                )
-            )
-            sub_arr = F.element_at(F.col("sub_map"), F.col("cid"))
-            # LINEAGE BARRIER before the reassignment layer: without
-            # it Catalyst's CollapseProject inlines the O(2√k)-argmin
-            # expression into the when/otherwise branches (cid is
-            # referenced as the map key AND the fallback), re-running
-            # the whole pruned assignment 2-3x per row — measured at
-            # x1000: capped 3330 s vs uncapped 2778 s with a FREE
-            # detector, i.e. the overhead was recompute, not the cap.
-            # localCheckpoint materializes the assignment once (only
-            # when splits actually trigger — the insurance premium is
-            # one corpus materialization); blocks are reclaimed by the
-            # ContextCleaner when the plan is garbage-collected, and
-            # the registry/oracle path (cap=None) never reaches here.
-            asg = asg.localCheckpoint(eager=False)
-            asg = asg.crossJoin(F.broadcast(sub_scal)).select(
-                "vec_id",
-                "embedding",
-                "v",
-                F.when(sub_arr.isNull(), F.col("cid"))
-                .otherwise(
-                    F.array_min(
-                        F.transform(
-                            sub_arr,
-                            lambda s: F.struct(
-                                F.aggregate(
-                                    F.zip_with(
-                                        F.col("v"),
-                                        s["c"],
-                                        lambda a, b: (a - b) * (a - b),
-                                    ),
-                                    F.lit(0).cast("long"),
-                                    lambda acc, x: acc + x,
-                                ).alias("dist2"),
-                                s["cid"].alias("cid"),
-                            ),
-                        )
-                    )["cid"]
-                )
-                .alias("cid"),
-            )
-    asg = asg.select("vec_id", "embedding", "cid")
     # Same AQE-coalescing guard as semdedup_drop: pin the CPU-bound
     # pair join's width so byte-based coalescing can't serialize it
     # (measured at ×30/k=240: 205 s single-task → 23 s pinned).
@@ -1090,7 +903,9 @@ def semdedup_drop_pruned(
         .agg(F.count(F.lit(1)).cast("long").alias("n_dropped"))
     )
     sizes = asg.groupBy("cid").agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    model = values_table(spark, [(c,) for c in model_cids], "cid int")
+    model = values_table(
+        spark, [(int(cid),) for ci in fine for cid, _ in fine[ci]], "cid int"
+    )
     return (
         model.join(sizes, "cid", "left")
         .join(dropped, "cid", "left")

@@ -26,10 +26,13 @@ mergeable-summaries family.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 
 def _mg_partition_summary(col: str, k: int):
@@ -773,8 +776,6 @@ def mg_rescored_topk(
     exact, never silently approximate). Only when the doubled ladder
     is exhausted does it REFUSE loudly (raise, not an approximate
     answer) — raise k or max_doublings."""
-    import sys
-
     last_err = ""
     for attempt in range(max_doublings + 1):
         k_try = k << attempt
@@ -800,10 +801,9 @@ def mg_rescored_topk(
             f"k={k_try}, N={n_total}, kth={exact[-1][1] if exact else 0}"
         )
         if attempt < max_doublings:
-            print(
-                f"mg_rescored_topk: certificate failed ({last_err}); "
-                f"escalating to k={k_try * 2}",
-                file=sys.stderr,
+            _log.warning(
+                "mg_rescored_topk: certificate failed (%s); escalating to k=%d",
+                last_err, k_try * 2,
             )
     else:
         raise ValueError(

@@ -16,10 +16,9 @@ the maximal span).
 Pipeline (all JVM-side, one corpus parse, one full shuffle):
 
 1. every document yields its overlapping w-token windows with their
-   1-based start position — hashed longs by default
-   (functions.text.shingle_hashes with n=w: no window string is ever
-   materialized), md5 hex of the window string in portable mode (the
-   DuckDB-mirrorable verification path, same trick as minhash);
+   1-based start position, keyed by the md5 hex of the window string
+   (DuckDB-mirrorable, so the oracle value-checks every stage — same
+   trick as minhash);
 2. ONE shuffle partitions the (doc_id, start_pos, window-key) stream
    by window key; window functions over that partition give each
    occurrence its group's distinct-doc count and its rank by
@@ -44,8 +43,8 @@ Pipeline (all JVM-side, one corpus parse, one full shuffle):
    the span list joins back to the corpus keyed on doc_id and is
    candidate-sized, so AQE broadcasts it while small).
 
-At 100 TB: the window stream is ~#tokens rows of (long, long, long) —
-the same order and shape as the minhash shingle stream; everything
+At 100 TB: the window stream is ~#tokens rows of (long, long, md5
+hex) — the same order and shape as the minhash shingle stream; everything
 downstream of the one full shuffle touches only repeated occurrences.
 """
 
@@ -54,19 +53,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import shingle_hashes, shingles, tokens
+from ..functions.text import shingles, tokens
 from ..sources.readers import spread_small_scan
 
 
-def _window_occurrences(docs: DataFrame, w: int, hash_mode: str) -> DataFrame:
+def _window_occurrences(docs: DataFrame, w: int) -> DataFrame:
     """(doc_id, start_pos, wkey): every overlapping w-token window of
-    every document, keyed by hashed-long (default) or md5-hex
-    (portable — a SQL oracle reproduces md5(window string) exactly)."""
-    tok = tokens("text")
-    if hash_mode == "portable":
-        keys = F.transform(shingles(tok, w), F.md5)
-    else:
-        keys = shingle_hashes(tok, w)
+    every document, keyed by md5 hex (a SQL oracle reproduces
+    md5(window string) exactly)."""
+    keys = F.transform(shingles(tokens("text"), w), F.md5)
     return (
         spread_small_scan(docs)
         .select("doc_id", F.posexplode(keys).alias("pos0", "wkey"))
@@ -74,7 +69,7 @@ def _window_occurrences(docs: DataFrame, w: int, hash_mode: str) -> DataFrame:
     )
 
 
-def _flagged_occurrences(docs: DataFrame, w: int, hash_mode: str) -> DataFrame:
+def _flagged_occurrences(docs: DataFrame, w: int) -> DataFrame:
     """Window occurrences annotated (per window-key group, one shuffle)
     with ``n_docs`` (distinct documents containing the window) and
     ``rn`` (rank by (doc_id, start_pos) — rn=1 is the canonical
@@ -90,7 +85,7 @@ def _flagged_occurrences(docs: DataFrame, w: int, hash_mode: str) -> DataFrame:
     state, the ordered pass shares the (doc_id, start_pos) sort with
     row_number, and no new Exchange is introduced (both windows
     partition by wkey)."""
-    occ = _window_occurrences(docs, w, hash_mode)
+    occ = _window_occurrences(docs, w)
     grp = Window.partitionBy("wkey")
     order = grp.orderBy("doc_id", "start_pos")
     ranked = occ.select(
@@ -130,9 +125,7 @@ def _merge_islands(occ: DataFrame, w: int) -> DataFrame:
     )
 
 
-def repeated_substring_spans(
-    docs: DataFrame, w: int = 50, hash_mode: str = "xxhash64"
-) -> DataFrame:
+def repeated_substring_spans(docs: DataFrame, w: int = 50) -> DataFrame:
     """Maximal cross-document repeated substrings, per document.
 
     Returns (doc_id, span_start, span_end, n_windows): every maximal
@@ -141,7 +134,7 @@ def repeated_substring_spans(
     — feed it to auditing/reporting, or use
     :func:`scrub_repeated_substrings` for the corpus rewrite.
     """
-    rep = _flagged_occurrences(docs, w, hash_mode).filter(F.col("n_docs") >= 2)
+    rep = _flagged_occurrences(docs, w).filter(F.col("n_docs") >= 2)
     return _merge_islands(rep.select("doc_id", "start_pos"), w).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "span_start",
@@ -150,9 +143,7 @@ def repeated_substring_spans(
     )
 
 
-def scrub_repeated_substrings(
-    docs: DataFrame, w: int = 50, hash_mode: str = "xxhash64"
-) -> DataFrame:
+def scrub_repeated_substrings(docs: DataFrame, w: int = 50) -> DataFrame:
     """ExactSubstr corpus rewrite: remove all-but-one occurrence of
     every cross-document duplicated w-token run.
 
@@ -162,7 +153,7 @@ def scrub_repeated_substrings(
     (doc_id, clean_text, n_tokens, n_removed). A doc whose every
     window is canonical (or unique) passes through byte-identical.
     """
-    flagged = _flagged_occurrences(docs, w, hash_mode)
+    flagged = _flagged_occurrences(docs, w)
     removable = flagged.filter((F.col("n_docs") >= 2) & (F.col("rn") > 1))
     spans = _merge_islands(removable.select("doc_id", "start_pos"), w)
     per_doc = spans.groupBy("doc_id").agg(

@@ -27,6 +27,7 @@ props.k→risk_score.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -58,6 +59,8 @@ from .operators.textops import (
 )
 from .session import shuffle_width, tune
 from .sources.readers import load_table
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -1426,14 +1429,13 @@ where cast(i.ni as double) / cast(sa.n + sb.n - i.ni as double) >= 0.2
 def q_minhash_near_dup(spark, sf_dir):
     """MinHash(16) + 4-band LSH near-dup pairs, exact-verified.
 
-    Runs in hash_mode="portable" (md5-derived 60-bit signature hashes +
-    md5 band buckets) so the ENTIRE LSH pipeline — signatures, banding,
-    candidate generation, exact-jaccard verify — is value-checked
-    against the DuckDB oracle. The operator's default mode stays
-    xxhash64 (JVM-native fast path, same topology)."""
+    md5-derived 60-bit signature hashes + md5 band buckets, so the
+    ENTIRE LSH pipeline — signatures, banding, candidate generation,
+    exact-jaccard verify — is value-checked against the DuckDB
+    oracle."""
     return minhash_near_dup_pairs(
         load_table(spark, sf_dir, "documents"),
-        n=3, num_hashes=16, bands=4, threshold=0.2, hash_mode="portable",
+        n=3, num_hashes=16, bands=4, threshold=0.2,
     )
 
 
@@ -1473,12 +1475,11 @@ where bit_count(xor(ha, hb)) <= 3
 def q_simhash_near_dup(spark, sf_dir):
     """64-bit SimHash near-dup pairs (Hamming ≤ 3), chunk-banded.
 
-    Runs in hash_mode="portable" (md5 hex-digit bits) so signatures,
+    Signature bits are md5 hex-digit bits, so signatures,
     16-bit-chunk banding and the xor+bit_count verify are all
-    value-checked against the DuckDB oracle; the operator's default
-    stays xxhash64."""
+    value-checked against the DuckDB oracle."""
     return simhash_near_dup_pairs(
-        load_table(spark, sf_dir, "documents"), max_hamming=3, hash_mode="portable"
+        load_table(spark, sf_dir, "documents"), max_hamming=3
     )
 
 
@@ -1570,19 +1571,16 @@ from dd where dist < 1.2
 )
 def q_brp_lsh_ann_pairs(spark, sf_dir):
     """Approximate NN pairs via bucketed-random-projection LSH —
-    FULL-ORACLE since r12 (r11 directive #2): hash_mode="portable"
-    replaces Spark ML's seeded-RNG gaussian hyperplanes (engine-
-    internal, the reason this was rows-only) with md5-derived uniform
-    projection directions both engines recompute identically, then the
-    same floor(v·r / bucketLength) bucketing, (table, bucket) equi-join
-    candidates, and exact euclidean verify < 1.2 — the whole LSH
-    pipeline value-checked cross-engine, completing the ANN ladder's
-    oracle coverage (IVF and PQ-ADC already were). The MLlib engine
-    mode remains the default API path (tests/test_similarity.py pins
-    its recall floor)."""
-    return brp_lsh_ann_pairs(
-        load_table(spark, sf_dir, "embeddings"), hash_mode="portable"
-    )
+    FULL-ORACLE since r12 (r11 directive #2): md5-derived uniform
+    projection directions both engines recompute identically (Spark
+    ML's seeded-RNG gaussian hyperplanes, the reason this was once
+    rows-only, are gone), then floor(v·r / bucketLength) bucketing,
+    (table, bucket) equi-join candidates, and exact euclidean verify
+    < 1.2 — the whole LSH pipeline value-checked cross-engine,
+    completing the ANN ladder's oracle coverage (IVF and PQ-ADC
+    already were). tests/test_similarity.py pins its recall floor
+    against brute force."""
+    return brp_lsh_ann_pairs(load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -6628,13 +6626,12 @@ from spans
 def q_substring_dedup_spans(spark, sf_dir):
     """Maximal cross-document repeated substrings (ExactSubstr
     diagnostic surface): every token range covered by 20-token windows
-    appearing verbatim in >= 2 documents. Portable mode (md5 window
-    keys) so the DuckDB oracle value-checks the whole pipeline; the
-    xxhash64 fast path is asserted equal in tests/test_substring.py."""
+    appearing verbatim in >= 2 documents. md5 window keys, so the
+    DuckDB oracle value-checks the whole pipeline."""
     from .operators.substring import repeated_substring_spans
 
     return repeated_substring_spans(
-        load_table(spark, sf_dir, "documents"), w=_SUBSTR_W, hash_mode="portable"
+        load_table(spark, sf_dir, "documents"), w=_SUBSTR_W
     )
 
 
@@ -6676,7 +6673,7 @@ def q_substring_scrub_keep_first(spark, sf_dir):
     from .operators.substring import scrub_repeated_substrings
 
     return scrub_repeated_substrings(
-        load_table(spark, sf_dir, "documents"), w=_SUBSTR_W, hash_mode="portable"
+        load_table(spark, sf_dir, "documents"), w=_SUBSTR_W
     )
 
 
@@ -7573,11 +7570,11 @@ def _semdedup_pruned_oracle(
     threshold: float = 0.999,
     d: int = 64,
 ) -> str:
-    """The full two-level sample-fit replay (r11 directive #2): in
-    hash_mode="portable" every stage of semdedup_drop_pruned is
-    deterministic from the data alone — md5-ordered sample, integer
-    seed positions (every step-th sample row), ``sweeps`` exact-int
-    coarse Lloyd sweeps on the sample, per-cell fine sweeps,
+    """The full two-level sample-fit replay (r11 directive #2): every
+    stage of semdedup_drop_pruned is deterministic from the data
+    alone — md5-ordered sample, integer seed positions (every step-th
+    sample row), ``sweeps`` exact-int coarse Lloyd sweeps on the
+    sample, per-cell fine sweeps,
     sequential fine-cid numbering, two-level pruned assignment of all
     vectors, and the within-fine-cluster cosine pair cut — so DuckDB
     re-trains the identical codebook and replays the whole pipeline,
@@ -7718,8 +7715,8 @@ def q_semdedup_pruned_drop(spark, sf_dir):
     sublinear per unit data). Approximation is blocking-only:
     reported drops always pass the exact cosine test.
 
-    FULL-ORACLE since r12 (r11 directive #2): hash_mode="portable"
-    orders the sample by the md5-derived 60-bit hash, which makes the
+    FULL-ORACLE since r12 (r11 directive #2): the operator orders the
+    sample by the md5-derived 60-bit hash, which makes the
     whole sample fit deterministic from the data alone — the oracle
     (_semdedup_pruned_oracle) re-trains the identical two-level
     codebook in DuckDB (seed rows at integer step positions, unrolled
@@ -7734,7 +7731,6 @@ def q_semdedup_pruned_drop(spark, sf_dir):
         k=16,
         coarse=4,
         max_sweeps=3,
-        hash_mode="portable",
     )
 
 
@@ -15144,7 +15140,7 @@ from err
 )
 def q_minhash_estimate_error(spark, sf_dir):
     """Sketch-accuracy audit for the MinHash lane: over the SAME banded
-    LSH candidates minhash_near_dup generates (portable mode), compare
+    LSH candidates minhash_near_dup generates, compare
     the 16-hash signature estimate (matching-component fraction — the
     unbiased MinHash Jaccard estimator) against the exact shingle-set
     Jaccard, reporting mean and max absolute error. The production
@@ -15161,7 +15157,7 @@ def q_minhash_estimate_error(spark, sf_dir):
     sh_raw = docs.select(
         "doc_id", F.explode(shingles(_toks("text"), 3)).alias("shingle")
     )
-    sig = minhash_signatures(sh_raw, 16, hash_mode="portable")
+    sig = minhash_signatures(sh_raw, 16)
     band_structs = F.array(
         *[
             F.struct(
@@ -16415,8 +16411,6 @@ def q_levenshtein_block_pairs(spark, sf_dir):
     full projection is localCheckpoint'ed ONCE, so the self-join's two
     sides replay the checkpoint instead of re-scanning parquet: one
     text scan total per call."""
-    import sys as _sys
-
     from .sources.readers import spread_small_scan
 
     docs = load_table(spark, sf_dir, "documents")
@@ -16472,11 +16466,10 @@ def q_levenshtein_block_pairs(spark, sf_dir):
             )
         # pair volume scales ~f²; 0.9 safety margin, then RE-MEASURE
         thr = max(1, int(thr * 0.9 * (_LEV_PAIR_BUDGET / est) ** 0.5))
-        print(
-            f"levenshtein_block_pairs: volume {est} > budget "
-            f"{_LEV_PAIR_BUDGET}; escalating to md5-sampled slice "
-            f"f={thr / 1e6:.6f}",
-            file=_sys.stderr,
+        _log.warning(
+            "levenshtein_block_pairs: volume %d > budget %d; escalating "
+            "to md5-sampled slice f=%.6f",
+            est, _LEV_PAIR_BUDGET, thr / 1e6,
         )
         est = _volume(dm.filter(sample_hash < thr))
     # accepted tier: ONE text scan, checkpointed so the self-join's two
@@ -18083,7 +18076,7 @@ def q_lsh_recall_audit(spark, sf_dir):
     sh_raw = docs.select(
         "doc_id", F.explode(shingles(_toks("text"), 3)).alias("shingle")
     )
-    sig = minhash_signatures(sh_raw, 16, hash_mode="portable")
+    sig = minhash_signatures(sh_raw, 16)
     sa = sig.select(
         F.col("doc_id").alias("doc_id_a"),
         *[F.col(f"mh_{i}").alias(f"a{i}") for i in range(16)],

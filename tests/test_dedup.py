@@ -43,19 +43,36 @@ def test_ngram_jaccard_finds_near_dup(spark):
 
 
 def test_minhash_near_dup(spark):
-    # 8 bands × 2 rows: recall for the j≈0.57 near pair is ~96%, and
-    # the outcome is deterministic for the fixed seeded hashes.
+    # 8 bands × 2 rows: a pair with jaccard j is a candidate with
+    # probability 1 − (1 − j²)^8 — about 96% at j ≈ 0.57 (docs 1/3) and
+    # 97% at j = 0.6 (the 40 planted pairs below, one word changed in
+    # 14). Any single near pair can miss; the fixture's own 1/3 pair
+    # does under the md5 hash family (6 of 16 signature components
+    # match, none of the 2-row bands). So recall is asserted over all
+    # 41 near pairs, against a floor set well below the theory.
+    rows = list(_docs(spark).collect())
+    near = {(1, 3)}
+    for p in range(40):
+        words = [f"w{p}x{k}" for k in range(14)]
+        a, b = 100 + 2 * p, 101 + 2 * p
+        rows.append((a, " ".join(words), "en", "s0", 0))
+        words[7] = f"v{p}"
+        rows.append((b, " ".join(words), "en", "s0", 0))
+        near.add((a, b))
     pairs = {
         (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
         for r in minhash_near_dup_pairs(
-            _docs(spark), num_hashes=16, bands=8, threshold=0.2
+            spark.createDataFrame(rows, DOC_COLS),
+            num_hashes=16,
+            bands=8,
+            threshold=0.2,
         ).collect()
     }
     # identical docs always collide in every band; verified jaccard exact
-    assert pairs[(1, 2)] == 1.0
-    assert (1, 4) not in pairs
-    assert (1, 3) in pairs
-    assert 0.5 < pairs[(1, 3)] < 1.0
+    assert pairs.pop((1, 2)) == 1.0
+    assert set(pairs) <= near  # unrelated docs (e.g. 1/4) never pair
+    assert all(0.5 < j < 1.0 for j in pairs.values())
+    assert len(pairs) / len(near) >= 0.85
 
 
 def test_simhash_near_dup(spark):

@@ -77,7 +77,6 @@ def test_identical_docs_found_by_every_near_dup_path(spark):
     for fn, kw in [
         (ngram_jaccard_pairs, {"threshold": 0.9}),
         (minhash_near_dup_pairs, {"threshold": 0.9}),
-        (minhash_near_dup_pairs, {"threshold": 0.9, "hash_mode": "portable"}),
     ]:
         pairs = {(r["doc_id_a"], r["doc_id_b"]) for r in fn(docs, **kw).collect()}
         assert (1, 2) in pairs, fn.__name__

@@ -455,7 +455,7 @@ def test_levenshtein_budget_refuses_on_skew(spark, monkeypatch):
         R.load_table = orig
 
 
-def test_levenshtein_escalation_ladder_tiers(spark, monkeypatch):
+def test_levenshtein_escalation_ladder_tiers(spark, monkeypatch, caplog):
     """The three tiers of the budget ladder (VERDICT r13 #3), pinned
     on one fixture family:
 
@@ -469,8 +469,21 @@ def test_levenshtein_escalation_ladder_tiers(spark, monkeypatch):
       above; here budget=0 makes even f→0 slices over-budget... a
       0-pair slice always fits, so refusal needs the disabled ladder —
       asserted via max_escalations=0 on the over-budget corpus).
+
+    Each escalation is reported through the registry's logger.
     """
+    import logging
+
     import etl_challenge_localiza_spark.registry as R
+
+    caplog.set_level(logging.WARNING, logger=R.__name__)
+
+    def escalations():
+        return [
+            r.getMessage()
+            for r in caplog.records
+            if r.name == R.__name__ and "escalating" in r.getMessage()
+        ]
 
     n = 100
     docs = spark.createDataFrame(
@@ -487,12 +500,19 @@ def test_levenshtein_escalation_ladder_tiers(spark, monkeypatch):
         assert len(rows) == n * (n - 1) // 2
         assert all(r["sampled_fraction"] == 1.0 for r in rows)
         assert all(r["edit_distance"] == 0 for r in rows)
+        assert escalations() == []
 
         # SAMPLE tier: C(100,2)=4950 > 1000 → one escalation lands a
         # ~0.40 slice (~40 docs → ~800 pairs <= 1000)
         monkeypatch.setattr(R, "_LEV_PAIR_BUDGET", 1_000)
         sampled = R.QUERIES["levenshtein_block_pairs"].fn(spark, "ignored").collect()
         assert 0 < len(sampled) <= 1_000
+        logged = escalations()
+        assert len(logged) == 1
+        assert logged[0].startswith(
+            "levenshtein_block_pairs: volume 4950 > budget 1000; "
+            "escalating to md5-sampled slice f=0."
+        )
         fracs = {r["sampled_fraction"] for r in sampled}
         assert len(fracs) == 1 and 0.0 < next(iter(fracs)) < 1.0
         kept = {r["doc_id_a"] for r in sampled} | {r["doc_id_b"] for r in sampled}

@@ -130,12 +130,12 @@ def test_label_pca_variance_matches_numpy(spark):
 
 
 def test_brp_lsh_recall_floor_vs_brute_force(spark):
-    """Accuracy bound for the rows-only brp_lsh_ann_pairs query (the
+    """Accuracy bound for the brp_lsh_ann_pairs query (the
     IVF path has recall@10 = 1.0 vs brute force; this closes the same
     loop for BRP-LSH): on the real sf0.01 embeddings, the LSH pair set
     must recover >= 90% of the TRUE close pairs (brute-force euclidean
     < max_distance), and every pair it reports must be genuinely within
-    the threshold (precision = 1.0 by construction — approxSimilarityJoin
+    the threshold (precision = 1.0 by construction — the operator
     verifies exact distances on candidates; recall is what the bucketing
     can lose)."""
     from pyspark.sql import functions as F
@@ -162,19 +162,33 @@ def test_brp_lsh_recall_floor_vs_brute_force(spark):
     }
     assert truth, "degenerate: no close pairs in the corpus at this threshold"
 
-    for mode in ("engine", "portable"):
-        found = {
-            (r["vec_id_a"], r["vec_id_b"])
-            for r in brp_lsh_ann_pairs(
-                emb, max_distance=max_distance, hash_mode=mode
-            ).collect()
-        }
-        assert found <= truth  # exact-distance verification on candidates
-        recall = len(found & truth) / len(truth)
-        assert recall >= 0.9, (
-            f"BRP-LSH[{mode}] recall {recall:.3f} < 0.9 "
-            f"({len(truth)} true pairs)"
-        )
+    found = {
+        (r["vec_id_a"], r["vec_id_b"])
+        for r in brp_lsh_ann_pairs(emb, max_distance=max_distance).collect()
+    }
+    assert found <= truth  # exact-distance verification on candidates
+    recall = len(found & truth) / len(truth)
+    assert recall >= 0.9, (
+        f"BRP-LSH recall {recall:.3f} < 0.9 ({len(truth)} true pairs)"
+    )
+
+
+def test_brp_lsh_null_first_row_and_ragged_widths(spark):
+    """The width comes from functions.vectors.embedding_dim: a NULL
+    embedding in the first row is skipped (it never forms a pair), and
+    mixed widths raise ValueError instead of returning pairs computed
+    over a truncated width."""
+    with_null = spark.createDataFrame(
+        [(1, None, 0), (2, [1.0, 0.0], 0), (3, [1.0, 0.0], 0)], EMB_COLS
+    )
+    assert [tuple(r) for r in brp_lsh_ann_pairs(with_null).collect()] == [
+        (2, 3, 0.0)
+    ]
+    ragged = spark.createDataFrame(
+        [(1, [1.0], 0), (2, [1.0, 0.0], 0), (3, [1.0, 0.0], 0)], EMB_COLS
+    )
+    with pytest.raises(ValueError, match="mixed widths"):
+        brp_lsh_ann_pairs(ragged)
 
 
 def test_semdedup_drops_planted_cluster_duplicate(spark):
@@ -276,57 +290,6 @@ def test_semdedup_pruned_finds_planted_dups_and_conserves(spark):
     assert sum(r["n_kept"] for r in out2) == 8
 
 
-def test_semdedup_pruned_max_cluster_size_cap(spark):
-    """VERDICT r11 #5: with max_cluster_size set, an oversized fine
-    cluster is split by one extra driver-Lloyd sweep on its sample
-    members — the pair stage's Σ size² is bounded — while counts
-    conserve, precision stays exact (spread-out points drop nothing),
-    planted identical dups are still found (identical vectors
-    co-locate through the sub-codebook too), and the run stays
-    deterministic. cap=None (the oracle path) is untouched."""
-    import math
-
-    from etl_challenge_localiza_spark.operators.similarity import (
-        semdedup_drop_pruned,
-    )
-
-    # one tight-but-distinct arc of 24 points (all land in one fine
-    # cluster at k=2; no pair reaches cos >= 0.999) plus a planted
-    # group of 4 identical vectors far away
-    # 0.05 rad spacing: adjacent cos(0.05) ≈ 0.99875 < 0.999, so the
-    # arc has NO near-dup pairs (0.01 rad would make neighbors dups)
-    rows = [
-        (i, [math.cos(0.3 + 0.05 * i), math.sin(0.3 + 0.05 * i), 0.0], 0)
-        for i in range(24)
-    ] + [(100 + j, [0.0, 0.0, 1.0], 1) for j in range(4)]
-    emb = spark.createDataFrame(rows, EMB_COLS)
-
-    uncapped = semdedup_drop_pruned(emb, k=2, coarse=2, max_sweeps=2).collect()
-    capped1 = semdedup_drop_pruned(
-        emb, k=2, coarse=2, max_sweeps=2, max_cluster_size=8
-    ).collect()
-    capped2 = semdedup_drop_pruned(
-        emb, k=2, coarse=2, max_sweeps=2, max_cluster_size=8
-    ).collect()
-    assert [tuple(r) for r in capped1] == [tuple(r) for r in capped2]
-
-    def totals(out):
-        return (
-            sum(r["n_kept"] for r in out),
-            sum(r["n_dropped"] for r in out),
-        )
-
-    # conservation + identical dedup results under the cap: the arc
-    # drops nothing (precision exact), the planted group drops 3
-    assert totals(uncapped) == totals(capped1) == (25, 3)
-    # the cap actually bound: the 24-row cluster was split
-    assert len(capped1) > len(uncapped)
-    big_uncapped = max(r["n_kept"] + r["n_dropped"] for r in uncapped)
-    big_capped = max(r["n_kept"] + r["n_dropped"] for r in capped1)
-    assert big_uncapped > 8  # there was an over-budget cluster to split
-    assert big_capped < big_uncapped
-
-
 def test_semdedup_variants_empty_input(spark):
     """Both SemDeDup variants return an empty (centroid_id, n_kept,
     n_dropped) frame on an empty embeddings table — the pruned
@@ -346,7 +309,27 @@ def test_semdedup_variants_empty_input(spark):
 
     pairs = brp_lsh_ann_pairs(emb)
     assert pairs.columns == ["vec_id_a", "vec_id_b", "euclidean_dist"]
-    assert pairs.count() == 0  # ML LSH fit would NoSuchElementException
+    assert pairs.count() == 0
+
+
+def test_semdedup_variants_ignore_null_embeddings(spark):
+    """A NULL embedding row is filtered out on entry: both SemDeDup
+    variants return exactly what they return without it (regression:
+    TypeError from the k-means fit on the NULL vector)."""
+    from etl_challenge_localiza_spark.operators.similarity import (
+        semdedup_drop,
+        semdedup_drop_pruned,
+    )
+
+    dirs = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0], [0.6, 0.64, 0.48]]
+    planted = [(i, dirs[i % 4], i % 4) for i in range(8)]
+    clean = spark.createDataFrame(planted, EMB_COLS)
+    # the NULL row has the lowest vec_id, so it would be a k-means seed
+    dirty = spark.createDataFrame([(-1, None, 0)] + planted, EMB_COLS)
+    for fn in (semdedup_drop, semdedup_drop_pruned):
+        want = [tuple(r) for r in fn(clean, k=4, max_sweeps=3).collect()]
+        assert sum(r[2] for r in want) == 4  # each direction drops its copy
+        assert [tuple(r) for r in fn(dirty, k=4, max_sweeps=3).collect()] == want
 
 
 def test_rrf_fuse_known_rankings(spark):

@@ -217,17 +217,21 @@ def test_mg_rescored_topk_exact_and_guarded(spark):
         mg_rescored_topk(flat, "w", topk=5, k=8)
 
 
-def test_mg_rescored_topk_auto_escalates(spark):
+def test_mg_rescored_topk_auto_escalates(spark, caplog):
     """VERDICT r11 #6: when the certificate fails at the initial k the
     operator retries with doubled k (bounded) instead of refusing —
     here k=8 cannot certify (kth=100, 100*9 <= 1000) but the first
     doubling k=16 can (100*17 > 1000), and the escalated answer equals
     the exact top-k. The certificate itself is unchanged: a corpus no
-    doubling can certify still raises (test above)."""
+    doubling can certify still raises (test above). The escalation is
+    reported once through the module's logger."""
+    import logging
+
     from etl_challenge_localiza_spark.operators.sketches import (
         mg_rescored_topk,
     )
 
+    caplog.set_level(logging.WARNING, logger="etl_challenge_localiza_spark")
     rows = [(f"tok{i % 10}",) for i in range(1000)]
     df = spark.createDataFrame(rows, ["w"])
     got = [
@@ -235,6 +239,14 @@ def test_mg_rescored_topk_auto_escalates(spark):
         for r in mg_rescored_topk(df, "w", topk=5, k=8).collect()
     ]
     assert got == [(f"tok{i}", 100) for i in range(5)]
+    msgs = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == "etl_challenge_localiza_spark.operators.sketches"
+    ]
+    assert len(msgs) == 1
+    assert msgs[0].startswith("mg_rescored_topk: certificate failed (k=8, N=1000")
+    assert msgs[0].endswith("escalating to k=16")
 
 
 # --- round 14: quantile sketch family ---

@@ -88,13 +88,3 @@ def test_adjacent_runs_merge_and_short_docs_pass_through(spark):
     out = {r["doc_id"]: r for r in scrub_repeated_substrings(docs, w=4).collect()}
     assert out[3]["clean_text"] == "tiny doc"
     assert out[3]["n_removed"] == 0
-
-
-def test_fast_and_portable_paths_agree_on_corpus(spark, sf0001):
-    from etl_challenge_localiza_spark.sources.readers import load_table
-
-    docs = load_table(spark, sf0001, "documents")
-    for fn in (repeated_substring_spans, scrub_repeated_substrings):
-        fast = sorted(map(tuple, fn(docs, w=20, hash_mode="xxhash64").collect()))
-        portable = sorted(map(tuple, fn(docs, w=20, hash_mode="portable").collect()))
-        assert fast == portable

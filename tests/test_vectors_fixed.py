@@ -1,10 +1,7 @@
-"""The SQL-text fast path of the fixed-width vector folds must be
-value-identical to the Column-API loop it replaced (optimization r14,
-second segment): same left-fold order, same 0.0D seed, same per-element
-casts — so swapping the build mechanism can never move a similarity
-threshold or an argmax tie."""
-
-from pyspark.sql import functions as F
+"""The SQL-text fixed-width vector folds must be value-identical to the
+higher-order-function folds (optimization r14): same left-fold order,
+same 0.0D seed, same per-element casts — so unrolling can never move a
+similarity threshold or an argmax tie."""
 
 from etl_challenge_localiza_spark.functions.vectors import (
     cosine,
@@ -24,23 +21,6 @@ ROWS = [
 
 def _frame(spark):
     return spark.createDataFrame(ROWS, "a array<float>, b array<float>")
-
-
-def test_sql_text_path_equals_column_api_path(spark):
-    df = _frame(spark)
-    d = 3
-    got = df.select(
-        dot_fixed("a", "b", d).alias("dot_s"),
-        dot_fixed(F.col("a"), F.col("b"), d).alias("dot_c"),
-        norm_sq_fixed("a", d).alias("nsq_s"),
-        norm_sq_fixed(F.col("a"), d).alias("nsq_c"),
-        cosine_fixed("a", "b", d).alias("cos_s"),
-        cosine_fixed(F.col("a"), F.col("b"), d).alias("cos_c"),
-    ).collect()
-    for r in got:
-        assert r["dot_s"] == r["dot_c"]
-        assert r["nsq_s"] == r["nsq_c"]
-        assert r["cos_s"] == r["cos_c"]
 
 
 def test_fixed_folds_equal_hof_folds(spark):

@@ -21,12 +21,15 @@ from __future__ import annotations
 import subprocess
 import sys
 import time
+from pathlib import Path
+
+REPO_ROOT = Path(__file__).resolve().parent.parent
 
 
 def _run(label: str, cmd: list[str]) -> None:
     t0 = time.time()
     print(f"=== {label} ===", flush=True)
-    proc = subprocess.run(cmd, cwd="/root/repo")
+    proc = subprocess.run(cmd, cwd=REPO_ROOT)
     dt = time.time() - t0
     if proc.returncode != 0:
         print(f"PREFLIGHT FAILED at {label} ({dt:.0f}s)", flush=True)
