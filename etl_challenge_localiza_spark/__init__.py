@@ -14,7 +14,7 @@ Layout
                  text n-grams, vector math)
 - ``operators``  dataframe-level operators (cleaning pipeline, DQ
                  profile + gates, analytics shapes, dedup, similarity,
-                 text analysis, multimodal stubs)
+                 text analysis, multimodal decoders)
 - ``plans``      end-to-end pipeline assembly (the reference's flow)
 - ``streaming``  Structured Streaming variants of the event queries
 """

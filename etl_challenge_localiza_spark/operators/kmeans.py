@@ -98,8 +98,9 @@ def _kmeans_fit_local(rows, k: int, max_sweeps: int) -> tuple[list, int]:
 
 
 def scaled_vectors(emb: DataFrame) -> DataFrame:
-    """(vec_id, v: array<long>) with v = round(embedding * 1e6)."""
-    return emb.select(
+    """(vec_id, v: array<long>) with v = round(embedding * 1e6), one
+    row per non-NULL embedding: a NULL embedding row is skipped."""
+    return emb.filter(F.col("embedding").isNotNull()).select(
         F.col("vec_id"),
         F.transform(
             F.col("embedding"),
@@ -156,7 +157,9 @@ def kmeans_fit(
 ) -> tuple[list[tuple[int, list[int]]], int]:
     """Lloyd iterations from deterministic seeds (the first ``k``
     vectors by vec_id — the IVF seed convention). Returns the final
-    scaled-int centroids and the number of sweeps actually run."""
+    scaled-int centroids and the number of sweeps actually run. Rows
+    with a NULL embedding are skipped (:func:`scaled_vectors`): they
+    are neither seeds nor members."""
     vecs = scaled_vectors(emb)
     # bounded-corpus fast path (optimization r14, the CC/pagerank
     # pattern): each distributed sweep costs an assignment job + a
@@ -217,7 +220,8 @@ def kmeans_summary(emb: DataFrame, k: int = 8, max_sweeps: int = 3) -> DataFrame
     (centroid_id, n_members, inertia, c_checksum). Inertia is the
     exact integer sum of scaled squared distances (decimal-summed,
     cast to double once); the checksum pins every centroid coordinate
-    so the oracle value-checks the full model, not just the counts."""
+    so the oracle value-checks the full model, not just the counts.
+    Rows with a NULL embedding are skipped, as in :func:`kmeans_fit`."""
     spark = emb.sparkSession
     cents, _ = kmeans_fit(emb, k, max_sweeps)
     vecs = scaled_vectors(emb)

@@ -5,7 +5,9 @@ The pattern for 100 TB multimodal corpora: media lives as a
 ``binary`` column (or object-store URI) beside typed metadata; decode /
 feature-extraction runs as Arrow-batched pandas iterators
 (``mapInPandas``) so the Python boundary is crossed once per batch, not
-per row, and the output schema is declared up front.
+per row, and the output schema is declared up front. Every extractor
+and synthetic-asset generator here goes through the one crossing,
+:func:`_map_payloads`.
 
 Decode support is tiered by what a pure-Python environment can honestly
 do:
@@ -17,10 +19,13 @@ do:
   ``multimodal_decode`` registry query and a hand-built BMP fixture in
   pytest (row padding, top-down negative height).
 - **Compressed formats** (JPEG/PNG/MP3/H.264…) require codec libraries
-  absent here; those paths raise a documented NotImplementedError via
-  ``decoder=None`` — the Spark-side plumbing (schema, Arrow batching,
-  partitioning) is identical and stays fully tested through the real
-  and deterministic-fake decoders.
+  absent here: :func:`decode_image` and :func:`decode_wav` refuse them
+  with ``ValueError``, and :func:`parse_image_header` reads their
+  dimensions from the container header without decoding pixels.
+  :func:`extract_features` derives its width/height from a
+  deterministic hash of the payload (:func:`_fake_decode`), so the
+  Spark-side plumbing (schema, Arrow batching, partitioning) stays
+  fully tested without a codec.
 """
 
 from __future__ import annotations
@@ -40,6 +45,47 @@ FEATURE_SCHEMA = (
     "asset_id long, kind string, n_bytes long, content_sha string, "
     "width int, height int"
 )
+
+
+def _map_payloads(
+    assets: DataFrame,
+    fn: Callable[[bytes], tuple | list[tuple]],
+    schema: str,
+    keep: tuple[str, ...] = ("asset_id",),
+) -> DataFrame:
+    """The module's one Python crossing: run ``fn`` over every
+    ``payload`` of ``assets`` in Arrow batches (``mapInPandas``).
+
+    ``fn`` returns one tuple (1→1) or a list of tuples (1→N, e.g. the
+    kept frames of a video). Each output row is the ``keep`` columns
+    of its input row followed by ``fn``'s tuple, named in order by the
+    DDL ``schema``; a batch that yields no rows still yields a frame
+    with the schema's columns."""
+    names = [c.split()[0] for c in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for *kept, payload in zip(*(pdf[c] for c in keep), pdf["payload"]):
+                out = fn(bytes(payload))
+                for r in out if isinstance(out, list) else [out]:
+                    rows.append((*kept, *r))
+            yield pd.DataFrame(rows, columns=names)
+
+    return assets.mapInPandas(run, schema=schema)
+
+
+def _synthetic_assets(docs: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """(asset_id, payload) with payload = ``make(doc_id)``: a closed-form
+    asset per document, built on the spread ``doc_id`` scan. Each
+    doc_id enters the crossing as its decimal text in ``payload``."""
+    ids = spread_small_scan(docs.select("doc_id")).select(
+        F.col("doc_id").alias("asset_id"),
+        F.col("doc_id").cast("string").cast("binary").alias("payload"),
+    )
+    return _map_payloads(
+        ids, lambda p: (make(int(p)),), "asset_id long, payload binary"
+    )
 
 
 def assets_from_documents(docs: DataFrame, kind: str = "image") -> DataFrame:
@@ -62,75 +108,47 @@ def _fake_decode(payload: bytes) -> tuple[int, int]:
     return 16 + h[0] % 64, 16 + h[1] % 64
 
 
-def extract_features(
-    assets: DataFrame,
-    decoder: Callable[[bytes], tuple[int, int]] | None = _fake_decode,
-) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    ``decoder=None`` marks the real-codec path as unimplemented in this
-    environment (raises NotImplementedError at execution time);
-    the default deterministic fake keeps the full pipeline testable.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decoder is None:
-                raise NotImplementedError(
-                    "real media decode requires codec libraries not present "
-                    "in this environment; pass a decoder callable"
-                )
-            payloads = pdf["payload"]
-            dims = [decoder(bytes(p)) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": [len(bytes(p)) for p in payloads],
-                    "content_sha": [
-                        hashlib.sha256(bytes(p)).hexdigest() for p in payloads
-                    ],
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                }
-            )
-
-    return assets.mapInPandas(run, schema=FEATURE_SCHEMA)
+def extract_features(assets: DataFrame) -> DataFrame:
+    """Arrow-batched feature extraction over binary payloads: byte
+    length, sha256 and the deterministic :func:`_fake_decode`
+    dimensions per (asset_id, kind)."""
+    return _map_payloads(
+        assets,
+        lambda p: (len(p), hashlib.sha256(p).hexdigest(), *_fake_decode(p)),
+        FEATURE_SCHEMA,
+        keep=("asset_id", "kind"),
+    )
 
 
 # ---------------------------------------------------------------------------
 # Real pure-Python decoders: binary PPM (P6) and uncompressed 24-bit BMP
 # ---------------------------------------------------------------------------
 
-_PPM_HEADER = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+(\d+)\s")
+# no ^ anchor: Pattern.match(payload, off) anchors at ``off`` itself
+_PPM_HEADER = re.compile(rb"P6\s+(\d+)\s+(\d+)\s+(\d+)\s")
 
 
-def decode_ppm(payload: bytes) -> tuple[int, int, float]:
-    """Parse a binary netpbm P6 image: (width, height, mean pixel byte).
-
-    Header is ASCII "P6 <w> <h> <maxval>" + single whitespace, then
-    w*h*3 raw RGB bytes. Raises ValueError on malformed input.
-    """
-    m = _PPM_HEADER.match(payload)
+def _ppm_frame(payload: bytes, off: int = 0) -> tuple[int, int, bytes, int]:
+    """Read the P6 frame whose header starts at ``off``: (width,
+    height, w*h*3 RGB pixel bytes, offset just past the pixels)."""
+    m = _PPM_HEADER.match(payload, off)
     if not m:
         raise ValueError("not a binary PPM (P6) payload")
     w, h, maxval = int(m.group(1)), int(m.group(2)), int(m.group(3))
     if maxval > 255:
         raise ValueError("16-bit PPM not supported")
-    pix = payload[m.end() : m.end() + w * h * 3]
+    end = m.end() + w * h * 3
+    pix = payload[m.end() : end]
     if len(pix) != w * h * 3:
         raise ValueError("truncated PPM pixel data")
-    mean = (sum(pix) / len(pix)) if pix else 0.0
-    return w, h, mean
+    return w, h, pix, end
 
 
-def decode_bmp(payload: bytes) -> tuple[int, int, float]:
-    """Parse an uncompressed 24-bit BMP: (width, |height|, mean pixel
-    byte over the RGB triples, excluding row padding).
-
-    Handles the 4-byte row alignment and top-down images (negative
-    height). Raises ValueError on other bit depths / compression.
-    """
+def _bmp_raster(payload: bytes) -> tuple[int, int, bytes]:
+    """Read an uncompressed 24-bit BMP: (width, |height|, RGB pixel
+    bytes in top-down row order). Rows are stored bottom-up for a
+    positive height and top-down for a negative one, each padded to a
+    4-byte boundary; the padding is dropped."""
     if payload[:2] != b"BM" or len(payload) < 54:
         raise ValueError("not a BMP payload")
     off = int.from_bytes(payload[10:14], "little")
@@ -142,27 +160,59 @@ def decode_bmp(payload: bytes) -> tuple[int, int, float]:
         raise ValueError("only uncompressed 24-bit BMP supported")
     height = abs(h)
     row_bytes = w * 3
-    stride = (row_bytes + 3) & ~3  # rows pad to 4-byte boundaries
-    total = 0
-    n = 0
-    for r in range(height):
+    stride = (row_bytes + 3) & ~3
+    rows = []
+    for y in range(height):
+        r = height - 1 - y if h > 0 else y
         row = payload[off + r * stride : off + r * stride + row_bytes]
         if len(row) != row_bytes:
             raise ValueError("truncated BMP pixel data")
-        total += sum(row)
-        n += row_bytes
-    return w, height, (total / n) if n else 0.0
+        rows.append(row)
+    return w, height, b"".join(rows)
+
+
+def _rgb_raster(payload: bytes) -> tuple[int, int, bytes]:
+    """Sniff the magic bytes: (width, height, top-down RGB bytes) of a
+    PPM or BMP payload."""
+    if payload[:2] == b"P6":
+        return _ppm_frame(payload)[:3]
+    if payload[:2] == b"BM":
+        return _bmp_raster(payload)
+    raise ValueError("unsupported image format (only P6 PPM / 24-bit BMP)")
+
+
+def _mean_byte(pix: bytes) -> float:
+    """Integer byte sum over integer count, so the double is exact to
+    one rounding in every engine."""
+    return sum(pix) / len(pix) if pix else 0.0
+
+
+def decode_ppm(payload: bytes) -> tuple[int, int, float]:
+    """Parse a binary netpbm P6 image: (width, height, mean pixel byte).
+
+    Header is ASCII "P6 <w> <h> <maxval>" + single whitespace, then
+    w*h*3 raw RGB bytes. Raises ValueError on malformed input.
+    """
+    w, h, pix, _ = _ppm_frame(payload)
+    return w, h, _mean_byte(pix)
+
+
+def decode_bmp(payload: bytes) -> tuple[int, int, float]:
+    """Parse an uncompressed 24-bit BMP: (width, |height|, mean pixel
+    byte over the RGB triples, excluding row padding).
+
+    Handles the 4-byte row alignment and top-down images (negative
+    height). Raises ValueError on other bit depths / compression.
+    """
+    w, h, pix = _bmp_raster(payload)
+    return w, h, _mean_byte(pix)
 
 
 def decode_image(payload: bytes) -> tuple[int, int, float]:
     """Sniff the magic bytes and decode PPM or BMP; other formats need
-    codec libraries absent from this environment → ValueError (callers
-    wanting a hard NotImplementedError use ``decoder=None``)."""
-    if payload[:2] == b"P6":
-        return decode_ppm(payload)
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    raise ValueError("unsupported image format (only P6 PPM / 24-bit BMP)")
+    codec libraries absent from this environment → ValueError."""
+    w, h, pix = _rgb_raster(payload)
+    return w, h, _mean_byte(pix)
 
 
 IMAGE_FEATURE_SCHEMA = (
@@ -174,21 +224,9 @@ def extract_image_features(assets: DataFrame) -> DataFrame:
     """REAL decode path: parse each binary payload with
     :func:`decode_image` (Arrow-batched, one Python crossing per batch)
     and emit decoded dimensions + pixel statistics."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_image(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "mean_pixel": [d[2] for d in decoded],
-                    "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                }
-            )
-
-    return assets.mapInPandas(run, schema=IMAGE_FEATURE_SCHEMA)
+    return _map_payloads(
+        assets, lambda p: (*decode_image(p), len(p)), IMAGE_FEATURE_SCHEMA
+    )
 
 
 def synthetic_ppm_assets(docs: DataFrame) -> DataFrame:
@@ -197,99 +235,11 @@ def synthetic_ppm_assets(docs: DataFrame) -> DataFrame:
     decoded output is predictable arithmetic a SQL oracle states in
     closed form while the decoder still parses genuine image bytes."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 3 + did % 7
-                payloads.append(
-                    b"P6\n%d %d\n255\n" % (w, h) + bytes([did % 256]) * (3 * w * h)
-                )
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
+    def make(did: int) -> bytes:
+        w, h = 4 + did % 13, 3 + did % 7
+        return b"P6\n%d %d\n255\n" % (w, h) + bytes([did % 256]) * (3 * w * h)
 
-    return spread_small_scan(docs.select("doc_id")).mapInPandas(
-        run, schema="asset_id long, payload binary"
-    )
-
-
-RESIZE_SCHEMA = "asset_id long, kind string, payload binary, width int, height int"
-
-
-def resize_assets(
-    assets: DataFrame,
-    target: tuple[int, int] = (32, 32),
-    resizer: Callable[[bytes, tuple[int, int]], bytes] | None = None,
-) -> DataFrame:
-    """Resize stub: same Arrow-batched shape as a real PIL/opencv
-    resize. The default deterministic fake truncates/pads the payload
-    to target_w*target_h bytes (a real resizer plugs in via
-    ``resizer``; None raises NotImplementedError at execution, marking
-    the codec-less environment).
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w, h = target
-        for pdf in batches:
-            if resizer is not None:
-                out = [resizer(bytes(p), target) for p in pdf["payload"]]
-            else:
-                raise NotImplementedError(
-                    "real image resize requires codec libraries not present "
-                    "in this environment; pass a resizer callable"
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "payload": out,
-                    "width": [w] * len(pdf),
-                    "height": [h] * len(pdf),
-                }
-            )
-
-    return assets.mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-def fake_resizer(payload: bytes, target: tuple[int, int]) -> bytes:
-    """Deterministic stand-in: truncate/zero-pad to w*h bytes."""
-    n = target[0] * target[1]
-    return payload[:n].ljust(n, b"\0")
-
-
-FRAME_SCHEMA = "asset_id long, frame_index int, frame_payload binary, frame_sha string"
-
-
-def sample_frames(
-    assets: DataFrame, n_frames: int = 4, frame_bytes: int = 64
-) -> DataFrame:
-    """Frame-sampling stub for video-shaped payloads: emit ``n_frames``
-    evenly spaced byte windows per asset (1→N row explosion through
-    Arrow — the real shape of video decode output). Deterministic, so
-    the row multiplication and schema handling are fully testable
-    without a codec.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "asset_id": [],
-                "frame_index": [],
-                "frame_payload": [],
-                "frame_sha": [],
-            }
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                raw = bytes(payload)
-                step = max(len(raw) // n_frames, 1)
-                for i in range(n_frames):
-                    frame = raw[i * step : i * step + frame_bytes]
-                    rows["asset_id"].append(aid)
-                    rows["frame_index"].append(i)
-                    rows["frame_payload"].append(frame)
-                    rows["frame_sha"].append(hashlib.sha256(frame).hexdigest())
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(run, schema=FRAME_SCHEMA)
+    return _synthetic_assets(docs, make)
 
 
 # ---------------------------------------------------------------------------
@@ -395,23 +345,9 @@ AUDIO_FEATURE_SCHEMA = (
 def extract_audio_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched WAV feature extraction over (asset_id, payload) —
     same one-Python-crossing-per-batch shape as the image path."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_wav(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "n_channels": [r[0] for r in rows],
-                    "sample_rate": [r[1] for r in rows],
-                    "bits": [r[2] for r in rows],
-                    "duration_sec": [r[3] for r in rows],
-                    "mean_abs": [r[4] for r in rows],
-                    "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                }
-            )
-
-    return assets.mapInPandas(run, schema=AUDIO_FEATURE_SCHEMA)
+    return _map_payloads(
+        assets, lambda p: (*decode_wav(p), len(p)), AUDIO_FEATURE_SCHEMA
+    )
 
 
 def synthetic_wav_assets(docs: DataFrame) -> DataFrame:
@@ -421,19 +357,12 @@ def synthetic_wav_assets(docs: DataFrame) -> DataFrame:
     output is closed-form arithmetic a SQL oracle can state while the
     decoder still parses genuine RIFF bytes."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 400 + 4 * (did % 100)
-                amp = (did * 7) % 20000 - 10000
-                payloads.append(make_wav(1, 8000, [amp] * n))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
+    def make(did: int) -> bytes:
+        n = 400 + 4 * (did % 100)
+        amp = (did * 7) % 20000 - 10000
+        return make_wav(1, 8000, [amp] * n)
 
-    return spread_small_scan(docs.select("doc_id")).mapInPandas(
-        run, schema="asset_id long, payload binary"
-    )
+    return _synthetic_assets(docs, make)
 
 
 # ---------------------------------------------------------------------------
@@ -530,22 +459,7 @@ def extract_image_headers(assets: DataFrame) -> DataFrame:
     """Arrow-batched header-only metadata extraction — the cheap first
     pass of an image curation pipeline (filter by dimensions/depth
     before paying for any real decode)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_image_header(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "format": [r[0] for r in rows],
-                    "width": [r[1] for r in rows],
-                    "height": [r[2] for r in rows],
-                    "bit_depth": [r[3] for r in rows],
-                    "n_channels": [r[4] for r in rows],
-                }
-            )
-
-    return assets.mapInPandas(run, schema=IMAGE_HEADER_SCHEMA)
+    return _map_payloads(assets, parse_image_header, IMAGE_HEADER_SCHEMA)
 
 
 def make_png(width: int, height: int, bit_depth: int = 8) -> bytes:
@@ -606,19 +520,11 @@ def synthetic_image_header_assets(docs: DataFrame) -> DataFrame:
     doc_id % 3, dimensions 16+id%50 x 9+id%40 — closed-form metadata a
     SQL oracle states exactly while the parser walks genuine bytes."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 50, 9 + did % 40
-                maker = (make_png, make_jpeg_header, make_gif)[did % 3]
-                payloads.append(maker(w, h))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
+    def make(did: int) -> bytes:
+        maker = (make_png, make_jpeg_header, make_gif)[did % 3]
+        return maker(16 + did % 50, 9 + did % 40)
 
-    return spread_small_scan(docs.select("doc_id")).mapInPandas(
-        run, schema="asset_id long, payload binary"
-    )
+    return _synthetic_assets(docs, make)
 
 
 # ---------------------------------------------------------------------------
@@ -638,54 +544,31 @@ def decode_ppm_stream(payload: bytes) -> list[tuple[int, int, int, float]]:
     mean_pixel byte)]. Raises ValueError on a malformed or truncated
     frame — real parse errors surface, nothing is faked."""
     frames = []
-    off, idx = 0, 0
+    off = 0
     while off < len(payload):
-        # _PPM_HEADER is ^-anchored; match against the remaining slice
-        # (frames are small — the copy is bounded by one frame header
-        # plus pixels, not the whole stream at once per match)
-        rest = payload[off:]
-        m = _PPM_HEADER.match(rest)
-        if not m:
-            raise ValueError(f"frame {idx}: not a P6 header at offset {off}")
-        w, h, maxval = int(m.group(1)), int(m.group(2)), int(m.group(3))
-        if maxval > 255:
-            raise ValueError(f"frame {idx}: 16-bit PPM not supported")
-        pix = rest[m.end() : m.end() + w * h * 3]
-        if len(pix) != w * h * 3:
-            raise ValueError(f"frame {idx}: truncated pixel data")
-        frames.append((idx, w, h, sum(pix) / len(pix) if pix else 0.0))
-        off += m.end() + w * h * 3
-        idx += 1
+        idx = len(frames)
+        try:
+            w, h, pix, end = _ppm_frame(payload, off)
+        except ValueError as e:
+            raise ValueError(f"frame {idx}: {e} at offset {off}") from None
+        frames.append((idx, w, h, _mean_byte(pix)))
+        off = end
     return frames
 
 
 def sample_video_frames(assets: DataFrame, stride: int = 2) -> DataFrame:
     """Decode every frame of each concatenated-PPM payload and keep
     every ``stride``-th (the video curation primitive: train on a
-    frame subsample, not 30 fps). One Arrow-batched mapInPandas
-    crossing with the declared 1→N VIDEO_FRAME_SCHEMA — decode
+    frame subsample, not 30 fps). One Arrow-batched crossing
+    (:func:`_map_payloads`) with the declared 1→N VIDEO_FRAME_SCHEMA — decode
     parallelism is the asset partitioning, per-task memory is one
     batch of payloads, and the kept-frame stream is immediately
     columnar for downstream relational ops."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "asset_id": [], "frame_index": [], "width": [],
-                "height": [], "mean_pixel": [],
-            }
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                for idx, w, h, mean in decode_ppm_stream(bytes(payload)):
-                    if idx % stride:
-                        continue
-                    rows["asset_id"].append(aid)
-                    rows["frame_index"].append(idx)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_pixel"].append(mean)
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(run, schema=VIDEO_FRAME_SCHEMA)
+    return _map_payloads(
+        assets,
+        lambda p: [f for f in decode_ppm_stream(p) if f[0] % stride == 0],
+        VIDEO_FRAME_SCHEMA,
+    )
 
 
 def synthetic_ppm_stream_assets(docs: DataFrame) -> DataFrame:
@@ -695,22 +578,15 @@ def synthetic_ppm_stream_assets(docs: DataFrame) -> DataFrame:
     arithmetic a SQL oracle can state, while the decoder still walks
     genuine concatenated P6 bytes."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n_frames, w, h = 2 + did % 4, 3 + did % 5, 2
-                buf = b""
-                for f in range(n_frames):
-                    buf += b"P6\n%d %d\n255\n" % (w, h)
-                    buf += bytes([(did * 11 + 17 * f) % 256]) * (3 * w * h)
-                payloads.append(buf)
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
+    def make(did: int) -> bytes:
+        w, h = 3 + did % 5, 2
+        return b"".join(
+            b"P6\n%d %d\n255\n" % (w, h)
+            + bytes([(did * 11 + 17 * f) % 256]) * (3 * w * h)
+            for f in range(2 + did % 4)
+        )
 
-    return spread_small_scan(docs.select("doc_id")).mapInPandas(
-        run, schema="asset_id long, payload binary"
-    )
+    return _synthetic_assets(docs, make)
 
 
 # ---------------------------------------------------------------------------
@@ -723,37 +599,8 @@ def _gray_raster(payload: bytes) -> tuple[int, int, list[int]]:
     per-pixel gray sums r+g+b in image row order, top-down). BMP rows
     are stored bottom-up for positive heights — re-ordered here so the
     same image hashes identically across containers."""
-    if payload[:2] == b"P6":
-        m = _PPM_HEADER.match(payload)
-        if not m:
-            raise ValueError("not a binary PPM (P6) payload")
-        w, h, maxval = int(m.group(1)), int(m.group(2)), int(m.group(3))
-        if maxval > 255:
-            raise ValueError("16-bit PPM not supported")
-        pix = payload[m.end() : m.end() + w * h * 3]
-        if len(pix) != w * h * 3:
-            raise ValueError("truncated PPM pixel data")
-        gray = [pix[i] + pix[i + 1] + pix[i + 2] for i in range(0, len(pix), 3)]
-        return w, h, gray
-    if payload[:2] == b"BM":
-        off = int.from_bytes(payload[10:14], "little")
-        w = int.from_bytes(payload[18:22], "little", signed=True)
-        h = int.from_bytes(payload[22:26], "little", signed=True)
-        bpp = int.from_bytes(payload[28:30], "little")
-        comp = int.from_bytes(payload[30:34], "little")
-        if bpp != 24 or comp != 0:
-            raise ValueError("only uncompressed 24-bit BMP supported")
-        height = abs(h)
-        stride = (w * 3 + 3) & ~3
-        gray: list[int] = []
-        for y in range(height):
-            r = height - 1 - y if h > 0 else y  # bottom-up storage
-            row = payload[off + r * stride : off + r * stride + w * 3]
-            if len(row) != w * 3:
-                raise ValueError("truncated BMP pixel data")
-            gray.extend(row[i] + row[i + 1] + row[i + 2] for i in range(0, w * 3, 3))
-        return w, height, gray
-    raise ValueError("unsupported image format (only P6 PPM / 24-bit BMP)")
+    w, h, pix = _rgb_raster(payload)
+    return w, h, [pix[i] + pix[i + 1] + pix[i + 2] for i in range(0, len(pix), 3)]
 
 
 def ahash_image(payload: bytes, grid: int = 8) -> str:
@@ -800,17 +647,7 @@ def image_ahash(assets: DataFrame, grid: int = 8) -> DataFrame:
     tolerant near-dup search reuses the banded-LSH shape from
     operators/dedup.py (split the 64 bits into 4x16-bit bands, bucket
     join per band) — the fingerprint is deliberately band-splittable."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "ahash": [ahash_image(bytes(p), grid) for p in pdf["payload"]],
-                }
-            )
-
-    return assets.mapInPandas(run, schema=AHASH_SCHEMA)
+    return _map_payloads(assets, lambda p: (ahash_image(p, grid),), AHASH_SCHEMA)
 
 
 def synthetic_pattern_ppm_assets(docs: DataFrame) -> DataFrame:
@@ -821,30 +658,23 @@ def synthetic_pattern_ppm_assets(docs: DataFrame) -> DataFrame:
     200 + id%56) — so byte-identical dedup (content_sha) sees every
     image as unique but the perceptual hash collapses each pattern
     class to one fingerprint the SQL oracle states as a literal."""
+    side = 16
+    half = side // 2
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        side = 16
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                pat, dark, bright = did % 4, did % 30, 200 + did % 56
-                buf = bytearray(b"P6\n%d %d\n255\n" % (side, side))
-                half = side // 2
-                for y in range(side):
-                    for x in range(side):
-                        if pat == 0:
-                            lit = x < half
-                        elif pat == 1:
-                            lit = y < half
-                        elif pat == 2:
-                            lit = (x < half) == (y < half)
-                        else:
-                            lit = x >= half
-                        buf += bytes([bright if lit else dark]) * 3
-                payloads.append(bytes(buf))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "payload": payloads})
+    def make(did: int) -> bytes:
+        pat, dark, bright = did % 4, did % 30, 200 + did % 56
+        buf = bytearray(b"P6\n%d %d\n255\n" % (side, side))
+        for y in range(side):
+            for x in range(side):
+                if pat == 0:
+                    lit = x < half
+                elif pat == 1:
+                    lit = y < half
+                elif pat == 2:
+                    lit = (x < half) == (y < half)
+                else:
+                    lit = x >= half
+                buf += bytes([bright if lit else dark]) * 3
+        return bytes(buf)
 
-    return spread_small_scan(docs.select("doc_id")).mapInPandas(
-        run, schema="asset_id long, payload binary"
-    )
+    return _synthetic_assets(docs, make)

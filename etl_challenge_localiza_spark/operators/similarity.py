@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.localrel import values_table
-from ..functions.vectors import cosine, l2_norm
+from ..functions.vectors import cosine, embedding_dim, l2_norm
 from ..session import shuffle_width
 
 
@@ -84,7 +84,7 @@ def cosine_nn_within_label(emb: DataFrame, round_digits: int = 6) -> DataFrame:
     pair-quadratic block join — 6.0 s → 1.7 s at sf0.1, bit-identical
     output. One 1-row dim probe at plan build pays for it.
     """
-    from ..functions.vectors import cosine_fixed, embedding_dim
+    from ..functions.vectors import cosine_fixed
     from ..sources.readers import spread_small_scan
 
     dim = embedding_dim(emb)
@@ -218,10 +218,11 @@ def centroid_literal(emb: DataFrame, n_centroids: int = 8) -> F.Column:
     array-of-structs literal usable in per-row expressions.
 
     The ``vec_id < n`` filter pushes into the parquet scan, so this is
-    a tiny driver action, not a data collect.
+    a tiny driver action, not a data collect. A seed row with a NULL
+    embedding is skipped (no centroid for its vec_id).
     """
     rows = (
-        emb.filter(F.col("vec_id") < n_centroids)
+        emb.filter((F.col("vec_id") < n_centroids) & F.col("embedding").isNotNull())
         .select("vec_id", "embedding")
         .collect()
     )
@@ -251,7 +252,8 @@ def ivf_assign(emb: DataFrame, n_centroids: int = 8) -> DataFrame:
     shuffled n_centroids× the corpus). This is the partitioning step
     that makes ANN search sub-linear: queries probe only their
     centroid's bucket. Returns (vec_id, centroid_id, dist) — exact,
-    engine-portable.
+    engine-portable. Rows with a NULL embedding are skipped: they get
+    no row (and are never a seed).
     """
     return ivf_assign_against(emb, centroid_literal(emb, n_centroids))
 
@@ -263,7 +265,9 @@ def ivf_assign_against(df: DataFrame, cents: F.Column) -> DataFrame:
     against the PERSISTED codebook (model parameters loaded once),
     never re-deriving seeds from the batch, so the assignment is a
     pure per-vector function and the built index is identical under
-    any micro-batch slicing."""
+    any micro-batch slicing. Rows with a NULL embedding are skipped:
+    their NULL distance would sort first in ``array_min`` and assign
+    them to the first centroid."""
     # struct ordering is lexicographic → min = (lowest dist, then lowest
     # centroid_id): identical tie semantics to the oracle's row_number.
     best = F.array_min(
@@ -275,8 +279,12 @@ def ivf_assign_against(df: DataFrame, cents: F.Column) -> DataFrame:
             ),
         )
     )
-    return df.select("vec_id", best.alias("b")).select(
-        "vec_id", F.col("b.centroid_id").alias("centroid_id"), F.col("b.dist").alias("dist")
+    return (
+        df.filter(F.col("embedding").isNotNull())
+        .select("vec_id", best.alias("b"))
+        .select(
+            "vec_id", F.col("b.centroid_id").alias("centroid_id"), F.col("b.dist").alias("dist")
+        )
     )
 
 
@@ -330,7 +338,7 @@ def brp_lsh_ann_pairs(
     non-NULL embedding returns the empty pair frame, and mixed
     embedding widths raise ``ValueError`` (see
     :func:`functions.vectors.embedding_dim`)."""
-    from ..functions.vectors import dot_fixed_sql, embedding_dim
+    from ..functions.vectors import dot_fixed_sql
 
     if not emb.filter(F.col("embedding").isNotNull()).head(1):
         return emb.sparkSession.createDataFrame(
@@ -435,9 +443,7 @@ def brp_lsh_ann_pairs(
     )
 
 
-def label_pca_variance(
-    emb: DataFrame, iters: int = 24, d: int | None = None
-) -> DataFrame:
+def label_pca_variance(emb: DataFrame, iters: int = 24) -> DataFrame:
     """Per-label PCA summary — cluster-compactness signal (collapsed
     embedding groups have explained_ratio → 1) via DETERMINISTIC power
     iteration on the EXACT integer Gram matrix. Full-oracle since r12
@@ -468,36 +474,27 @@ def label_pca_variance(
        The only doubles are the final three divisions, identically
        parenthesized in both engines, rounded HALF_UP at 6dp
        (decimal-replay of SQL round(), the mmr_rerank pattern).
+
+    The width ``d`` comes from :func:`functions.vectors.embedding_dim`:
+    NULL embeddings are ignored, an input with no non-NULL embedding
+    returns the empty summary, and mixed widths raise ``ValueError``.
     """
     from decimal import ROUND_HALF_UP, Decimal
 
     from .kmeans import SCALE
 
     spark = emb.sparkSession
-    if d is None:
-        # infer the embedding dimension from the data with a one-row
-        # MAX aggregate over non-null embeddings — a hardcoded d
-        # crashes on wider embeddings and pays d² Gram work on zero
-        # padding for narrower ones. A head(1) probe (the first cut)
-        # could land on a NULL embedding (TypeError) or, under
-        # non-uniform widths, on whichever row the plan returned first
-        # (nondeterministic d) — ADVICE r13. UNIFORM-WIDTH ASSUMPTION:
-        # the Gram accumulation below zip-indexes every vector against
-        # 0..d-1, so all non-null embeddings must share one width;
-        # max() makes the probe deterministic and null-safe, not
-        # width-mixing-safe.
-        probe = (
-            emb.filter(F.col("embedding").isNotNull())
-            .agg(F.max(F.size("embedding")).alias("dim"))
-            .first()
+    try:
+        d = embedding_dim(emb)
+    except ValueError:
+        # no non-NULL embedding: the empty summary; mixed widths re-raise
+        if emb.filter(F.col("embedding").isNotNull()).head(1):
+            raise
+        return spark.createDataFrame(
+            [],
+            "label long, n_vectors long, total_variance double, "
+            "leading_eigenvalue double, explained_ratio double",
         )
-        if probe is None or probe["dim"] is None:
-            return spark.createDataFrame(
-                [],
-                "label long, n_vectors long, total_variance double, "
-                "leading_eigenvalue double, explained_ratio double",
-            )
-        d = int(probe["dim"])
     xs = emb.select(
         "label",
         F.transform(

@@ -1599,7 +1599,8 @@ from documents
 )
 def q_multimodal_features(spark, sf_dir):
     """Binary-payload metadata extraction through the REAL Arrow
-    mapInPandas path (decode stubbed; byte length + sha256 oracle-checked)."""
+    mapInPandas path (byte length + sha256 oracle-checked; width/height
+    come from a deterministic payload hash and are not projected)."""
     assets = assets_from_documents(load_table(spark, sf_dir, "documents"))
     return extract_features(assets).select("asset_id", "kind", "n_bytes", "content_sha")
 
@@ -1626,8 +1627,8 @@ def q_multimodal_decode(spark, sf_dir):
     oracle states the decoded values in closed form (header = 9 bytes +
     the two dimension strings; raster = 3wh constant bytes), so a
     decoder that misparses headers, strides or pixel data hash-fails.
-    Compressed formats (JPEG/PNG) still require absent codec libs —
-    documented NotImplementedError path."""
+    Compressed formats (JPEG/PNG) still require absent codec libs:
+    decode_image refuses them with ValueError."""
     from .operators.multimodal import extract_image_features, synthetic_ppm_assets
 
     docs = load_table(spark, sf_dir, "documents")

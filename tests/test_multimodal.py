@@ -5,7 +5,6 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.errors import PythonException
 
 from etl_challenge_localiza_spark.operators.multimodal import (
     assets_from_documents,
@@ -37,41 +36,24 @@ def test_extract_features_deterministic(spark):
     assert (r["width"], r["height"]) == (r2["width"], r2["height"])
 
 
-def test_real_decoder_is_stubbed(spark):
-    df = extract_features(_assets(spark), decoder=None)
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        df.collect()
+@pytest.mark.parametrize(
+    "extractor, schema",
+    [
+        ("extract_features", "FEATURE_SCHEMA"),
+        ("extract_image_features", "IMAGE_FEATURE_SCHEMA"),
+        ("extract_audio_features", "AUDIO_FEATURE_SCHEMA"),
+        ("extract_image_headers", "IMAGE_HEADER_SCHEMA"),
+        ("sample_video_frames", "VIDEO_FRAME_SCHEMA"),
+        ("image_ahash", "AHASH_SCHEMA"),
+    ],
+)
+def test_extractors_on_empty_assets_keep_declared_schema(spark, extractor, schema):
+    from etl_challenge_localiza_spark.operators import multimodal
 
-
-def test_resize_stub_shapes(spark):
-    from etl_challenge_localiza_spark.operators.multimodal import (
-        fake_resizer,
-        resize_assets,
-    )
-
-    out = resize_assets(_assets(spark), target=(8, 4), resizer=fake_resizer).first()
-    assert len(bytes(out["payload"])) == 32
-    assert (out["width"], out["height"]) == (8, 4)
-
-
-def test_resize_real_path_stubbed(spark):
-    from etl_challenge_localiza_spark.operators.multimodal import resize_assets
-
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        resize_assets(_assets(spark), resizer=None).collect()
-
-
-def test_frame_sampling_explodes_rows(spark):
-    from etl_challenge_localiza_spark.operators.multimodal import sample_frames
-
-    rows = sample_frames(_assets(spark), n_frames=4, frame_bytes=3).collect()
-    assert len(rows) == 4  # 1 asset → 4 frames
-    assert [r["frame_index"] for r in rows] == [0, 1, 2, 3]
-    raw = "héllo wörld".encode()
-    assert bytes(rows[0]["frame_payload"]) == raw[:3]
-    import hashlib as _h
-
-    assert rows[0]["frame_sha"] == _h.sha256(raw[:3]).hexdigest()
+    empty = spark.createDataFrame([], "asset_id long, kind string, payload binary")
+    out = getattr(multimodal, extractor)(empty)
+    assert out.collect() == []
+    assert out.schema == spark.createDataFrame([], getattr(multimodal, schema)).schema
 
 
 # ---------------------------------------------------------------------------

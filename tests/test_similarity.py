@@ -129,6 +129,43 @@ def test_label_pca_variance_matches_numpy(spark):
     )
 
 
+def test_label_pca_variance_ragged_widths_raise(spark):
+    """Mixed embedding widths raise instead of summarizing a truncated
+    Gram matrix (regression: n_vectors=2 for 3 rows and a negative
+    leading eigenvalue); an all-NULL input is the empty summary."""
+    from etl_challenge_localiza_spark.operators.similarity import label_pca_variance
+
+    ragged = spark.createDataFrame(
+        [(1, [1.0]), (1, [0.0, 1.0]), (1, [1.0, 1.0])],
+        "label long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="mixed widths"):
+        label_pca_variance(ragged).collect()
+    nulls = spark.createDataFrame([(1, None)], "label long, embedding array<float>")
+    assert label_pca_variance(nulls).collect() == []
+
+
+def test_ivf_and_kmeans_ignore_null_embeddings(spark):
+    """A NULL-embedding row changes nothing: ivf_assign gives it no row
+    (regression: centroid 0 with a NULL dist, or a TypeError when it
+    is a seed) and kmeans_fit / kmeans_summary skip it (regression:
+    TypeError from the local Lloyd fit)."""
+    from etl_challenge_localiza_spark.operators.kmeans import kmeans_fit, kmeans_summary
+    from etl_challenge_localiza_spark.operators.similarity import ivf_assign
+
+    vecs = [(i, [float(i % 3), float(i // 3), 1.0], i % 2) for i in range(8)]
+    clean = spark.createDataFrame(vecs, EMB_COLS)
+    want_ivf = sorted(ivf_assign(clean, n_centroids=3).collect())
+    want_fit = kmeans_fit(clean, k=3, max_sweeps=3)
+    want_sum = kmeans_summary(clean, k=3, max_sweeps=3).collect()
+    # -1 is a seed id (vec_id < k), 8 is not
+    for null_id in (-1, 8):
+        dirty = spark.createDataFrame(vecs + [(null_id, None, 0)], EMB_COLS)
+        assert sorted(ivf_assign(dirty, n_centroids=3).collect()) == want_ivf
+        assert kmeans_fit(dirty, k=3, max_sweeps=3) == want_fit
+        assert kmeans_summary(dirty, k=3, max_sweeps=3).collect() == want_sum
+
+
 def test_brp_lsh_recall_floor_vs_brute_force(spark):
     """Accuracy bound for the brp_lsh_ann_pairs query (the
     IVF path has recall@10 = 1.0 vs brute force; this closes the same
