@@ -140,28 +140,3 @@ def norm_sq_fixed(a: str, d: int) -> Column:
 def cosine_fixed(a: str, b: str, d: int) -> Column:
     return F.expr(cosine_fixed_sql(a, b, d))
 
-
-def make_cosine_pandas_udf():
-    """Arrow-vectorized scalar pandas_udf cosine — the sanctioned
-    Python fallback when an expression outgrows built-ins (numpy BLAS
-    per batch, one Arrow crossing per ~10k rows instead of per row).
-
-    tests/test_similarity.py asserts it agrees with the JVM fold
-    :func:`cosine` to float64 resolution; the JVM fold stays the
-    default because it needs no Python workers at all.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # no parameter annotations: this module uses postponed annotations
-    # (PEP 563), which would reach pandas_udf's type-hint inference as
-    # strings and be rejected — the explicit evalType default applies.
-    def _cosine(a, b):
-        am = np.stack(a.to_numpy()).astype("float64")
-        bm = np.stack(b.to_numpy()).astype("float64")
-        dots = np.einsum("ij,ij->i", am, bm)
-        norms = np.linalg.norm(am, axis=1) * np.linalg.norm(bm, axis=1)
-        return pd.Series(dots / norms)
-
-    return pandas_udf(_cosine, "double")

@@ -24,10 +24,11 @@ Scale design:
   pair present in the word. Pure function of (word, merges) — results
   are partitioning-independent.
 
-BPE is iterative and therefore not SQL-expressible — the registry
-entries are rows-only by design; correctness is pinned by
-tests/test_bpe.py (from-scratch reference trainer/encoder comparison,
-hand-derived merges, fixpoint and conservation properties).
+BPE is iterative, yet a fit of fixed length is SQL-replayable: the
+``bpe_train_encode`` registry query's DuckDB oracle chains one CTE
+per exact-greedy sweep (registry ``_bpe_sweep``). tests/test_bpe.py
+adds a from-scratch reference trainer, hand-derived merges, and
+conservation properties.
 """
 
 from __future__ import annotations
@@ -78,40 +79,18 @@ def _word_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def train_bpe_merges(
-    docs: DataFrame,
-    n_merges: int = 8,
-    batch: int = 1,
-    stats: dict | None = None,
-) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` merges from the corpus. Each sweep re-segments
-    the distributed vocabulary under the merges so far, counts adjacent
-    symbol pairs weighted by word frequency, and accepts up to ``batch``
-    merges from ONE collect of the top candidates (count desc, pair asc
-    — a total tiebreak, so training is deterministic for any
-    partitioning).
-
-    ``batch=1`` is EXACT greedy BPE (Sennrich et al. 2016). ``batch>1``
-    is the standard batched relaxation (ADVICE r6/r7: the per-merge
-    ``limit(1).collect()`` driver round-trip made training latency
-    O(n_merges) full corpus sweeps): within a sweep, a candidate is
-    accepted only if its symbols are DISJOINT from every
-    earlier-accepted pair's symbols and from their concatenations —
-    under that condition merging the earlier pairs cannot create,
-    destroy, or relocate any of the candidate's occurrences, so each
-    accepted pair's measured count equals its true count at merge time.
-    The only divergence from exact greedy: a pair CREATED by an earlier
-    merge in the same sweep (e.g. ('x','ab') after ('a','b')) is not a
-    candidate until the next sweep, so it can be learned later than
-    exact greedy would learn it. Sweep count drops from ``n_merges`` to
-    ~``n_merges/batch``; pass ``stats={}`` to read back
-    ``stats['sweeps']``.
+def train_bpe_merges(docs: DataFrame, n_merges: int = 8) -> list[tuple[str, str]]:
+    """Learn up to ``n_merges`` merges from the corpus: EXACT greedy
+    BPE (Sennrich et al. 2016). Each sweep re-segments the distributed
+    vocabulary under the merges so far, counts adjacent symbol pairs
+    weighted by word frequency, and accepts the single top candidate
+    (count desc, pair asc — a total tiebreak, so training is
+    deterministic for any partitioning); it stops early once no pair
+    occurs at least twice.
     """
     vocab = _word_counts(docs).localCheckpoint()
     merges: list[tuple[str, str]] = []
-    sweeps = 0
-    while len(merges) < n_merges:
-        sweeps += 1
+    for _ in range(n_merges):
         ranks = {p: i for i, p in enumerate(merges)}
 
         def count_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -129,36 +108,17 @@ def train_bpe_merges(
                     }
                 )
 
-        want = min(batch, n_merges - len(merges))
-        # over-fetch so symbol-overlapping candidates can be skipped and
-        # the batch still fills; one collect either way
         top = (
             vocab.mapInPandas(count_pairs, schema="a string, b string, n long")
             .groupBy("a", "b")
             .agg(F.sum("n").alias("n"))
             .orderBy(F.col("n").desc(), F.col("a").asc(), F.col("b").asc())
-            .limit(max(4 * want, 16) if want > 1 else 1)
+            .limit(1)
             .collect()
         )
         if not top or top[0]["n"] < 2:
             break
-        used: set[str] = set()
-        accepted = 0
-        for row in top:
-            if accepted >= want or row["n"] < 2:
-                break
-            a, b = row["a"], row["b"]
-            # disjointness: symbols unseen in this batch, and not equal
-            # to any concatenation an earlier accepted merge creates
-            if a in used or b in used:
-                continue
-            merges.append((a, b))
-            used.update((a, b, a + b))
-            accepted += 1
-        # the first n>=2 candidate always lands (used starts empty per
-        # sweep), so every sweep makes progress — no livelock
-    if stats is not None:
-        stats["sweeps"] = sweeps
+        merges.append((top[0]["a"], top[0]["b"]))
     return merges
 
 

@@ -205,7 +205,8 @@ def portable_hash60(c, salt: str = ""):
     md5(salt || value). DuckDB mirrors it as
     ``cast(concat('0x', substr(md5(concat(salt, v)), 1, 15)) as bigint)``
     — the same trick the deterministic_split / weighted_sample_docs
-    oracles use."""
+    oracles use. A NULL value hashes to NULL; DuckDB's ``concat`` skips
+    NULL arguments, so only its ``||`` form agrees on NULL input."""
     base = F.concat(F.lit(salt), c) if salt else c
     return F.conv(F.substring(F.md5(base), 1, 15), 16, 10).cast("bigint")
 

@@ -9,7 +9,7 @@ Semantics (keyed upsert):
 
 Plan shape: ONE full-outer join on the key; at scale the join
 benefits from both sides being bucketed on the key (zero-exchange,
-see sources.sinks.write_bucketed) — the same layout Delta's
+see ``DataFrameWriter.bucketBy``) — the same layout Delta's
 optimized-write keeps.
 """
 

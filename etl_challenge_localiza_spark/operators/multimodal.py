@@ -187,30 +187,11 @@ def _mean_byte(pix: bytes) -> float:
     return sum(pix) / len(pix) if pix else 0.0
 
 
-def decode_ppm(payload: bytes) -> tuple[int, int, float]:
-    """Parse a binary netpbm P6 image: (width, height, mean pixel byte).
-
-    Header is ASCII "P6 <w> <h> <maxval>" + single whitespace, then
-    w*h*3 raw RGB bytes. Raises ValueError on malformed input.
-    """
-    w, h, pix, _ = _ppm_frame(payload)
-    return w, h, _mean_byte(pix)
-
-
-def decode_bmp(payload: bytes) -> tuple[int, int, float]:
-    """Parse an uncompressed 24-bit BMP: (width, |height|, mean pixel
-    byte over the RGB triples, excluding row padding).
-
-    Handles the 4-byte row alignment and top-down images (negative
-    height). Raises ValueError on other bit depths / compression.
-    """
-    w, h, pix = _bmp_raster(payload)
-    return w, h, _mean_byte(pix)
-
-
 def decode_image(payload: bytes) -> tuple[int, int, float]:
-    """Sniff the magic bytes and decode PPM or BMP; other formats need
-    codec libraries absent from this environment → ValueError."""
+    """Sniff the magic bytes and decode a binary PPM (P6) or an
+    uncompressed 24-bit BMP: (width, height, mean pixel byte over the
+    RGB triples, BMP row padding excluded). Other formats need a codec
+    library → ValueError."""
     w, h, pix = _rgb_raster(payload)
     return w, h, _mean_byte(pix)
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.localrel import values_table
-from ..functions.vectors import cosine, embedding_dim, l2_norm
+from ..functions.vectors import cosine, cosine_fixed, embedding_dim, l2_norm
 from ..session import shuffle_width
 
 
@@ -84,7 +84,6 @@ def cosine_nn_within_label(emb: DataFrame, round_digits: int = 6) -> DataFrame:
     pair-quadratic block join — 6.0 s → 1.7 s at sf0.1, bit-identical
     output. One 1-row dim probe at plan build pays for it.
     """
-    from ..functions.vectors import cosine_fixed
     from ..sources.readers import spread_small_scan
 
     dim = embedding_dim(emb)
@@ -583,6 +582,55 @@ def label_pca_variance(emb: DataFrame, iters: int = 24) -> DataFrame:
     )
 
 
+def _within_cluster_drop(
+    asg: DataFrame, cids: list[int], dim: int, threshold: float
+) -> DataFrame:
+    """The within-cluster pair drop both SemDeDup variants end with:
+    over ``asg`` = (vec_id, embedding, cid), find cosine >=
+    ``threshold`` pairs inside each cluster and drop the higher vec_id
+    of each pair. Returns (centroid_id, n_kept, n_dropped) for every
+    id in ``cids``, empty clusters included."""
+    spark = asg.sparkSession
+    # Pin the pair-join shuffle width: the within-cluster cosine filter
+    # is CPU-bound, not byte-bound, and AQE's byte-based coalescing
+    # packs the small shuffle (60k rows ≈ a few MB compressed at ×30
+    # test scale) into ONE post-shuffle partition, serializing ~N²/2k
+    # cosine evaluations on a single task (measured: 205 s → 23 s at
+    # ×30 by pinning; an explicit-width repartition is exempt from AQE
+    # coalescing). Both join branches and the sizes aggregate hang off
+    # the same exchange, so assignment is computed once (ReusedExchange).
+    asg = asg.repartition(shuffle_width(spark), "cid")
+    a = asg.select(F.col("cid"), F.col("vec_id").alias("va"), F.col("embedding").alias("ea"))
+    b = asg.select(F.col("cid"), F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"))
+    # fixed-width unrolled cosine (optimization r14): the width is
+    # known from the fitted centroids, so the pair filter runs
+    # codegen'd instead of as an interpreted HOF fold — bit-identical
+    # values (same element-order fold).
+    dropped = (
+        a.join(b, "cid")
+        .filter(F.col("va") < F.col("vb"))
+        .filter(cosine_fixed("ea", "eb", dim) >= F.lit(threshold))
+        .select("cid", "vb")
+        .distinct()
+        .groupBy("cid")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_dropped"))
+    )
+    sizes = asg.groupBy("cid").agg(F.count(F.lit(1)).cast("long").alias("n_total"))
+    model = values_table(spark, [(int(cid),) for cid in cids], "cid int")
+    return (
+        model.join(sizes, "cid", "left")
+        .join(dropped, "cid", "left")
+        .select(
+            F.col("cid").cast("long").alias("centroid_id"),
+            (F.coalesce(F.col("n_total"), F.lit(0)) - F.coalesce(F.col("n_dropped"), F.lit(0)))
+            .cast("long")
+            .alias("n_kept"),
+            F.coalesce(F.col("n_dropped"), F.lit(0)).cast("long").alias("n_dropped"),
+        )
+        .orderBy("centroid_id")
+    )
+
+
 def semdedup_drop(
     emb: DataFrame,
     k: int = 8,
@@ -635,54 +683,8 @@ def semdedup_drop(
         "embedding",
         _best(F.col("cents_arr"))["cid"].alias("cid"),
     )
-    # Pin the pair-join shuffle width: the within-cluster cosine filter
-    # is CPU-bound, not byte-bound, and AQE's byte-based coalescing
-    # packs the small shuffle (60k rows ≈ a few MB compressed at ×30
-    # test scale) into ONE post-shuffle partition, serializing ~N²/2k
-    # cosine evaluations on a single task (measured: 205 s → 23 s at
-    # ×30 by pinning; an explicit-width repartition is exempt from AQE
-    # coalescing). Both join branches and the sizes aggregate hang off
-    # the same exchange, so assignment is computed once (ReusedExchange).
-    asg = asg.repartition(
-        shuffle_width(spark), "cid"
-    )
-    a = asg.select(F.col("cid"), F.col("vec_id").alias("va"), F.col("embedding").alias("ea"))
-    b = asg.select(F.col("cid"), F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"))
-    # fixed-width unrolled cosine (optimization r14): the dimension is
-    # already known from the fitted centroids, so the pair filter runs
-    # codegen'd instead of as an interpreted HOF fold — bit-identical
-    # values (same element-order fold).
-    from ..functions.vectors import cosine_fixed
-
     dim = len(cents[0][1]) if cents else 0
-    pair_cos = (
-        cosine_fixed("ea", "eb", dim)
-        if dim
-        else cosine(F.col("ea"), F.col("eb"))
-    )
-    dropped = (
-        a.join(b, "cid")
-        .filter(F.col("va") < F.col("vb"))
-        .filter(pair_cos >= F.lit(threshold))
-        .select("cid", "vb")
-        .distinct()
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_dropped"))
-    )
-    sizes = asg.groupBy("cid").agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    model = values_table(spark, [(int(cid),) for cid, _ in cents], "cid int")
-    return (
-        model.join(sizes, "cid", "left")
-        .join(dropped, "cid", "left")
-        .select(
-            F.col("cid").cast("long").alias("centroid_id"),
-            (F.coalesce(F.col("n_total"), F.lit(0)) - F.coalesce(F.col("n_dropped"), F.lit(0)))
-            .cast("long")
-            .alias("n_kept"),
-            F.coalesce(F.col("n_dropped"), F.lit(0)).cast("long").alias("n_dropped"),
-        )
-        .orderBy("centroid_id")
-    )
+    return _within_cluster_drop(asg, [cid for cid, _ in cents], dim, threshold)
 
 
 def semdedup_drop_pruned(
@@ -742,7 +744,7 @@ def semdedup_drop_pruned(
     import math
 
     from .dedup import portable_hash60
-    from .kmeans import SCALE, _best, scaled_vectors
+    from .kmeans import SCALE, _best, _centroid_scalar, scaled_vectors
 
     spark = emb.sparkSession
     emb = emb.filter(F.col("embedding").isNotNull())
@@ -812,7 +814,6 @@ def semdedup_drop_pruned(
             (next_cid + j, [int(x) for x in c]) for j, c in enumerate(rows)
         ]
         next_cid += len(rows)
-    coarse_cents = [(i, [int(x) for x in c]) for i, c in enumerate(coarse_cents)]
 
     # Ship the codebook as a ONE-ROW broadcast scalar (the repo's
     # scalar-broadcast pattern), not a literal expression tree: a
@@ -835,10 +836,7 @@ def semdedup_drop_pruned(
             F.sort_array(F.collect_list(F.struct("cell", "cell_arr")))
         ).alias("fine_map")
     )
-    coarse_scal = values_table(
-        spark, [(int(cid), [int(x) for x in vec]) for cid, vec in coarse_cents],
-        "cid int, c array<long>"
-    ).agg(F.sort_array(F.collect_list(F.struct("cid", "c"))).alias("coarse_arr"))
+    coarse_scal = _centroid_scalar(spark, list(enumerate(coarse_cents)))
 
     # spread before the two-level assignment (same rationale as
     # semdedup_drop: the interpreted argmin otherwise runs serially on
@@ -853,68 +851,10 @@ def semdedup_drop_pruned(
             lambda x: F.round(x.cast("double") * F.lit(float(SCALE))).cast("long"),
         ).alias("v"),
     ).crossJoin(F.broadcast(fine_scal.crossJoin(coarse_scal)))
-    cell_arr = F.element_at(F.col("fine_map"), _best(F.col("coarse_arr"))["cid"])
-    asg = vecs.select(
-        "vec_id",
-        "embedding",
-        F.array_min(
-            F.transform(
-                cell_arr,
-                lambda s: F.struct(
-                    F.aggregate(
-                        F.zip_with(F.col("v"), s["c"], lambda a, b: (a - b) * (a - b)),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: acc + x,
-                    ).alias("dist2"),
-                    s["cid"].alias("cid"),
-                ),
-            )
-        )["cid"].alias("cid"),
-    )
-    # Same AQE-coalescing guard as semdedup_drop: pin the CPU-bound
-    # pair join's width so byte-based coalescing can't serialize it
-    # (measured at ×30/k=240: 205 s single-task → 23 s pinned).
-    asg = asg.repartition(
-        shuffle_width(spark), "cid"
-    )
-    a = asg.select(F.col("cid"), F.col("vec_id").alias("va"), F.col("embedding").alias("ea"))
-    b = asg.select(F.col("cid"), F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"))
-    # fixed-width unrolled cosine (optimization r14): d is known from
-    # the sampled training points; codegen'd pair filter, bit-identical
-    # values (same element-order fold).
-    from ..functions.vectors import cosine_fixed
-
-    dim = int(pts.shape[1]) if pts.size else 0
-    pair_cos = (
-        cosine_fixed("ea", "eb", dim)
-        if dim
-        else cosine(F.col("ea"), F.col("eb"))
-    )
-    dropped = (
-        a.join(b, "cid")
-        .filter(F.col("va") < F.col("vb"))
-        .filter(pair_cos >= F.lit(threshold))
-        .select("cid", "vb")
-        .distinct()
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_dropped"))
-    )
-    sizes = asg.groupBy("cid").agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    model = values_table(
-        spark, [(int(cid),) for ci in fine for cid, _ in fine[ci]], "cid int"
-    )
-    return (
-        model.join(sizes, "cid", "left")
-        .join(dropped, "cid", "left")
-        .select(
-            F.col("cid").cast("long").alias("centroid_id"),
-            (F.coalesce(F.col("n_total"), F.lit(0)) - F.coalesce(F.col("n_dropped"), F.lit(0)))
-            .cast("long")
-            .alias("n_kept"),
-            F.coalesce(F.col("n_dropped"), F.lit(0)).cast("long").alias("n_dropped"),
-        )
-        .orderBy("centroid_id")
-    )
+    cell_arr = F.element_at(F.col("fine_map"), _best(F.col("cents_arr"))["cid"])
+    asg = vecs.select("vec_id", "embedding", _best(cell_arr)["cid"].alias("cid"))
+    cids = [cid for ci in fine for cid, _ in fine[ci]]
+    return _within_cluster_drop(asg, cids, int(pts.shape[1]), threshold)
 
 
 def mmr_rerank(

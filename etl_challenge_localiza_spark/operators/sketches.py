@@ -32,6 +32,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import portable_hash60
+
 _log = logging.getLogger(__name__)
 
 
@@ -182,8 +184,7 @@ def _cms_bucket(i: int, item: F.Column, width: int) -> F.Column:
     """Engine-portable CMS bucket: md5("i:item") leading 60 bits mod
     width (same construction as count_min_report; a SQL engine replays
     it as cast(concat('0x', substr(md5(...), 1, 15)) as bigint) % w)."""
-    hx = F.md5(F.concat(F.lit(f"{i}:"), item))
-    return F.conv(F.substring(hx, 1, 15), 16, 10).cast("long") % width
+    return portable_hash60(item, f"{i}:") % width
 
 
 def cms_cells(
@@ -826,8 +827,7 @@ def _kmv_hash(key: F.Column, salt: str = "kmv7") -> F.Column:
     md5(salt:key) leading 15 hex digits as a bigint in [0, 2^60) —
     the same md5 portability trick as _cms_bucket, so DuckDB replays
     it as cast(concat('0x', substr(md5(...), 1, 15)) as bigint)."""
-    hx = F.md5(F.concat(F.lit(salt + ":"), key.cast("string")))
-    return F.conv(F.substring(hx, 1, 15), 16, 10).cast("long")
+    return portable_hash60(key.cast("string"), salt + ":")
 
 
 def kmv_bottomk(keys: DataFrame, key_col: str, k: int = 256) -> DataFrame:

@@ -22,6 +22,7 @@ from ..functions.text import (
     tokens,
 )
 from ..sources.readers import spread_small_scan
+from .dedup import portable_hash60
 
 
 def doc_stats(docs: DataFrame) -> DataFrame:
@@ -89,8 +90,8 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     second time just to dedup it). N is a broadcast scalar subquery.
 
     At 100 TB this is the exact (verification) path; the approximate
-    production path is HashingTF+IDF from pyspark.ml over the same
-    token arrays.
+    production path is :func:`feature_hashing_tfidf_norms` over the
+    same tokens.
     """
     # spread the one-task local scan before the tokenize+explode
     # (optimization r14, second segment — the txn-family rationale:
@@ -187,46 +188,15 @@ def lang_id(docs: DataFrame) -> DataFrame:
     )
 
 
-def hashing_tfidf_norms(docs: DataFrame, num_features: int = 1024) -> DataFrame:
-    """Production TF-IDF at scale: HashingTF (fixed-width feature
-    hashing — no vocabulary shuffle, O(1) memory per executor) + IDF
-    fit, reduced to the per-doc L2 norm of the tf-idf vector.
-
-    Numeric semantics (pytest-reconstructed, tests/test_textops.py):
-    term counts fold into ``hash(term) mod num_features`` buckets
-    (collisions MERGE counts — the documented accuracy trade vs the
-    exact explode-based :func:`tfidf_top_terms`), idf is Spark-ML's
-    ln((N+1)/(df_bucket+1)) with df computed on the hashed buckets,
-    and the norm is the plain Euclidean norm of the bucket vector.
-    """
-    from pyspark.ml.feature import IDF, HashingTF
-    from pyspark.ml.functions import vector_to_array
-
-    toked = spread_small_scan(docs).select("doc_id", tokens("text").alias("toks"))
-    tf = HashingTF(
-        inputCol="toks", outputCol="tf", numFeatures=num_features
-    ).transform(toked)
-    model = IDF(inputCol="tf", outputCol="tfidf").fit(tf)
-    arr = vector_to_array(F.col("tfidf"))
-    norm = F.sqrt(
-        F.aggregate(F.transform(arr, lambda x: x * x), F.lit(0.0), lambda a, v: a + v)
-    )
-    return model.transform(tf).select("doc_id", F.round(norm, 6).alias("tfidf_l2_norm"))
-
-
 def feature_hashing_tfidf_norms(
     docs: DataFrame, num_features: int = 1024
 ) -> DataFrame:
-    """Feature-hashing TF-IDF norms with an ENGINE-PORTABLE hash
-    (VERDICT r10 #5 — flips the hashing_tfidf_norms registry row from
-    rows-only to full-oracle): identical algorithm to
-    :func:`hashing_tfidf_norms` — fixed-width feature hashing folds
-    term counts into buckets (collisions MERGE — no vocabulary
-    shuffle, O(1) executor memory), bucket-level df, Spark-ML's
-    ln((N+1)/(df+1)) idf, per-doc L2 norm — but the bucket hash is
-    the repo's md5-portable derandomizer (conv(substr(md5,1,15),16,10)
-    == DuckDB cast(concat('0x',...) as bigint)) instead of Spark-ML
-    murmur3_32, so DuckDB replays the whole pipeline bit-for-bit.
+    """Feature-hashing TF-IDF norms with an ENGINE-PORTABLE hash:
+    fixed-width feature hashing folds term counts into buckets
+    (collisions MERGE — no vocabulary shuffle, O(1) executor memory),
+    bucket-level df, ln((N+1)/(df+1)) idf, per-doc L2 norm. The bucket
+    hash is :func:`~.dedup.portable_hash60` mod ``num_features``, so
+    DuckDB replays the whole pipeline bit-for-bit.
     The per-doc square-sum folds in BUCKET ORDER on both engines
     (array_sort + F.aggregate == list(v ORDER BY bucket) + list_sum),
     the cross-engine float-determinism recipe; the only libm call
@@ -235,16 +205,11 @@ def feature_hashing_tfidf_norms(
 
     Scale shape: explode → two hash aggregates (map-side combined) →
     one broadcast scalar join → per-doc fold. All JVM-side — no
-    Python crossing, no ML-vector materialization, no IDF.fit job
-    (strictly cheaper than the murmur3 variant, which remains for
-    Spark-ML parity and is pytest-reconstructed)."""
+    Python crossing, no ML-vector materialization, no IDF.fit job."""
     toked = spread_small_scan(docs).select(
         "doc_id", F.explode(tokens("text")).alias("w")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("w")), 1, 15), 16, 10).cast("bigint")
-        % F.lit(int(num_features))
-    )
+    bucket = portable_hash60(F.col("w")) % F.lit(int(num_features))
     tf = (
         toked.select("doc_id", bucket.alias("bucket"))
         .groupBy("doc_id", "bucket")

@@ -41,6 +41,7 @@ from .operators.dedup import (
     exact_dedup_groups,
     minhash_near_dup_pairs,
     ngram_jaccard_pairs,
+    portable_hash60,
     simhash_near_dup_pairs,
 )
 from .operators.multimodal import assets_from_documents, extract_features
@@ -626,7 +627,7 @@ def _bpe_sweep(k: int) -> str:
     segmentation (word-frequency weighted), take the (count desc, pair
     asc) argmax with count >= 2, apply it as a left-to-right
     non-overlapping boundary-wrapped replace. Mirrors
-    operators/bpe.py:train_bpe_merges at batch=1 sweep-for-sweep."""
+    operators/bpe.py:train_bpe_merges sweep-for-sweep."""
     return f"""tk_{k} as (
   select n, list_filter(string_split(seg, chr(31)), x -> x <> '') as toks
   from s{k - 1}
@@ -2021,11 +2022,9 @@ def q_hashing_tfidf_norms(spark, sf_dir):
     the md5-portable bucket hash
     (operators/textops.py:feature_hashing_tfidf_norms), so DuckDB
     replays hashing, bucket-df, idf, and the bucket-ordered square-sum
-    fold exactly. The Spark-ML murmur3 variant
-    (textops.py:hashing_tfidf_norms) remains implemented and is
-    value-checked by tests/test_textops.py (exact reconstruction on
-    the real corpus + a collision-forcing synthetic one + the
-    provable hashed-L2 ≤ exact-L1 bound vs exact TF-IDF)."""
+    fold exactly. tests/test_textops.py also checks it against a
+    hashlib reconstruction on a collision-forcing synthetic corpus and
+    against the provable hashed-L2 ≤ exact-L1 bound vs exact TF-IDF."""
     from .operators.textops import feature_hashing_tfidf_norms
 
     return feature_hashing_tfidf_norms(load_table(spark, sf_dir, "documents"))
@@ -5732,16 +5731,6 @@ def q_pyds_bucket_stats(spark, sf_dir):
     )
 
 
-# NOTE: a transformWithStateInPandas (Spark 4 arbitrary-state API)
-# variant of stateful_user_totals exists at
-# streaming/stateful.py:run_tws_user_totals, but its driver worker
-# requires google.protobuf, which is absent from this environment (no
-# pip installs allowed) — so it is NOT registered here (a registered
-# query must be runnable by the driver). tests/test_streaming.py gates
-# it behind pytest.importorskip; in a protobuf-equipped deployment it
-# registers cleanly with the same oracle as stateful_user_totals.
-
-
 @register(
     "streaming_dedup_within_watermark",
     oracle="""
@@ -8192,10 +8181,10 @@ def q_bpe_train_encode(spark, sf_dir):
     word/char/BPE-token counts and compression.
 
     FULL ORACLE since round 11 (VERDICT r10 #5, flipping the
-    rows-only row): with ``batch=1`` the trainer is EXACT greedy BPE
-    — each sweep accepts the single (count desc, pair asc) argmax —
-    so the DuckDB oracle replays the whole fit as 8 chained sweep
-    CTEs (the kmeans pinned-fit precedent): segmentations are
+    rows-only row): the trainer is EXACT greedy BPE — each sweep
+    accepts the single (count desc, pair asc) argmax — so the DuckDB
+    oracle replays the whole fit as 8 chained sweep CTEs (the kmeans
+    pinned-fit precedent): segmentations are
     boundary-wrapped strings (each symbol as chr(31)+s+chr(31), so a
     pair replace can never match a partial symbol), a sweep counts
     adjacent pairs weighted by word frequency, takes the argmax with
@@ -8208,13 +8197,11 @@ def q_bpe_train_encode(spark, sf_dir):
     'ab' exists). The trainer's n<2 stop maps to each sweep's
     ``where c >= 2`` filter: an empty argmax leaves the segmentation
     fixed, which is idempotent across remaining sweeps — identical
-    to breaking. batch=4 (the ADVICE r6/r7 disjoint-batch
-    relaxation) remains available on the operator and pytest-covered;
-    the registry pins batch=1 so the fit is cross-engine-replayable."""
+    to breaking."""
     from .operators.bpe import bpe_encode_stats, train_bpe_merges
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = train_bpe_merges(docs, n_merges=8, batch=1)
+    merges = train_bpe_merges(docs, n_merges=8)
     return bpe_encode_stats(docs, merges)
 
 
@@ -8591,10 +8578,7 @@ def q_xml_roundtrip_rollup(spark, sf_dir):
                 "source string, n_chars bigint"
             ),
         )
-        checksum = (
-            F.conv(F.substring(F.md5("text"), 1, 15), 16, 10).cast("bigint")
-            % F.lit(1000000007)
-        )
+        checksum = portable_hash60("text") % F.lit(1000000007)
         agg = back.groupBy("lang", "source").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_chars").cast("long").alias("total_chars"),
@@ -11639,10 +11623,7 @@ def q_orc_roundtrip_rollup(spark, sf_dir):
     try:
         write_orc(ev, os.path.join(d, "events"))
         back = spark.read.orc(os.path.join(d, "events"))
-        chk = lambda c: (  # noqa: E731 — md5 leading 60 bits mod prime
-            F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
-            % F.lit(1000000007)
-        )
+        chk = lambda c: portable_hash60(c) % F.lit(1000000007)  # noqa: E731
         agg = back.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)"))
@@ -12364,10 +12345,7 @@ def q_jsonl_roundtrip_rollup(spark, sf_dir):
             .option("timestampNTZFormat", ntz_fmt)
             .json(path)
         )
-        chk = lambda c: (  # noqa: E731 — md5 leading 60 bits mod prime
-            F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
-            % F.lit(1000000007)
-        )
+        chk = lambda c: portable_hash60(c) % F.lit(1000000007)  # noqa: E731
         ts_str = F.date_format(
             F.col("ts").cast("timestamp"), "yyyy-MM-dd HH:mm:ss.SSSSSS"
         )
@@ -16420,14 +16398,7 @@ def q_levenshtein_block_pairs(spark, sf_dir):
     dm = docs.select(
         "doc_id", "lang", F.floor(F.col("n_chars") / 64).alias("lb")
     )
-    sample_hash = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("levsample:"), F.col("doc_id"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 1_000_000
-    )
+    sample_hash = portable_hash60(F.col("doc_id"), "levsample:") % 1_000_000
 
     def _volume(frame) -> int:
         blocks = frame.groupBy("lang", "lb").agg(

@@ -57,32 +57,6 @@ def write_json_metrics(metrics: dict[str, Any], path: str, phase: str | None = N
     return path
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> str:
-    """Partitioned parquet layout: filters on ``partition_cols`` prune
-    at the directory level (PartitionFilters in the scan — asserted in
-    tests/test_storage.py). The layout of choice for time/type-sliced
-    100 TB tables."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    return path
-
-
-def write_bucketed(
-    df: DataFrame, name: str, bucket_cols: list[str], n_buckets: int = 32
-) -> str:
-    """Bucketed + sorted table: joins/aggregations on ``bucket_cols``
-    between tables bucketed the same way run with ZERO Exchange
-    (asserted in tests/test_storage.py). Pre-pay the shuffle once at
-    write time, reuse it on every subsequent join."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return name
-
-
 def compact_parquet(
     spark, path: str, target_file_bytes: int = 128 * 1024 * 1024
 ) -> int:

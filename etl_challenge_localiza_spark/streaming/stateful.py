@@ -75,76 +75,3 @@ def run_stateful_user_totals(
         _run_to_memory(stream, "update", "stateful_totals", timeout_sec)
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas — the Spark 4 arbitrary-state API
-# ---------------------------------------------------------------------------
-
-def run_tws_user_totals(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
-) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` — the
-    Spark 4 replacement for applyInPandasWithState: an object-oriented
-    StatefulProcessor with typed state handles (ValueState here;
-    ListState/MapState/timers for richer operators), RocksDB-backed so
-    state scales past executor memory. Same semantics as
-    :func:`running_user_totals`; on a finite input the final state
-    equals the batch aggregate.
-
-    ENVIRONMENT GATE: the TWS driver worker imports google.protobuf,
-    which this container lacks (and installs are not allowed), so this
-    raises at runtime here; tests skip via importorskip. The code path
-    is the production form for protobuf-equipped deployments."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            if self._totals.exists():
-                n, total = self._totals.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            # unrounded state, rounded emission (same policy as the
-            # applyInPandasWithState operator above)
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            _event_stream(spark, sf_dir)
-            .select("user_id", "value")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=UserTotals(),
-                outputStructType=OUTPUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            )
-        )
-        out = _run_to_memory(stream, "update", "tws_totals", timeout_sec)
-    finally:
-        # restore the default provider for subsequent queries
-        try:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        except Exception:
-            pass
-    return _final_per_user(out)

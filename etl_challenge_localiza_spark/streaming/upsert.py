@@ -13,7 +13,7 @@ Scale design: the per-batch work is a keyed window over the batch (small)
 plus one full-outer join against the target keyed on user_id. On a real
 cluster the versioned-parquet target becomes a Delta/Iceberg table
 (MERGE INTO with the same condition) and both sides stay bucketed on the
-key so the join is exchange-free (sources.sinks.write_bucketed).
+key so the join is exchange-free (``DataFrameWriter.bucketBy``).
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
-"""BPE tokenizer training/encoding (operators/bpe.py) — the rows-only
-registry query's numeric evidence: a from-scratch reference
-implementation, hand-derived merges, and conservation properties."""
+"""BPE tokenizer training/encoding (operators/bpe.py): a from-scratch
+reference implementation, hand-derived merges, and conservation
+properties beside the bpe_train_encode oracle."""
 
 from __future__ import annotations
 
@@ -104,97 +104,3 @@ def test_encode_stats_conservation(spark):
             assert "".join(_segment(w, ranks)) == w
     # merges actually compress: strictly fewer tokens than chars
     assert all(r["n_bpe_tokens"] < r["n_chars"] for r in out.values())
-
-
-def ref_train_batched(
-    word_counts: dict[str, int], n_merges: int, batch: int
-) -> tuple[list[tuple[str, str]], int]:
-    """Independent batched reference trainer (ADVICE r6/r7 directive):
-    per sweep, sort pairs by (-count, pair) and accept up to ``batch``
-    whose symbols are disjoint from earlier-accepted pairs' symbols and
-    concatenations; apply accepted merges in acceptance order."""
-    segmented = {w: list(w) for w in word_counts}
-    merges: list[tuple[str, str]] = []
-    sweeps = 0
-    while len(merges) < n_merges:
-        sweeps += 1
-        counts: Counter = Counter()
-        for w, segs in segmented.items():
-            for pair in zip(segs, segs[1:]):
-                counts[pair] += word_counts[w]
-        ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        if not ranked or ranked[0][1] < 2:
-            break
-        used: set[str] = set()
-        accepted: list[tuple[str, str]] = []
-        for (a, b), n in ranked:
-            if len(accepted) >= min(batch, n_merges - len(merges)) or n < 2:
-                break
-            if a in used or b in used:
-                continue
-            accepted.append((a, b))
-            used.update((a, b, a + b))
-        for a, b in accepted:
-            merges.append((a, b))
-            for w, segs in segmented.items():
-                out, i = [], 0
-                while i < len(segs):
-                    if i < len(segs) - 1 and segs[i] == a and segs[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(segs[i])
-                        i += 1
-                segmented[w] = out
-    return merges, sweeps
-
-
-def test_batched_training_matches_batched_reference(spark):
-    words: Counter = Counter()
-    for t in CORPUS:
-        words.update(t.split())
-    for batch in (2, 3, 4):
-        expected, ref_sweeps = ref_train_batched(dict(words), 6, batch)
-        stats: dict = {}
-        got = train_bpe_merges(_docs(spark), n_merges=6, batch=batch, stats=stats)
-        assert got == expected, f"batch={batch}"
-        assert stats["sweeps"] == ref_sweeps
-        # the point of batching: sweeps drop ~batch-fold vs one-per-merge
-        assert stats["sweeps"] <= -(-6 // batch) + 1
-
-
-def test_batched_accepted_counts_are_exact(spark):
-    """Disjointness invariance: every accepted pair's measured count
-    equals its true adjacent-pair count at merge time — replay the
-    merge list incrementally and recount before each merge."""
-    words: Counter = Counter()
-    for t in CORPUS:
-        words.update(t.split())
-    merges = train_bpe_merges(_docs(spark), n_merges=6, batch=3)
-    segmented = {w: list(w) for w in words}
-    for a, b in merges:
-        counts: Counter = Counter()
-        for w, segs in segmented.items():
-            for pair in zip(segs, segs[1:]):
-                counts[pair] += words[w]
-        assert counts[(a, b)] >= 2  # never merges a vanished pair
-        for w, segs in segmented.items():
-            out, i = [], 0
-            while i < len(segs):
-                if i < len(segs) - 1 and segs[i] == a and segs[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(segs[i])
-                    i += 1
-            segmented[w] = out
-
-
-def test_batch_one_is_exact_greedy(spark):
-    words: Counter = Counter()
-    for t in CORPUS:
-        words.update(t.split())
-    stats: dict = {}
-    got = train_bpe_merges(_docs(spark), n_merges=6, batch=1, stats=stats)
-    assert got == ref_train(dict(words), 6)
-    assert stats["sweeps"] == 6  # one merge per sweep, by definition

@@ -6,6 +6,7 @@ from etl_challenge_localiza_spark.operators.dedup import (
     exact_dedup_groups,
     minhash_near_dup_pairs,
     ngram_jaccard_pairs,
+    portable_hash60,
     simhash_near_dup_pairs,
 )
 
@@ -231,3 +232,41 @@ def test_prefix_filter_candidate_budget_guard(spark):
         ).collect()
     }
     assert on == off and len(on) > 0
+
+
+def test_portable_hash60_matches_duckdb(spark):
+    """The one engine-portable 60-bit hash, value for value against the
+    DuckDB form the oracles replay: empty, non-ASCII and salted inputs
+    agree with ``cast(concat('0x', substr(md5(concat(salt, v)), 1, 15))
+    as bigint)``. NULL hashes to NULL, as it does with DuckDB's
+    NULL-propagating ``||``; DuckDB's ``concat`` skips NULL arguments,
+    so the concat form would hash a NULL as the bare salt."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    vals = ["", "a", "naïve café 東京", "42", None]
+    salts = ["", "levsample:", "3:"]
+    df = spark.createDataFrame(list(enumerate(vals)), "i int, v string")
+    got = {
+        (r["i"], salt): r[f"h{j}"]
+        for r in df.select(
+            "i", *[portable_hash60(F.col("v"), s).alias(f"h{j}") for j, s in enumerate(salts)]
+        ).collect()
+        for j, salt in enumerate(salts)
+    }
+    assert len(got) == len(vals) * len(salts)
+    con = duckdb.connect()
+    for (i, salt), h in got.items():
+        v = vals[i]
+        want = con.execute(
+            "select cast('0x' || substr(md5(? || ?), 1, 15) as bigint)", [salt, v]
+        ).fetchone()[0]
+        assert h == want, (salt, v)
+        if v is None:
+            assert h is None
+        else:
+            assert 0 <= h < 1 << 60
+            assert h == con.execute(
+                "select cast(concat('0x', substr(md5(concat(?, ?)), 1, 15)) as bigint)",
+                [salt, v],
+            ).fetchone()[0], (salt, v)

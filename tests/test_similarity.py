@@ -51,33 +51,6 @@ def test_brp_lsh_finds_close_pair(spark):
     assert (0, 4) not in pairs  # distance 2.0 > threshold
 
 
-def test_pandas_udf_cosine_matches_jvm_fold(spark):
-    """The Arrow scalar-UDF path agrees with the built-in fold."""
-    from pyspark.sql import functions as F
-
-    from etl_challenge_localiza_spark.functions.vectors import (
-        cosine,
-        make_cosine_pandas_udf,
-    )
-
-    emb = _emb(spark)
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_embedding")
-    )
-    both = emb.crossJoin(F.broadcast(q))
-    udf_cos = make_cosine_pandas_udf()
-    rows = both.select(
-        "vec_id",
-        cosine("embedding", "q_embedding").alias("jvm"),
-        udf_cos(
-            F.col("embedding").cast("array<double>"),
-            F.col("q_embedding").cast("array<double>"),
-        ).alias("py"),
-    ).collect()
-    for r in rows:
-        assert r["py"] == pytest.approx(r["jvm"], abs=1e-12), r
-
-
 def test_cosine_nn_within_label_planted(spark):
     """Planted geometry: within label 'x', v1 is v0's nearest neighbour
     (and vice versa); v10 in a singleton label emits no row; exact

@@ -196,36 +196,6 @@ def test_foreachbatch_upsert_converges_regardless_of_batch_order(spark):
     assert final == {1: 10, 2: 13}
 
 
-def test_transform_with_state_equals_batch_or_skips(spark, sf0001):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor) — its
-    driver worker needs google.protobuf, absent in this container, so
-    the test self-skips there and runs for real anywhere protobuf
-    exists."""
-    pytest.importorskip("google.protobuf")
-
-    from etl_challenge_localiza_spark.streaming.stateful import run_tws_user_totals
-
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in run_tws_user_totals(spark, sf0001).collect()
-    }
-    from pyspark.sql import functions as F
-
-    from etl_challenge_localiza_spark.sources.readers import load_table
-
-    want = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in load_table(spark, sf0001, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_dedup_within_watermark_evicts_state(spark, tmp_path):
     """dropDuplicatesWithinWatermark must dedup within the watermark
     horizon but RE-EMIT a duplicate arriving after its key's state was

@@ -62,14 +62,12 @@ def test_lang_id_marker_argmax(spark):
 
 
 def _reconstruct_norms(rows, num_features):
-    """Exact reconstruction of HashingTF+IDF L2 norms: indexOf-bucketed
-    counts (collisions merge), bucket-level df, Spark-ML ln((N+1)/(df+1))."""
+    """Exact reconstruction of feature-hashing TF-IDF L2 norms: md5
+    leading-60-bit buckets (collisions merge), bucket-level df,
+    ln((N+1)/(df+1)) idf."""
     import math
     from collections import Counter
 
-    from pyspark.ml.feature import HashingTF
-
-    ht = HashingTF(numFeatures=num_features)
     bucket: dict[str, int] = {}
     tf_by_doc: dict = {}
     for doc_id, toks in rows:
@@ -77,7 +75,7 @@ def _reconstruct_norms(rows, num_features):
         for t in toks:
             b = bucket.get(t)
             if b is None:
-                b = ht.indexOf(t)
+                b = int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % num_features
                 bucket[t] = b
             c[b] += 1
         tf_by_doc[doc_id] = c
@@ -94,44 +92,15 @@ def _reconstruct_norms(rows, num_features):
     }, n_collisions
 
 
-def test_hashing_tfidf_norms_match_exact_reconstruction(spark):
-    """Numeric accuracy check for the Spark-ML murmur3 variant
-    (operators/textops.py:hashing_tfidf_norms — the registry query now
-    pins the md5-portable hash and is full-oracle, VERDICT r10 #5) on
-    the real sf0.01 corpus: its per-doc L2 norms must equal the exact
-    reconstruction of the HashingTF+IDF pipeline."""
-    from etl_challenge_localiza_spark.functions.text import tokens
-    from etl_challenge_localiza_spark.operators.textops import (
-        hashing_tfidf_norms,
-    )
-    from etl_challenge_localiza_spark.sources.readers import load_table
-
-    sf_dir = "/root/testdata/sf0.01"
-    got = {
-        r["doc_id"]: r["tfidf_l2_norm"]
-        for r in hashing_tfidf_norms(
-            load_table(spark, sf_dir, "documents")
-        ).collect()
-    }
-    docs = [
-        (r["doc_id"], r["toks"])
-        for r in load_table(spark, sf_dir, "documents")
-        .select("doc_id", tokens("text").alias("toks"))
-        .collect()
-    ]
-    want, _ = _reconstruct_norms(docs, 1024)
-    assert set(got) == set(want)
-    for doc_id in want:
-        assert got[doc_id] == pytest.approx(want[doc_id], abs=2e-6)  # 6dp rounding
-
-
 def test_hashing_tfidf_norms_collision_semantics(spark):
     """The testdata vocabulary (31 tokens) never collides in 1024
     buckets, so this variant forces collisions — 60 distinct tokens
     into 16 buckets — and asserts the operator still matches the
     reconstruction (which MERGES counts per bucket). Proves the check
     verifies hashed-pipeline semantics, not just the exact path."""
-    from etl_challenge_localiza_spark.operators.textops import hashing_tfidf_norms
+    from etl_challenge_localiza_spark.operators.textops import (
+        feature_hashing_tfidf_norms,
+    )
 
     rows = [
         (i, " ".join(f"tok{(i * 7 + j) % 60}" for j in range(1 + i % 9)), "en", "syn", 0)
@@ -140,13 +109,14 @@ def test_hashing_tfidf_norms_collision_semantics(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string, source string, n_chars long")
     got = {
         r["doc_id"]: r["tfidf_l2_norm"]
-        for r in hashing_tfidf_norms(docs, num_features=16).collect()
+        for r in feature_hashing_tfidf_norms(docs, num_features=16).collect()
     }
     toked = [
         (r[0], r[1].split()) for r in rows
     ]
     want, n_collisions = _reconstruct_norms(toked, 16)
     assert n_collisions > 0  # the whole point of this variant
+    assert set(got) == set(want)
     for doc_id in want:
         assert got[doc_id] == pytest.approx(want[doc_id], abs=2e-6)
 
@@ -329,16 +299,15 @@ def test_hashing_tfidf_l2_bounded_by_exact_l1(spark):
         ||hashed tf-idf||_2  <=  ||exact tf-idf||_1
 
     — a PROVABLE bound relating the hashed norms to the exact
-    explode-based TF-IDF, checked for both hash variants on the real
-    corpus. Equality holds on a collision-free corpus where every
-    bucket is single-term (second assert)."""
+    explode-based TF-IDF, checked on the real corpus. Equality holds
+    on a collision-free corpus where every bucket is single-term
+    (second assert)."""
     import math
     from collections import Counter
 
     from etl_challenge_localiza_spark.functions.text import tokens
     from etl_challenge_localiza_spark.operators.textops import (
         feature_hashing_tfidf_norms,
-        hashing_tfidf_norms,
     )
     from etl_challenge_localiza_spark.sources.readers import load_table
 
@@ -359,16 +328,15 @@ def test_hashing_tfidf_l2_bounded_by_exact_l1(spark):
         )
         for did, toks in rows
     }
-    for fn in (hashing_tfidf_norms, feature_hashing_tfidf_norms):
-        got = {
-            r["doc_id"]: r["tfidf_l2_norm"] for r in fn(docs).collect()
-        }
-        assert set(got) == set(exact_l1)
-        for did, l2 in got.items():
-            assert l2 <= exact_l1[did] + 2e-6, (
-                f"{fn.__name__}: doc {did} hashed L2 {l2} exceeds exact L1 "
-                f"{exact_l1[did]}"
-            )
+    got = {
+        r["doc_id"]: r["tfidf_l2_norm"]
+        for r in feature_hashing_tfidf_norms(docs).collect()
+    }
+    assert set(got) == set(exact_l1)
+    for did, l2 in got.items():
+        assert l2 <= exact_l1[did] + 2e-6, (
+            f"doc {did} hashed L2 {l2} exceeds exact L1 {exact_l1[did]}"
+        )
 
     # collision-free corpus (distinct single tokens, wide hash space):
     # hashed == exact, so L2 == exact L2 and the bound is tight only

@@ -6,7 +6,9 @@ round's close-out claim comes from, in the order the claims are made.
    gate scale, every registry query;
 3. determinism audit at sf0.1 — two same-session runs of every query,
    value-hash compared;
-4. the declared benchmark (BENCHMARK.json): one untraced
+4. the benchmark's own tests (``perfbench/tests``), in a process of
+   their own: one of them stops the shared SparkSession;
+5. the declared benchmark (BENCHMARK.json): one untraced
    ``perfbench/run.py`` run of each workload, ``pipeline_csv`` and
    ``headliners_cold`` (``--seed 1 --seconds 16 --trace 0``).
 
@@ -49,6 +51,7 @@ def main() -> int:
             "determinism sf0.1",
             [py, "-m", "tools.determinism_audit", "--sf", "/root/testdata/sf0.1"],
         )
+    _run("perfbench tests", [py, "-m", "pytest", "perfbench/tests", "-q"])
     for workload in ("pipeline_csv", "headliners_cold"):
         _run(
             f"perfbench {workload}",
