@@ -46,18 +46,15 @@ from pyspark.sql import functions as F
 SPLIT = 1 << 20
 
 
-def money_unscaled(expr_sql: str, decimals: int = 2, precision: int = 12) -> Column:
-    """Per-row unscaled integer of ``cast(<expr> as decimal(p, d))``.
+def money_unscaled(expr_sql: str) -> Column:
+    """Per-row unscaled integer of ``cast(<expr> as decimal(12, 2))``.
 
     The decimal cast performs the exact HALF_UP rounding the oracle's
-    SQL does; the subsequent *10^d shift and long cast are exact while
+    SQL does; the subsequent *100 shift and long cast are exact while
     the intermediate stays within 18 digits (compact), which holds for
     any money-typed column.
     """
-    tens = 10**decimals
-    return F.expr(
-        f"cast(cast({expr_sql} as decimal({precision},{decimals})) * {tens} as long)"
-    )
+    return F.expr(f"cast(cast({expr_sql} as decimal(12,2)) * 100 as long)")
 
 
 def split_sum(unscaled_col: str, name: str) -> list[Column]:

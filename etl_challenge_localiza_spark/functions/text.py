@@ -26,12 +26,10 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it"]
 
 
-def tokens(col: Column | str, lowercase: bool = True) -> Column:
-    """Whitespace tokens with empties removed (array<string>)."""
+def tokens(col: Column | str) -> Column:
+    """Lowercased whitespace tokens with empties removed (array<string>)."""
     c = F.col(col) if isinstance(col, str) else col
-    if lowercase:
-        c = F.lower(c)
-    return F.filter(F.split(c, " "), lambda x: x != "")
+    return F.filter(F.split(F.lower(c), " "), lambda x: x != "")
 
 
 def token_count(col: Column | str) -> Column:
@@ -76,11 +74,11 @@ def shingle_hashes(tok: Column, n: int = 3) -> Column:
     return F.transform(z, lambda s: F.xxhash64(*[s[str(k)] for k in range(n)]))
 
 
-def fingerprint(col: Column | str, length: int = 16) -> Column:
-    """Document fingerprint: leading hex of md5 (engine-portable; the
-    rolling-hash role from SURVEY.md §2.9 with a standard hash)."""
+def fingerprint(col: Column | str) -> Column:
+    """Document fingerprint: leading 16 hex digits of md5 (engine-portable;
+    the rolling-hash role from SURVEY.md §2.9 with a standard hash)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.substring(F.md5(c), 1, length)
+    return F.substring(F.md5(c), 1, 16)
 
 
 def content_sha256(col: Column | str) -> Column:
@@ -88,10 +86,10 @@ def content_sha256(col: Column | str) -> Column:
     return F.sha2(c, 256)
 
 
-def stopword_ratio(tok: Column, stopwords: list[str] | None = None) -> Column:
-    """#stopword tokens / #tokens (0.0 for empty docs). Exact rational
+def stopword_ratio(tok: Column) -> Column:
+    """#STOPWORDS tokens / #tokens (0.0 for empty docs). Exact rational
     arithmetic on int counts → identical across engines."""
-    sw = F.array(*[F.lit(w) for w in (stopwords or STOPWORDS)])
+    sw = F.array(*[F.lit(w) for w in STOPWORDS])
     hits = F.size(F.filter(tok, lambda x: F.array_contains(sw, x)))
     n = F.size(tok)
     return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))

@@ -57,37 +57,34 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 # (asserted by tests and the oracle harness).
 
 
-def embedding_dim(df, col: str = "embedding") -> int:
+def embedding_dim(df) -> int:
     """Plan-build-time dimension probe: one 1-row aggregate over the
-    array column. NULL embeddings are ignored. Raises ``ValueError``
-    when no non-NULL embedding has a positive width, or when the
-    non-NULL widths differ — uniform width is the embedding-table
-    invariant every fixed-width fold indexes by. Memoized on the
-    DataFrame object — sources.readers.load_table caches frames per
-    (session, path), so each table pays the probe job once per
-    session, not once per query dispatch."""
+    ``embedding`` array column. NULL embeddings are ignored. Raises
+    ``ValueError`` when no non-NULL embedding has a positive width, or
+    when the non-NULL widths differ — uniform width is the
+    embedding-table invariant every fixed-width fold indexes by.
+    Memoized on the DataFrame object — sources.readers.load_table caches
+    frames per (session, path), so each table pays the probe job once
+    per session, not once per query dispatch."""
     memo = getattr(df, "_sg_embedding_dim", None)
-    if isinstance(memo, dict) and col in memo:
-        return memo[col]
+    if memo is not None:
+        return memo
     # size(NULL) is -1 with ANSI off (NULL with it on): max ignores
     # NULL rows either way, min needs them masked out
-    size = F.size(F.col(col))
+    size = F.size(F.col("embedding"))
     row = df.select(
         F.max(size).alias("d"),
-        F.min(F.when(F.col(col).isNotNull(), size)).alias("lo"),
+        F.min(F.when(F.col("embedding").isNotNull(), size)).alias("lo"),
     ).first()
     d = row["d"] if row is not None else None
     if d is None or d <= 0:
-        raise ValueError(f"cannot infer embedding dim of column {col!r}")
+        raise ValueError("cannot infer embedding dim of column 'embedding'")
     if row["lo"] != d:
         raise ValueError(
-            f"embedding column {col!r} has mixed widths {row['lo']}..{d}"
+            f"embedding column 'embedding' has mixed widths {row['lo']}..{d}"
         )
     try:
-        if not isinstance(memo, dict):
-            memo = {}
-            df._sg_embedding_dim = memo
-        memo[col] = int(d)
+        df._sg_embedding_dim = int(d)
     except Exception:
         pass
     return int(d)

@@ -18,18 +18,12 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # pyspark>=3.4 structured errors; fall back for older APIs
-    from pyspark.errors import PySparkException
-except ImportError:  # pragma: no cover
-    PySparkException = Exception
-
-try:
-    from py4j.protocol import Py4JError
-except ImportError:  # pragma: no cover (Spark Connect: no py4j)
-    Py4JError = PySparkException
+from ..session import shuffle_width
 
 #: exceptions a conf get/set/unset can raise: structured pyspark errors
 #: (missing key, static conf) or a raw py4j bridge error.
@@ -37,7 +31,7 @@ _CONF_ERRORS = (PySparkException, Py4JError)
 
 
 @contextmanager
-def iterative_loop_confs(spark, n_rows: int, rows_per_partition: int = 100_000):
+def iterative_loop_confs(spark, n_rows: int):
     """Shared sizing policy for driver-sequenced fixpoint loops
     (connected components, PageRank): narrow the shuffle width to the
     REDUCED loop data (one partition per ~100K rows — r14: was 1M,
@@ -63,13 +57,7 @@ def iterative_loop_confs(spark, n_rows: int, rows_per_partition: int = 100_000):
 
     old_parts = _get_conf("spark.sql.shuffle.partitions")
     old_aqe = _get_conf("spark.sql.adaptive.enabled")
-    try:
-        # the conf can hold a non-numeric value on some platforms
-        # (e.g. "auto" under certain AQE distros) — fall back to 16
-        session_width = int(old_parts) if old_parts else 16
-    except ValueError:
-        session_width = 16
-    loop_parts = max(1, min(session_width, n_rows // rows_per_partition))
+    loop_parts = max(1, min(shuffle_width(spark), n_rows // 100_000))
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
         spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -133,11 +121,11 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Return (node, component) where component = min node id in the
     connected component. ``edges`` is undirected input (one row per
-    pair, any orientation)."""
+    pair, any orientation). The distributed loop runs at most 20
+    label-propagation rounds."""
     # materialize the (already pair-finding-REDUCED) edge list ONCE
     # before symmetrizing: a plain union would embed the upstream
     # pipeline in BOTH branches and Spark recomputes non-identical
@@ -212,7 +200,7 @@ def connected_components(
     cached = labels  # the cached frame backing the current labels view
     try:
         with iterative_loop_confs(spark, n_edges):
-            for _ in range(max_iter):
+            for _ in range(20):
                 neighbor_min = (
                     both.join(labels, both["b"] == labels["node"])
                     .groupBy(F.col("a").alias("node"))
@@ -245,13 +233,12 @@ def connected_components(
                     break
             else:
                 # fell out of the loop with labels still moving: a
-                # component whose diameter exceeds max_iter would get
+                # component whose diameter exceeds 20 would get
                 # WRONG (split) labels — refuse to return silently-
                 # unconverged results.
                 raise RuntimeError(
-                    f"connected_components did not converge in {max_iter} "
-                    "iterations (a component's diameter exceeds max_iter); "
-                    "raise max_iter"
+                    "connected_components did not converge in 20 "
+                    "iterations (a component's diameter exceeds 20)"
                 )
             # hand back a LINEAGE-FREE frame: a returned cache entry
             # would otherwise be pinned forever (CacheManager entries

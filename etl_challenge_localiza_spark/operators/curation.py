@@ -125,20 +125,14 @@ def _stopword_hits(tok: Column) -> Column:
     return F.size(F.filter(tok, lambda x: F.array_contains(sw, x)))
 
 
-def quality_gate(
-    docs: DataFrame,
-    min_tokens: int = 10,
-    max_tokens: int = 5000,
-    min_mean_word_len: float = 2.0,
-    max_mean_word_len: float = 12.0,
-    min_stopword_ratio: float = 0.05,
-    max_top_word_frac: float = 0.2,
-) -> DataFrame:
+def quality_gate(docs: DataFrame) -> DataFrame:
     """Composite C4/Gopher-style quality gate. Emits every document
     with ``keep`` plus the FIRST failed rule as ``reason`` (fixed
     precedence, so the labeling is deterministic):
 
-    too_short → too_long → word_length → low_stopword → repetitive.
+    too_short (< 10 tokens) → too_long (> 5000 tokens) → word_length
+    (mean outside [2, 12]) → low_stopword (ratio < 0.05) → repetitive
+    (top-word fraction > 0.2).
 
     Length/stopword signals are per-row array math; the repetition
     signal joins the one-shuffle :func:`word_profile`. All ratio
@@ -160,14 +154,11 @@ def quality_gate(
     sw_ratio = F.col("sw_hits").cast("double") / F.col("n_tokens").cast("double")
     top_frac = F.col("max_count").cast("double") / F.col("n_tokens").cast("double")
     reason = (
-        F.when(F.col("n_tokens") < min_tokens, "too_short")
-        .when(F.col("n_tokens") > max_tokens, "too_long")
-        .when(
-            (mean_wl < min_mean_word_len) | (mean_wl > max_mean_word_len),
-            "word_length",
-        )
-        .when(sw_ratio < min_stopword_ratio, "low_stopword")
-        .when(top_frac > max_top_word_frac, "repetitive")
+        F.when(F.col("n_tokens") < 10, "too_short")
+        .when(F.col("n_tokens") > 5000, "too_long")
+        .when((mean_wl < 2.0) | (mean_wl > 12.0), "word_length")
+        .when(sw_ratio < 0.05, "low_stopword")
+        .when(top_frac > 0.2, "repetitive")
     )
     return (
         base.join(prof, "doc_id", "left")
@@ -185,15 +176,20 @@ def quality_gate(
 # Model-based quality scoring (round 6): fastText-style linear classifier
 # ---------------------------------------------------------------------------
 
-def default_quality_weights(d: int = 256) -> list[float]:
+#: hashed-feature bucket count of the quality classifier and DSIR: the
+#: first two md5 hex digits address exactly 256 buckets.
+N_BUCKETS = 256
+
+
+def default_quality_weights() -> list[float]:
     """Deterministic weight vector for the hashed-feature classifier:
-    w[j] = ((j*37) % 21 - 10) / 16. Every weight is an exact dyadic
-    rational (k/16, |k| <= 10), so per-document weight sums are EXACT
-    in double arithmetic regardless of accumulation order — the
-    property that makes the cross-engine oracle hash-match bit-for-bit
-    (a production deployment swaps in trained weights and keeps the
-    identical plan shape)."""
-    return [((j * 37) % 21 - 10) / 16.0 for j in range(d)]
+    w[j] = ((j*37) % 21 - 10) / 16 over ``N_BUCKETS`` buckets. Every
+    weight is an exact dyadic rational (k/16, |k| <= 10), so
+    per-document weight sums are EXACT in double arithmetic regardless
+    of accumulation order — the property that makes the cross-engine
+    oracle hash-match bit-for-bit (a production deployment swaps in
+    trained weights and keeps the identical plan shape)."""
+    return [((j * 37) % 21 - 10) / 16.0 for j in range(N_BUCKETS)]
 
 
 def hashed_feature_logit(
@@ -250,10 +246,7 @@ def hashed_feature_logit(
 
 
 def model_quality_gate(
-    docs: DataFrame,
-    weights: list[float] | None = None,
-    bias: float = 0.125,
-    threshold: float = 0.0,
+    docs: DataFrame, weights: list[float] | None = None
 ) -> DataFrame:
     """Heuristic gate ∘ model gate — the production composition: cheap
     rule-based rejection first (C4/Gopher rules), the learned score as
@@ -263,7 +256,7 @@ def model_quality_gate(
     frames (the model side is shuffle-free, the heuristic side carries
     its one word-profile shuffle)."""
     heur = quality_gate(docs)
-    model = hashed_feature_logit(docs, weights, bias, threshold)
+    model = hashed_feature_logit(docs, weights)
     return heur.join(model, "doc_id").select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "lang",
@@ -283,112 +276,75 @@ def model_quality_gate(
 # Language Models via Importance Resampling")
 # ---------------------------------------------------------------------------
 
-#: Session-scoped DSIR model memo (VERDICT r10 #2 — fitted-model
-#: literal construction was ~1.2 s of every dsir dispatch): key is
-#: (caller-supplied data identity, d, alpha), value the d scaled
-#: log-ratio int64s. Same contract as a persisted fitted model: valid
-#: for the session, for an immutable input table; callers that mutate
-#: the table pass model_cache_key=None (or a new key).
-_DSIR_MODEL_CACHE: dict[tuple, list[int]] = {}
-
-
-def dsir_log_weights(
-    docs: DataFrame,
-    target: Column | None = None,
-    d: int = 256,
-    alpha: float = 1.0,
-    model_cache_key: str | None = None,
-) -> DataFrame:
+def dsir_log_weights(docs: DataFrame) -> DataFrame:
     """Per-document DSIR importance log-weight: how much more likely
     the doc's hashed n-gram features are under the TARGET distribution
-    (rows matching ``target``; default lang='en') than under the RAW
-    corpus distribution.
+    (rows with lang='en') than under the RAW corpus distribution.
 
     log w(x) = sum over features of [ln p_t(bucket) - ln p_r(bucket)]
-    with add-``alpha`` smoothed bucket unigram models over ``d``
+    with add-one smoothed bucket unigram models over ``N_BUCKETS``
     md5-hashed unigram+bigram buckets (the same portable bucket trick
     as hashed_feature_logit).
 
     Determinism at scale: the per-bucket log-ratios are computed ONCE
-    (d rows), rounded to 1e-6 and scaled to int64; each doc's weight
-    is then an exact INTEGER sum over its features — associative, so
-    the result is independent of accumulation order, partitioning, and
-    engine (the float-sum nondeterminism a naive per-doc ln() sum
-    would have). One corpus-wide shuffle (bucket counts, map-side
-    combined to <= d rows per task), one driver collect of d model
-    rows (the IVF centroid-literal pattern, similarity.py:133), then a
-    shuffle-free whole-stage-codegen scoring pass with the scaled
-    table as a plan literal.
+    (one row per bucket), rounded to 1e-6 and scaled to int64; each
+    doc's weight is then an exact INTEGER sum over its features —
+    associative, so the result is independent of accumulation order,
+    partitioning, and engine (the float-sum nondeterminism a naive
+    per-doc ln() sum would have). One corpus-wide shuffle (bucket
+    counts, map-side combined to <= N_BUCKETS rows per task), one
+    driver collect of the model rows (the IVF centroid-literal pattern,
+    similarity.py:133), then a shuffle-free whole-stage-codegen scoring
+    pass with the scaled table as a plan literal.
 
     Emits (doc_id, n_feats, log_weight, target_leaning); resample by
     keeping docs with the largest weights or sampling proportional to
     exp(log_weight) downstream.
-
-    ``model_cache_key``: opaque data-identity string enabling the
-    session-scoped fitted-model memo (the registry passes the table
-    path). The key must identify everything the FIT depends on beyond
-    (d, alpha): the corpus contents and the target predicate — pass a
-    new key (or None, the default: no caching) if either changes.
-    With the memo warm, the call is pure plan construction: the
-    scoring pass embeds the cached d literals, zero fit jobs.
     """
     spark = docs.sparkSession
     docs = spread_small_scan(docs)
-    if target is None:
-        target = F.col("lang") == "en"
     tok = tokens("text")
     feats = F.concat(tok, shingles(tok, 2))
 
     def bucket(x: Column) -> Column:
-        return F.conv(F.substring(F.md5(x), 1, 2), 16, 10).cast("int") % d
+        return F.conv(F.substring(F.md5(x), 1, 2), 16, 10).cast("int") % N_BUCKETS
 
-    memo_key = (
-        (model_cache_key, int(d), float(alpha))
-        if model_cache_key is not None
-        else None
+    fdf = docs.select(
+        (F.col("lang") == "en").cast("int").alias("is_t"),
+        F.explode(feats).alias("x"),
+    ).select("is_t", bucket(F.col("x")).alias("b"))
+    rows = (
+        fdf.groupBy("b")
+        .agg(F.count(F.lit(1)).alias("nr"), F.sum("is_t").alias("nt"))
+        .collect()
     )
-    scaled_list = (
-        _DSIR_MODEL_CACHE.get(memo_key) if memo_key is not None else None
+    nr = {r["b"]: r["nr"] for r in rows}
+    nt = {r["b"]: r["nt"] for r in rows}
+    t_r = float(sum(nr.values()))
+    t_t = float(sum(nt.values()))
+    # the per-bucket model table: ln computed by the JVM (same ln the
+    # oracle's DuckDB evaluates — the bigram_lm_scores precedent),
+    # rounded+scaled to exact int64
+    cnt = spark.createDataFrame(
+        [(b, int(nr.get(b, 0)), int(nt.get(b, 0))) for b in range(N_BUCKETS)],
+        "b int, nr long, nt long",
     )
-    if scaled_list is None:
-        fdf = docs.select(
-            target.cast("int").alias("is_t"), F.explode(feats).alias("x")
-        ).select("is_t", bucket(F.col("x")).alias("b"))
-        rows = (
-            fdf.groupBy("b")
-            .agg(F.count(F.lit(1)).alias("nr"), F.sum("is_t").alias("nt"))
-            .collect()
-        )
-        nr = {r["b"]: r["nr"] for r in rows}
-        nt = {r["b"]: r["nt"] for r in rows}
-        t_r = float(sum(nr.values()))
-        t_t = float(sum(nt.values()))
-        # the d-row model table: ln computed by the JVM (same ln the
-        # oracle's DuckDB evaluates — the bigram_lm_scores precedent),
-        # rounded+scaled to exact int64
-        cnt = spark.createDataFrame(
-            [(b, int(nr.get(b, 0)), int(nt.get(b, 0))) for b in range(d)],
-            "b int, nr long, nt long",
-        )
-        scaled = {
-            r["b"]: r["lrs"]
-            for r in cnt.select(
-                "b",
-                F.round(
-                    (
-                        F.log((F.col("nt") + F.lit(alpha)) / F.lit(t_t + alpha * d))
-                        - F.log((F.col("nr") + F.lit(alpha)) / F.lit(t_r + alpha * d))
-                    )
-                    * F.lit(1e6)
+    scaled = {
+        r["b"]: r["lrs"]
+        for r in cnt.select(
+            "b",
+            F.round(
+                (
+                    F.log((F.col("nt") + F.lit(1.0)) / F.lit(t_t + N_BUCKETS))
+                    - F.log((F.col("nr") + F.lit(1.0)) / F.lit(t_r + N_BUCKETS))
                 )
-                .cast("long")
-                .alias("lrs"),
-            ).collect()
-        }
-        scaled_list = [int(scaled[b]) for b in range(d)]
-        if memo_key is not None:
-            _DSIR_MODEL_CACHE[memo_key] = scaled_list
-    lrarr = F.array(*[F.lit(v).cast("long") for v in scaled_list])
+                * F.lit(1e6)
+            )
+            .cast("long")
+            .alias("lrs"),
+        ).collect()
+    }
+    lrarr = F.array(*[F.lit(int(scaled[b])).cast("long") for b in range(N_BUCKETS)])
     wsum = F.aggregate(
         feats,
         F.lit(0).cast("long"),
@@ -407,14 +363,11 @@ def nucleus_subset_by_group(
     group_col: str,
     weight_col: str,
     id_col: str,
-    p_half: bool = True,
 ) -> DataFrame:
-    """Per-group NUCLEUS (top-p) selection — the grouped sibling of the
-    global token-budget subset. Only ``p_half=True`` is supported
-    (raises ValueError otherwise — a hard error, not a stripped-under
-    ``python -O`` assert): the exact-integer 2·cumsum ≤ total rule is
-    the operator's contract; other p would need a 2p scaling that
-    reintroduces float thresholds.
+    """Per-group NUCLEUS (top-p, p = 1/2) selection — the grouped
+    sibling of the global token-budget subset. The exact-integer
+    2·cumsum ≤ total rule is the operator's contract; other p would
+    need a 2p scaling that reintroduces float thresholds.
 
     Within each group, rank rows by
     ``weight_col`` desc (``id_col`` asc tiebreak) and keep the prefix
@@ -429,8 +382,6 @@ def nucleus_subset_by_group(
     skew beyond a single task is the documented hand-off point to
     operators/ranks.py:grouped_prefix_sum (pid-tagged two-level
     prefix sums), same trade as seq_packing."""
-    if not p_half:
-        raise ValueError("only p=1/2 supported (exact-integer contract)")
     from pyspark.sql import Window
 
     w = Window.partitionBy(group_col).orderBy(
@@ -457,11 +408,9 @@ def nucleus_subset_by_group(
     return out.withColumn("kept", keep).drop("__total")
 
 
-def eval_decontaminate(
-    corpus: DataFrame, eval_docs: DataFrame, w: int = 5
-) -> DataFrame:
+def eval_decontaminate(corpus: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any
-    w-token n-gram with an eval/benchmark set — the standard
+    5-token n-gram with an eval/benchmark set — the standard
     pre-training hygiene step (GPT-3 used 13-gram scrubs; The Pile
     8-gram overlap audits) that keeps test questions out of training
     data. Extension surface beyond the reference pipeline
@@ -470,7 +419,7 @@ def eval_decontaminate(
 
     Both inputs need (doc_id, text). Returns flagged corpus docs only:
     (doc_id, n_grams, n_contaminated, contamination_ratio), where
-    n_grams counts the doc's DISTINCT w-grams and n_contaminated those
+    n_grams counts the doc's DISTINCT 5-grams and n_contaminated those
     also present anywhere in the eval set.
 
     Scale shape — the asymmetry is the whole design: the corpus is
@@ -487,7 +436,7 @@ def eval_decontaminate(
     broadcast join pays O(|eval|) per task + O(grams) per row. The
     join form also degrades gracefully past any broadcast-array
     budget."""
-    grams = F.array_distinct(shingles(tokens("text"), w))
+    grams = F.array_distinct(shingles(tokens("text"), 5))
     ev = (
         spread_small_scan(eval_docs)
         .select(F.explode(grams).alias("g"))

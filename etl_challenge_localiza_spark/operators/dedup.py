@@ -34,15 +34,6 @@ from ..functions.text import shingle_hashes, shingles, tokens
 from ..sources.readers import spread_small_scan
 
 
-def doc_shingles(docs: DataFrame, n: int = 3, block_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id [, block cols], shingle) — distinct word n-grams."""
-    cols = ["doc_id", *block_cols]
-    return (
-        docs.select(*cols, F.explode(shingles(tokens("text"), n)).alias("shingle"))
-        .dropDuplicates([*cols, "shingle"])
-    )
-
-
 def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact content dedup: group identical texts by md5, keep the
     lowest doc_id as canonical."""
@@ -60,10 +51,9 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.2,
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    max_df: int = 100,
 ) -> DataFrame:
-    """Blocked n-gram Jaccard near-duplicate pairs.
+    """Blocked n-gram Jaccard near-duplicate pairs, blocked on
+    (lang, source).
 
     jaccard = |A∩B| / (|A|+|B|−|A∩B|) over distinct shingle sets,
     computed with exact integer counts (engine-portable doubles).
@@ -82,7 +72,7 @@ def ngram_jaccard_pairs(
        while collision-free, which holds at every tested SF);
     2. ONE full shuffle groups that stream into a per-(block, shingle)
        sorted doc-id set; a set's size IS the shingle's doc frequency
-       (rows are distinct per doc), so the ``max_df`` hot-shingle cap
+       (rows are distinct per doc), so the df ≤ 100 hot-shingle cap
        is a post-aggregation filter on ``size(docs)`` — no separate
        df-count pass, no anti join. A Zipf-hot shingle's aggregation
        buffer grows to its true df before the cap drops it; Spark's
@@ -93,7 +83,7 @@ def ngram_jaccard_pairs(
        sets — a tiny aggregate over post-cap data, not a second pass
        over the corpus;
     4. pairs are generated JVM-side from each sorted set with a
-       higher-order ``transform``/``flatten`` (≤ max_df²/2 per key by
+       higher-order ``transform``/``flatten`` (≤ 100²/2 per key by
        construction) and counted — one hash aggregate, no join.
 
     Both |A|, |B| and |A∩B| are computed over the CAPPED shingle
@@ -101,7 +91,7 @@ def ngram_jaccard_pairs(
     one parse of the corpus, one full shuffle of the hashed shingle
     stream, then aggregates/joins over cap-bounded data only.
     """
-    counts = _blocked_overlap_counts(docs, n, block_cols, max_df)
+    counts = _blocked_overlap_counts(docs, n)
     return (
         counts.withColumn(
             "jaccard",
@@ -117,27 +107,20 @@ def ngram_jaccard_pairs(
     )
 
 
-def _blocked_overlap_counts(
-    docs: DataFrame,
-    n: int,
-    block_cols: tuple[str, ...],
-    max_df: int,
-) -> DataFrame:
+def _blocked_overlap_counts(docs: DataFrame, n: int) -> DataFrame:
     """Shared counting pipeline behind the set-similarity metrics:
     (a_doc_id, b_doc_id, n_inter, n_a, n_b) over the df-capped hashed
     shingle universe — steps 1-4 of the no-self-join design documented
     on :func:`ngram_jaccard_pairs`. Jaccard and containment differ
     only in the final formula over these three exact counts."""
-    cols = ["doc_id", *block_cols]
-    key = [*block_cols, "shingle"]
     raw = spread_small_scan(docs).select(
-        *cols,
+        "doc_id", "lang", "source",
         F.explode(F.array_distinct(shingle_hashes(tokens("text"), n))).alias("shingle"),
     )
     by_shingle = (
-        raw.groupBy(*key)
+        raw.groupBy("lang", "source", "shingle")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("docs"))
-        .filter(F.size("docs") <= max_df)
+        .filter(F.size("docs") <= 100)
     )
     sizes = (
         by_shingle.select(F.explode("docs").alias("doc_id"))
@@ -162,13 +145,7 @@ def _blocked_overlap_counts(
     )
 
 
-def ngram_containment_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    max_df: int = 100,
-) -> DataFrame:
+def ngram_containment_pairs(docs: DataFrame, n: int = 3) -> DataFrame:
     """Blocked n-gram CONTAINMENT near-duplicate pairs: containment =
     |A∩B| / min(|A|, |B|) — the asymmetric-length dedup mode Jaccard
     structurally misses. A 20-shingle doc fully quoted inside a
@@ -182,16 +159,17 @@ def ngram_containment_pairs(
     :func:`_blocked_overlap_counts` pipeline (one corpus parse, one
     hashed-shingle shuffle, JVM-side pair expansion, df-capped) with a
     different final formula: one double division over exact int64
-    counts. Returns (doc_id_a, doc_id_b, containment) with a < b.
+    counts. Returns (doc_id_a, doc_id_b, containment) with a < b and
+    containment ≥ 0.8.
     """
-    counts = _blocked_overlap_counts(docs, n, block_cols, max_df)
+    counts = _blocked_overlap_counts(docs, n)
     return (
         counts.withColumn(
             "containment",
             F.col("n_inter").cast("double")
             / F.least(F.col("n_a"), F.col("n_b")).cast("double"),
         )
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= 0.8)
         .select(
             F.col("a_doc_id").cast("long").alias("doc_id_a"),
             F.col("b_doc_id").cast("long").alias("doc_id_b"),

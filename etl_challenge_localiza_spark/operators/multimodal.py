@@ -88,14 +88,14 @@ def _synthetic_assets(docs: DataFrame, make: Callable[[int], bytes]) -> DataFram
     )
 
 
-def assets_from_documents(docs: DataFrame, kind: str = "image") -> DataFrame:
-    """Build a multimodal asset table from ``documents``: the utf-8
-    bytes of ``text`` stand in for an encoded media payload. At
+def assets_from_documents(docs: DataFrame) -> DataFrame:
+    """Build a multimodal asset table of kind 'image' from ``documents``:
+    the utf-8 bytes of ``text`` stand in for an encoded media payload. At
     production scale this column would come from ``spark.read.format(
     'binaryFile')`` or a parquet/iceberg table with a binary column."""
     return spread_small_scan(docs).select(
         F.col("doc_id").alias("asset_id"),
-        F.lit(kind).alias("kind"),
+        F.lit("image").alias("kind"),
         F.encode(F.col("text"), "utf-8").alias("payload"),
     )
 
@@ -293,12 +293,8 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, float, float]:
     return n_channels, sample_rate, bits, duration, mean_abs
 
 
-def make_wav(
-    n_channels: int = 1,
-    sample_rate: int = 8000,
-    samples: list[int] | None = None,
-) -> bytes:
-    """Build a minimal 16-bit PCM WAV payload (the synthetic-asset
+def make_wav(n_channels: int = 1, samples: list[int] | None = None) -> bytes:
+    """Build a minimal 8 kHz 16-bit PCM WAV payload (the synthetic-asset
     generator for tests — the audio counterpart of synthetic_ppm)."""
     samples = samples if samples is not None else []
     data = b"".join(
@@ -307,8 +303,8 @@ def make_wav(
     fmt = (
         (1).to_bytes(2, "little")
         + n_channels.to_bytes(2, "little")
-        + sample_rate.to_bytes(4, "little")
-        + (sample_rate * n_channels * 2).to_bytes(4, "little")
+        + (8000).to_bytes(4, "little")
+        + (8000 * n_channels * 2).to_bytes(4, "little")
         + (n_channels * 2).to_bytes(2, "little")
         + (16).to_bytes(2, "little")
     )
@@ -341,7 +337,7 @@ def synthetic_wav_assets(docs: DataFrame) -> DataFrame:
     def make(did: int) -> bytes:
         n = 400 + 4 * (did % 100)
         amp = (did * 7) % 20000 - 10000
-        return make_wav(1, 8000, [amp] * n)
+        return make_wav(1, [amp] * n)
 
     return _synthetic_assets(docs, make)
 
@@ -537,9 +533,9 @@ def decode_ppm_stream(payload: bytes) -> list[tuple[int, int, int, float]]:
     return frames
 
 
-def sample_video_frames(assets: DataFrame, stride: int = 2) -> DataFrame:
+def sample_video_frames(assets: DataFrame) -> DataFrame:
     """Decode every frame of each concatenated-PPM payload and keep
-    every ``stride``-th (the video curation primitive: train on a
+    the even-indexed ones (the video curation primitive: train on a
     frame subsample, not 30 fps). One Arrow-batched crossing
     (:func:`_map_payloads`) with the declared 1→N VIDEO_FRAME_SCHEMA — decode
     parallelism is the asset partitioning, per-task memory is one
@@ -547,7 +543,7 @@ def sample_video_frames(assets: DataFrame, stride: int = 2) -> DataFrame:
     columnar for downstream relational ops."""
     return _map_payloads(
         assets,
-        lambda p: [f for f in decode_ppm_stream(p) if f[0] % stride == 0],
+        lambda p: [f for f in decode_ppm_stream(p) if f[0] % 2 == 0],
         VIDEO_FRAME_SCHEMA,
     )
 
@@ -621,14 +617,14 @@ def ahash_image(payload: bytes, grid: int = 8) -> str:
 AHASH_SCHEMA = "asset_id long, ahash string"
 
 
-def image_ahash(assets: DataFrame, grid: int = 8) -> DataFrame:
-    """Per-asset perceptual fingerprint via :func:`ahash_image` through
+def image_ahash(assets: DataFrame) -> DataFrame:
+    """Per-asset 8x8 perceptual fingerprint via :func:`ahash_image` through
     the standard Arrow-batched crossing. Downstream exact-group dedup
     is a plain hash groupBy on the 64-bit fingerprint; hamming-
     tolerant near-dup search reuses the banded-LSH shape from
     operators/dedup.py (split the 64 bits into 4x16-bit bands, bucket
     join per band) — the fingerprint is deliberately band-splittable."""
-    return _map_payloads(assets, lambda p: (ahash_image(p, grid),), AHASH_SCHEMA)
+    return _map_payloads(assets, lambda p: (ahash_image(p),), AHASH_SCHEMA)
 
 
 def synthetic_pattern_ppm_assets(docs: DataFrame) -> DataFrame:

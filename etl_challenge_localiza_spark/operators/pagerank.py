@@ -12,12 +12,12 @@ Termination: after every sweep the driver reduces ONE scalar — the L1
 delta sum(|r_new - r_old|) in scaled units — over that sweep's cached
 frame (the old rank is carried through the update select, the same
 trick the components loop uses, so no extra join materializes). When
-the delta is <= ``tol_scaled`` (default 0 = exact fixpoint; in integer
-fixed-point the iteration genuinely REACHES fixpoints, floats only
-approach them) the loop stops early: every further sweep would
-reproduce the same ranks, so an early stop is result-identical to
-running all ``max_sweeps`` — which is what keeps a fixed-sweep oracle
-valid for a convergence-terminated implementation. With
+the delta is 0 (an exact fixpoint; in integer fixed-point the
+iteration genuinely REACHES fixpoints, floats only approach them) the
+loop stops early: every further sweep would reproduce the same ranks,
+so an early stop is result-identical to running all ``max_sweeps`` —
+which is what keeps a fixed-sweep oracle valid for a
+convergence-terminated implementation. With
 ``require_convergence=True`` a loop still moving at max_sweeps raises
 instead of returning silently-unconverged ranks (the components
 contract).
@@ -38,6 +38,12 @@ from .components import iterative_loop_confs
 #: fixed-point scale: ranks are integers in units of 1e-12.
 RANK_SCALE = 1_000_000_000_000
 
+#: damping factor 17/20 = 0.85, kept as an exact integer ratio.
+DAMPING_NUM, DAMPING_DEN = 17, 20
+
+#: the scaled (1 - damping) share every node receives each sweep.
+RANK_BASE = (RANK_SCALE * (DAMPING_DEN - DAMPING_NUM)) // DAMPING_DEN
+
 #: edge-count ceiling for the driver-local exact-integer fast path —
 #: a driver-memory bound, not a machine-width tune (see
 #: components.CC_LOCAL_EDGE_BUDGET for the policy rationale).
@@ -47,14 +53,11 @@ PR_LOCAL_EDGE_BUDGET = 500_000
 def pagerank_scaled(
     edges: DataFrame,
     max_sweeps: int = 3,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    tol_scaled: int = 0,
     require_convergence: bool = False,
 ) -> tuple[DataFrame, int]:
     """Power-iterate PageRank over ``edges`` (src, dst — already
     symmetrized/deduped as the caller intends) for up to ``max_sweeps``
-    sweeps, stopping early when the scaled L1 delta <= ``tol_scaled``.
+    sweeps, stopping early when the scaled L1 delta reaches 0.
 
     Returns (ranks, sweeps_run): ranks is a lineage-free (id, r) frame
     (r in units of 1e-12), sweeps_run the number of sweeps actually
@@ -98,7 +101,6 @@ def pagerank_scaled(
             node_set.add(d_)
             deg[s_] = deg.get(s_, 0) + 1
             adj.setdefault(s_, []).append(d_)
-        base_ = (RANK_SCALE * (damping_den - damping_num)) // damping_den
         rank = {n: RANK_SCALE for n in node_set}
         sweeps_run = 0
         converged = False
@@ -109,19 +111,19 @@ def pagerank_scaled(
                 for dst_ in dsts:
                     s_acc[dst_] += c
             new_rank = {
-                n: base_ + (damping_num * s_acc[n]) // damping_den
+                n: RANK_BASE + (DAMPING_NUM * s_acc[n]) // DAMPING_DEN
                 for n in node_set
             }
             delta = sum(abs(new_rank[n] - rank[n]) for n in node_set)
             rank = new_rank
             sweeps_run += 1
-            if delta <= tol_scaled:
+            if delta == 0:
                 converged = True
                 break
         if not converged and require_convergence:
             raise RuntimeError(
                 f"pagerank did not converge in {max_sweeps} sweeps "
-                f"(L1 delta still > {tol_scaled}); raise max_sweeps"
+                "(L1 delta still > 0); raise max_sweeps"
             )
         from pyspark.sql.types import LongType, StructField, StructType
 
@@ -143,7 +145,6 @@ def pagerank_scaled(
     # every sweep — one whole join stage per sweep for a value that
     # never changes. ed replaces e as the loop's cached edge relation.
     ed = e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("d")), "src").cache()
-    base = (RANK_SCALE * (damping_den - damping_num)) // damping_den
     ranks = nodes.select("id", F.lit(RANK_SCALE).alias("r"))
     cached = None
     sweeps_run = 0
@@ -170,10 +171,10 @@ def pagerank_scaled(
                     .select(
                         "id",
                         (
-                            F.lit(base)
+                            F.lit(RANK_BASE)
                             + F.expr(
-                                f"cast(({damping_num} * cast(coalesce(s, 0) as"
-                                f" decimal(38,0))) div {damping_den} as bigint)"
+                                f"cast(({DAMPING_NUM} * cast(coalesce(s, 0) as"
+                                f" decimal(38,0))) div {DAMPING_DEN} as bigint)"
                             )
                         ).alias("r"),
                         "__prev",
@@ -194,13 +195,13 @@ def pagerank_scaled(
                 cached = stepped
                 ranks = stepped.select("id", "r")
                 sweeps_run += 1
-                if delta <= tol_scaled:
+                if delta == 0:
                     break
             else:
                 if require_convergence:
                     raise RuntimeError(
                         f"pagerank did not converge in {max_sweeps} sweeps "
-                        f"(L1 delta still > {tol_scaled}); raise max_sweeps"
+                        "(L1 delta still > 0); raise max_sweeps"
                     )
             # lineage-free handoff, same rationale as components
             return ranks.localCheckpoint(eager=True), sweeps_run

@@ -129,7 +129,7 @@ def dq_profile_df(df: DataFrame) -> DataFrame:
     )
 
 
-def observed_profile(df: DataFrame, name: str = "dq") -> DataFrame:
+def observed_profile(df: DataFrame) -> DataFrame:
     """Zero-extra-pass DQ telemetry via ``DataFrame.observe``: the
     metrics accumulate DURING whatever action consumes the returned
     frame (a write, a count), instead of costing a separate scan.
@@ -143,7 +143,7 @@ def observed_profile(df: DataFrame, name: str = "dq") -> DataFrame:
     """
     from pyspark.sql import Observation
 
-    obs = Observation(name)
+    obs = Observation("dq")
     cols = set(df.columns)
     aggs = [F.count(F.lit(1)).alias("total_rows")]
     for c in PROFILE_COLUMNS:
@@ -168,9 +168,9 @@ def check_gate(metrics: dict, threshold: float, phase: str) -> None:
         )
 
 
-def compression_signals(docs: DataFrame, level: int = 6) -> DataFrame:
-    """Compression-ratio quality signal: per-doc zlib(deflate) size over
-    raw utf-8 size — the classic repetition/boilerplate detector
+def compression_signals(docs: DataFrame) -> DataFrame:
+    """Compression-ratio quality signal: per-doc zlib(deflate, level 6)
+    size over raw utf-8 size — the classic repetition/boilerplate detector
     (low ratio = machine-generated or template text; ratios near or
     above 1.0 = already-compressed or high-entropy noise). Complements
     the closed-form entropy/repetition expressions in
@@ -193,7 +193,7 @@ def compression_signals(docs: DataFrame, level: int = 6) -> DataFrame:
         import zlib
 
         return texts.map(
-            lambda t: len(zlib.compress(t.encode("utf-8"), level))
+            lambda t: len(zlib.compress(t.encode("utf-8"), 6))
             if t is not None
             else None
         )

@@ -24,7 +24,6 @@ def auto_bin_us(
     span_us: int = 1,
     target_parallelism: int = 1,
     n_coarse_keys: int | None = None,
-    floor_us: int = 1,
 ) -> int:
     """The bin-width rule for bucketized interval joins, as one pure
     function shared by every bin-based range join in the repo
@@ -46,7 +45,7 @@ def auto_bin_us(
        that still yields ≥ ``target_parallelism`` occupied keys is
        ``n_coarse_keys · span / target``.
 
-    The rule: ``bin = max(floor, interval_len, n_coarse·span/target)``
+    The rule: ``bin = max(interval_len, n_coarse·span/target)``
     — i.e. never below the interval length, and otherwise the largest
     bin that keeps keys ≥ the shuffle width. When the join key already
     contains a high-cardinality column (user-keyed range joins —
@@ -69,22 +68,16 @@ def auto_bin_us(
         par_term = (max(int(n_coarse_keys), 1) * span_us) // int(
             target_parallelism
         )
-    return int(max(floor_us, interval_len_us, par_term))
+    return int(max(interval_len_us, par_term))
 
 
-def salt_for_bin(
-    bin_us: int,
-    span_us: int,
-    target_parallelism: int,
-    n_coarse_keys: int = 1,
-) -> int:
+def salt_for_bin(bin_us: int, span_us: int, target_parallelism: int) -> int:
     """Salt factor that restores the parallelism floor when the
-    candidate-volume face of :func:`auto_bin_us` won the conflict:
-    occupied keys ≈ n_coarse·span/bin; salting multiplies the key
-    space by S, so S = ceil(target / occupied_keys). Returns 1 (no-op)
-    whenever the bin already meets the floor."""
-    occupied = max(1, (max(int(n_coarse_keys), 1) * max(int(span_us), 1))
-                   // max(int(bin_us), 1))
+    candidate-volume face of :func:`auto_bin_us` won the conflict on a
+    single coarse key: occupied keys ≈ span/bin; salting multiplies the
+    key space by S, so S = ceil(target / occupied_keys). Returns 1
+    (no-op) whenever the bin already meets the floor."""
+    occupied = max(1, max(int(span_us), 1) // max(int(bin_us), 1))
     return max(1, -(-int(target_parallelism) // occupied))
 
 
@@ -109,11 +102,8 @@ def derive_interval_stats(
     return max(med, 1), max(span, 1)
 
 
-def events_within_window_pairs(
-    events: DataFrame,
-    window_minutes: int = 30,
-) -> DataFrame:
-    """Directed pairs of same-user events within ``window_minutes``:
+def events_within_window_pairs(events: DataFrame) -> DataFrame:
+    """Directed pairs of same-user events within 30 minutes:
     (event_id_a, event_id_b) with 0 <= t_b − t_a < W and a ≠ b.
 
     The follow-on-activity join (what did this user do in the W after
@@ -128,7 +118,7 @@ def events_within_window_pairs(
     explode below is exact.
     """
     w_us = auto_bin_us(
-        interval_len_us=window_minutes * 60 * 1_000_000,
+        interval_len_us=30 * 60 * 1_000_000,
         n_coarse_keys=None,
     )
     us = F.unix_micros(F.col("ts").cast("timestamp"))

@@ -15,9 +15,7 @@ from pyspark.sql import functions as F
 from ..session import shuffle_width
 
 
-def sessionize(
-    events: DataFrame, gap_minutes: int = 30, parts: int | None = None
-) -> DataFrame:
+def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Assign session ids per user (new session when the gap since the
     previous event exceeds ``gap_minutes``) and aggregate per session.
 
@@ -37,10 +35,7 @@ def sessionize(
     aggregate reuse its partitioning, so the plan still has exactly
     one exchange. Measured ×30: 8.87 s → 1.66 s wall.
     """
-    spark = events.sparkSession
-    if parts is None:
-        parts = shuffle_width(spark)
-    events = events.repartition(parts, "user_id")
+    events = events.repartition(shuffle_width(events.sparkSession), "user_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = int(gap_minutes) * 60 * 1_000_000
@@ -73,18 +68,34 @@ def sessionize(
     )
 
 
+def _purchase_intervals(events: DataFrame) -> DataFrame:
+    """Per-(day, user) purchase interval [s, e] in integer µs, for users
+    with at least two purchases that day."""
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    return (
+        events.filter(F.col("event_type") == "purchase")
+        .select(F.to_date("ts").alias("day"), "user_id", us.alias("t"))
+        .groupBy("day", "user_id")
+        .agg(
+            F.min("t").alias("s"),
+            F.max("t").alias("e"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .filter(F.col("n") >= 2)
+        .drop("n")
+    )
+
+
 def interval_coactivity_pairs(
     events: DataFrame,
-    event_type: str = "purchase",
-    min_events: int = 2,
     bin_us: int | None = None,
     salt: int | None = None,
 ) -> DataFrame:
     """BUCKETED interval-overlap self-join (the bin-based range-join
-    technique): build per-(user, day) activity intervals
-    [first, last] of the given event type (users with ≥ ``min_events``
-    that day), then count, per day, the unordered user pairs whose
-    intervals OVERLAP — co-activity detection.
+    technique): build per-(user, day) purchase intervals
+    [first, last] (users with ≥ 2 purchases that day), then count, per
+    day, the unordered user pairs whose intervals OVERLAP — co-activity
+    detection.
 
     The scale move is the equi-join surrogate for the range predicate:
     each interval explodes into the TIME BINS it spans (bounded rows,
@@ -122,21 +133,8 @@ def interval_coactivity_pairs(
     values are bin- and salt-independent (plan knobs only)."""
     from .rangejoin import auto_bin_us, derive_interval_stats, salt_for_bin
 
-    spark = events.sparkSession
-    width = shuffle_width(spark)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    iv = (
-        events.filter(F.col("event_type") == event_type)
-        .select(F.to_date("ts").alias("day"), "user_id", us.alias("t"))
-        .groupBy("day", "user_id")
-        .agg(
-            F.min("t").alias("s"),
-            F.max("t").alias("e"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .filter(F.col("n") >= min_events)
-        .drop("n")
-    )
+    width = shuffle_width(events.sparkSession)
+    iv = _purchase_intervals(events)
     if bin_us is None or salt is None:
         # The stats job materializes iv anyway; cache it so the two
         # join sides below reuse the grouped frame instead of each
@@ -191,11 +189,7 @@ def interval_coactivity_pairs(
     )
 
 
-def interval_coactivity_counts(
-    events: DataFrame,
-    event_type: str = "purchase",
-    min_events: int = 2,
-) -> DataFrame:
+def interval_coactivity_counts(events: DataFrame) -> DataFrame:
     """COUNT overlapping same-day interval pairs WITHOUT materializing
     them — the O(n log n) counting complement to
     interval_coactivity_pairs (use that when downstream needs the pair
@@ -214,17 +208,7 @@ def interval_coactivity_counts(
     over 2n endpoint rows. Exact integer µs endpoints; returns
     (day, n_pairs), identical values to the pair-materializing plan
     (the registry pins both to the same oracle)."""
-    from pyspark.sql import Window
-
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    iv = (
-        events.filter(F.col("event_type") == event_type)
-        .select(F.to_date("ts").alias("day"), "user_id", us.alias("t"))
-        .groupBy("day", "user_id")
-        .agg(F.min("t").alias("s"), F.max("t").alias("e"), F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_events)
-        .drop("n")
-    )
+    iv = _purchase_intervals(events)
     endpoints = iv.select(
         "day", F.col("s").alias("t"), F.lit(0).alias("kind")
     ).unionByName(iv.select("day", F.col("e").alias("t"), F.lit(1).alias("kind")))

@@ -48,20 +48,20 @@ def knn_cosine(
     )
 
 
-def embedding_norms_by_label(emb: DataFrame, round_digits: int = 6) -> DataFrame:
-    """Per-label vector stats (count + mean L2 norm) — the sanity
-    profile for an embedding corpus."""
+def embedding_norms_by_label(emb: DataFrame) -> DataFrame:
+    """Per-label vector stats (count + mean L2 norm, rounded to 6 dp) —
+    the sanity profile for an embedding corpus."""
     return (
         emb.select("label", l2_norm("embedding").alias("norm"))
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_vectors"),
-            F.round(F.avg("norm"), round_digits).alias("avg_norm"),
+            F.round(F.avg("norm"), 6).alias("avg_norm"),
         )
     )
 
 
-def cosine_nn_within_label(emb: DataFrame, round_digits: int = 6) -> DataFrame:
+def cosine_nn_within_label(emb: DataFrame) -> DataFrame:
     """Exact nearest neighbour (by cosine) for every vector WITHIN its
     label block — the kNN-graph construction step of embedding-based
     near-dup detection (threshold the edges downstream).
@@ -74,7 +74,7 @@ def cosine_nn_within_label(emb: DataFrame, round_digits: int = 6) -> DataFrame:
     task reaches the exchange. Vectors whose label block has size 1
     have no neighbour and are absent (matches the oracle join).
 
-    Similarity is rounded before the argmax so ranking ties are
+    Similarity is rounded to 6 dp before the argmax so ranking ties are
     engine-stable; ties break to the LOWEST neighbour vec_id (the
     struct max compares -vec_id after cos_sim).
 
@@ -110,9 +110,7 @@ def cosine_nn_within_label(emb: DataFrame, round_digits: int = 6) -> DataFrame:
     )
     best = F.max(
         F.struct(
-            F.round(
-                cosine_fixed("__emb", "__emb_b", dim), round_digits
-            ).alias("cos_sim"),
+            F.round(cosine_fixed("__emb", "__emb_b", dim), 6).alias("cos_sim"),
             (-F.col("__vid_b")).alias("__neg_id"),
             F.col("__vid_b").alias("nn_vec_id"),
         )
@@ -132,14 +130,12 @@ def rrf_fuse(
     rankings: list[DataFrame],
     id_col: str,
     k: int = 10,
-    c: int = 60,
     r: int = 100,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR'09)
-    of N retrieval rankings: score(d) = Σ over lists 1/(c + rank) for
-    the lists that retrieved d within their top-``r`` — the standard
-    hybrid-retrieval combiner for a lexical (BM25) and a semantic
+    of N retrieval rankings: score(d) = Σ 1/(60 + rank) over the lists
+    that retrieved d within their top-``r``, rounded to 6 dp — the
+    standard hybrid-retrieval combiner for a lexical (BM25) and a semantic
     (embedding-cosine) list, score-scale-free by construction.
 
     Each input frame is (``id_col``, score) with higher = better; the
@@ -151,7 +147,7 @@ def rrf_fuse(
     k-row-probe exception to the no-global-window rule). The fusion
     join carries ≤ N·r rows. Input-score ties and fused-score ties
     both break on the id, and contributions are summed in list order
-    (1/(c+rank) terms are exact double quotients of small ints), so
+    (1/(60+rank) terms are exact double quotients of small ints), so
     the fused scores are engine- and run-stable.
 
     Precondition: each ranking frame should carry ONE row per id (the
@@ -183,7 +179,7 @@ def rrf_fuse(
         contribs.append(
             ranked.select(
                 id_col,
-                (F.lit(1.0) / (F.lit(float(c)) + F.col("rank"))).alias(f"rrf_{i}"),
+                (F.lit(1.0) / (F.lit(60.0) + F.col("rank"))).alias(f"rrf_{i}"),
             )
         )
     fused = contribs[0]
@@ -194,7 +190,7 @@ def rrf_fuse(
         term = F.coalesce(F.col(f"rrf_{i}"), F.lit(0.0))
         total = term if total is None else total + term
     return (
-        fused.select(id_col, F.round(total, round_digits).alias("rrf_score"))
+        fused.select(id_col, F.round(total, 6).alias("rrf_score"))
         .orderBy(F.col("rrf_score").desc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -314,24 +310,19 @@ def brp_lsh_projections(num_hash_tables: int, d: int) -> list[tuple[int, list[fl
     return rows
 
 
-def brp_lsh_ann_pairs(
-    emb: DataFrame,
-    bucket_length: float = 1.0,
-    num_hash_tables: int = 3,
-    max_distance: float = 1.2,
-) -> DataFrame:
+def brp_lsh_ann_pairs(emb: DataFrame, max_distance: float = 1.2) -> DataFrame:
     """Approximate near-neighbour PAIRS via random-projection LSH.
 
     Returns (vec_id_a, vec_id_b, euclidean_dist) with a < b and
     distance < max_distance. Deterministic. This is the sub-quadratic
     ANN path; the brute-force functions above are its accuracy oracle.
 
-    md5-derived unit projection directions (brp_lsh_projections), the
-    floor(v·r / bucketLength) bucketing, candidate join on equal
-    (table, bucket), and the exact euclidean verify — every stage is
-    SQL-replayable, because the only randomness is a hash both engines
-    compute (full oracle since r12). Plan shape: explode ×H, equi-join
-    blocking, never all-pairs.
+    Three md5-derived unit projection directions (brp_lsh_projections),
+    the floor(v·r / bucketLength) bucketing with bucketLength 1.0,
+    candidate join on equal (table, bucket), and the exact euclidean
+    verify — every stage is SQL-replayable, because the only randomness
+    is a hash both engines compute (full oracle since r12). Plan shape:
+    explode ×3, equi-join blocking, never all-pairs.
 
     Rows with a NULL embedding never form a pair; an input with no
     non-NULL embedding returns the empty pair frame, and mixed
@@ -346,7 +337,7 @@ def brp_lsh_ann_pairs(
     d = embedding_dim(emb)
     pv = values_table(
         emb.sparkSession,
-        brp_lsh_projections(num_hash_tables, d),
+        brp_lsh_projections(3, d),
         "h int, rv array<double>",
     )
     pscal = pv.agg(
@@ -377,7 +368,6 @@ def brp_lsh_ann_pairs(
     # built per-element through py4j cost ~2 s of plan-BUILD time
     # per dispatch; the equivalent SQL text parses JVM-side into
     # the identical tree (same fold order — collect()-equal).
-    bl = f"cast('{float(bucket_length)!r}' as double)"
     hashed = (
         ve.crossJoin(F.broadcast(pscal))
         .select(
@@ -385,7 +375,8 @@ def brp_lsh_ann_pairs(
             F.explode(
                 F.expr(
                     "transform(parr, s -> struct(s.h as h, "
-                    f"cast(floor(({dot_fixed_sql('e', 's.rv', d)}) / {bl}) "
+                    f"cast(floor(({dot_fixed_sql('e', 's.rv', d)}) / "
+                    "cast('1.0' as double)) "
                     "as bigint) as bucket))"
                 )
             ).alias("hb"),
@@ -442,7 +433,7 @@ def brp_lsh_ann_pairs(
     )
 
 
-def label_pca_variance(emb: DataFrame, iters: int = 24) -> DataFrame:
+def label_pca_variance(emb: DataFrame) -> DataFrame:
     """Per-label PCA summary — cluster-compactness signal (collapsed
     embedding groups have explained_ratio → 1) via DETERMINISTIC power
     iteration on the EXACT integer Gram matrix. Full-oracle since r12
@@ -459,7 +450,7 @@ def label_pca_variance(emb: DataFrame, iters: int = 24) -> DataFrame:
        collected.
     2. The driver (Python arbitrary-precision ints) forms the centered
        Gram matrix exactly: μ_i = round-half-away(S_i/n) as integers,
-       G_ij = M_ij − μ_i·S_j − μ_j·S_i + n·μ_i·μ_j, then runs ``iters``
+       G_ij = M_ij − μ_i·S_j − μ_j·S_i + n·μ_i·μ_j, then runs 24
        power-iteration sweeps from the all-ones vector with integer
        renormalization (v ← trunc(w·2^20 / max|w|)) — every
        intermediate is an exact integer, so the unrolled-CTE oracle
@@ -468,7 +459,7 @@ def label_pca_variance(emb: DataFrame, iters: int = 24) -> DataFrame:
     3. Outputs per label: n_vectors, total_variance = trace(G)/(n·SCALE²),
        leading_eigenvalue = Rayleigh quotient (vᵀGv)/(vᵀv)/(n·SCALE²)
        — a deterministic LOWER bound of λ₁ that converges as
-       (λ₂/λ₁)^iters (accuracy pinned by pytest on a gapped spectrum)
+       (λ₂/λ₁)^24 (accuracy pinned by pytest on a gapped spectrum)
        — and explained_ratio = leading/trace (null when trace = 0).
        The only doubles are the final three divisions, identically
        parenthesized in both engines, rounded HALF_UP at 6dp
@@ -548,7 +539,7 @@ def label_pca_variance(emb: DataFrame, iters: int = 24) -> DataFrame:
             G[i][j] = gij
             G[j][i] = gij
         v = [V_SCALE] * d
-        for _ in range(iters):
+        for _ in range(24):
             w = [sum(G[i][j] * v[j] for j in range(d)) for i in range(d)]
             aw = max(abs(x) for x in w)
             if aw == 0:
@@ -582,12 +573,10 @@ def label_pca_variance(emb: DataFrame, iters: int = 24) -> DataFrame:
     )
 
 
-def _within_cluster_drop(
-    asg: DataFrame, cids: list[int], dim: int, threshold: float
-) -> DataFrame:
+def _within_cluster_drop(asg: DataFrame, cids: list[int], dim: int) -> DataFrame:
     """The within-cluster pair drop both SemDeDup variants end with:
-    over ``asg`` = (vec_id, embedding, cid), find cosine >=
-    ``threshold`` pairs inside each cluster and drop the higher vec_id
+    over ``asg`` = (vec_id, embedding, cid), find cosine >= 0.999
+    pairs inside each cluster and drop the higher vec_id
     of each pair. Returns (centroid_id, n_kept, n_dropped) for every
     id in ``cids``, empty clusters included."""
     spark = asg.sparkSession
@@ -609,7 +598,7 @@ def _within_cluster_drop(
     dropped = (
         a.join(b, "cid")
         .filter(F.col("va") < F.col("vb"))
-        .filter(cosine_fixed("ea", "eb", dim) >= F.lit(threshold))
+        .filter(cosine_fixed("ea", "eb", dim) >= F.lit(0.999))
         .select("cid", "vb")
         .distinct()
         .groupBy("cid")
@@ -635,14 +624,13 @@ def semdedup_drop(
     emb: DataFrame,
     k: int = 8,
     max_sweeps: int = 3,
-    threshold: float = 0.999,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup scoped to TRAINED
     k-means clusters — the production alternative to the label-blocked
     ``embedding_near_dup_drop`` when no natural blocking key exists.
     Fit k centroids (exact fixed-point Lloyd, operators/kmeans.py),
     assign every vector zero-shuffle against the centroid literal,
-    then find cosine >= ``threshold`` pairs WITHIN each cluster and
+    then find cosine >= 0.999 pairs WITHIN each cluster and
     drop the higher vec_id of each pair.
 
     Returns (centroid_id, n_kept, n_dropped) per cluster, every
@@ -684,7 +672,7 @@ def semdedup_drop(
         _best(F.col("cents_arr"))["cid"].alias("cid"),
     )
     dim = len(cents[0][1]) if cents else 0
-    return _within_cluster_drop(asg, [cid for cid, _ in cents], dim, threshold)
+    return _within_cluster_drop(asg, [cid for cid, _ in cents], dim)
 
 
 def semdedup_drop_pruned(
@@ -692,8 +680,6 @@ def semdedup_drop_pruned(
     k: int = 64,
     coarse: int | None = None,
     max_sweeps: int = 3,
-    threshold: float = 0.999,
-    sample_cap: int = 32768,
 ) -> DataFrame:
     """SemDeDup with the assignment cost PRUNED for k ∝ N (the Abbas
     et al. production regime, k ≈ N/100). ``semdedup_drop`` holds its
@@ -703,7 +689,7 @@ def semdedup_drop_pruned(
     ×38 wall at ×30 data with k=8→240; fixed k=8 was killed in the
     ×900 pair-join regime). This operator is the faiss-IVF recipe:
 
-    1. FIT ON A SAMPLE — ≤``sample_cap`` vectors chosen
+    1. FIT ON A SAMPLE — ≤ 32768 vectors chosen
        deterministically (TakeOrdered by the md5-derived
        ``portable_hash60(vec_id)``, so a DuckDB oracle replays the
        sample order bit-for-bit), collected
@@ -757,7 +743,7 @@ def semdedup_drop_pruned(
     sample = (
         scaled_vectors(emb)
         .orderBy(portable_hash60(F.col("vec_id").cast("string")), "vec_id")
-        .limit(sample_cap)
+        .limit(32768)
         .collect()
     )
     if not sample:
@@ -780,7 +766,7 @@ def semdedup_drop_pruned(
         )
 
     def lloyd(P: "np.ndarray", kk: int) -> "np.ndarray":
-        """Exact-int driver Lloyd over ≤sample_cap points: int64-exact
+        """Exact-int driver Lloyd over ≤ 32768 points: int64-exact
         squared distances, floor-division update, first-min argmin —
         deterministic for a given (hash-ordered) sample order."""
         kk = min(kk, len(P))
@@ -854,21 +840,14 @@ def semdedup_drop_pruned(
     cell_arr = F.element_at(F.col("fine_map"), _best(F.col("cents_arr"))["cid"])
     asg = vecs.select("vec_id", "embedding", _best(cell_arr)["cid"].alias("cid"))
     cids = [cid for ci in fine for cid, _ in fine[ci]]
-    return _within_cluster_drop(asg, cids, int(pts.shape[1]), threshold)
+    return _within_cluster_drop(asg, cids, int(pts.shape[1]))
 
 
-def mmr_rerank(
-    emb: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    lam: float = 0.7,
-    r: int = 50,
-    round_digits: int = 6,
-) -> DataFrame:
+def mmr_rerank(emb: DataFrame, k: int = 10, r: int = 50) -> DataFrame:
     """Maximal Marginal Relevance rerank (Carbonell & Goldstein,
-    SIGIR'98): greedily pick ``k`` of the top-``r`` candidates by
-    score = λ·relevance − (1−λ)·max-similarity-to-already-selected —
-    the diversity-aware answer to "top-k cosine returns k near-copies"
+    SIGIR'98): greedily pick ``k`` of the top-``r`` cosine neighbours
+    of vector 0 by score = λ·relevance − (1−λ)·max-similarity-to-
+    already-selected with λ = 0.7 — the diversity-aware answer to "top-k cosine returns k near-copies"
     (and the retrieval-time complement of SemDeDup, which removes the
     copies corpus-side).
 
@@ -879,13 +858,13 @@ def mmr_rerank(
     as the registry's 1-row query fetch and ≤20-row lineage cut (the
     k-step argmax is inherently sequential — k tiny Spark jobs would
     add k scheduling floors to rerank 50 rows). All similarities are
-    rounded to ``round_digits`` before any comparison and ties break
+    rounded to 6 dp before any comparison and ties break
     to the lowest vec_id, so the selection is engine- and run-stable.
 
     Returns (mmr_rank 1..k, vec_id, relevance, mmr_score) as a
     DataFrame built from the selection."""
     cand_rows = (
-        knn_cosine(emb, query_vec_id=query_vec_id, k=r, round_digits=round_digits)
+        knn_cosine(emb, k=r)
         .join(emb.select("vec_id", "embedding"), "vec_id")
         .select("vec_id", "cos_sim", "embedding")
         .collect()
@@ -902,7 +881,7 @@ def mmr_rerank(
     # exact .5 ties), which is what lets a SQL oracle replay the greedy
     from decimal import ROUND_HALF_UP, Decimal
 
-    quant = Decimal(1).scaleb(-round_digits)
+    quant = Decimal(1).scaleb(-6)
 
     def _rnd(x: float) -> float:
         return float(Decimal(x).quantize(quant, rounding=ROUND_HALF_UP))
@@ -936,11 +915,11 @@ def mmr_rerank(
         best = None
         for vid, rel, e in remaining:
             # the score is NOT rounded: rel and max_sim sit on the 1e-6
-            # grid, so lam·rel − (1−lam)·max_sim is an exact 7-decimal
+            # grid, so λ·rel − (1−λ)·max_sim is an exact 7-decimal
             # value — rounding it to 6 digits would hit .5 ties
             # systematically (where engines' rounding modes differ),
             # while the raw double is bit-identical across engines
-            score = lam * rel - (1.0 - lam) * max_sim.get(vid, 0.0)
+            score = 0.7 * rel - (1.0 - 0.7) * max_sim.get(vid, 0.0)
             cand_key = (-score, vid)
             if best is None or cand_key < best[0]:
                 best = (cand_key, vid, rel, score, e)

@@ -280,20 +280,19 @@ def bloom_membership_report(
     item_col: str,
     terms: list[str],
     n_bits: int = 256,
-    k: int = 4,
 ) -> DataFrame:
     """Bloom-filter membership report — the MEMBERSHIP member of the
     sketch family (CMS bounds frequencies, MG finds heavy hitters,
     HLL bounds distincts): build the ``n_bits``-bit filter over the
     distinct items (bit positions = md5("i:item") mod n_bits, the
-    repo's engine-portable hash, i < k), then probe each query term.
+    repo's engine-portable hash, i < 4), then probe each query term.
     Returns (item, in_filter, actually_present): the defining
     guarantee is NO FALSE NEGATIVES (present ⇒ in_filter, pinned by
     pytest); absent probes may honestly collide to true.
 
-    Scale shape: one map-side-combined distinct to NDV, a ×k fan-out
+    Scale shape: one map-side-combined distinct to NDV, a ×4 fan-out
     to ≤ n_bits distinct set positions (the whole filter state — the
-    broadcast side of the probe join), and a k-row-per-term probe.
+    broadcast side of the probe join), and a 4-row-per-term probe.
     The ``actually_present`` diagnostic joins the probe terms against
     the vocabulary FILTERED to the bounded term list (the isin pushes
     into the scan), so only a ≤ len(terms)-row frame is ever
@@ -308,7 +307,7 @@ def bloom_membership_report(
         return df.select(
             "item",
             F.explode(
-                F.array(*[_cms_bucket(i, F.col("item"), n_bits) for i in range(k)])
+                F.array(*[_cms_bucket(i, F.col("item"), n_bits) for i in range(4)])
             ).alias("pos"),
         )
 
@@ -318,7 +317,7 @@ def bloom_membership_report(
         positions(q)
         .join(F.broadcast(set_bits.withColumn("__hit", F.lit(1))), "pos", "left")
         .groupBy("item")
-        .agg((F.count("__hit") == k).alias("in_filter"))
+        .agg((F.count("__hit") == 4).alias("in_filter"))
     )
     present = vocab.filter(F.col("item").isin(list(terms))).withColumn(
         "__present", F.lit(True)
@@ -338,13 +337,12 @@ def cms_join_size_estimate(
     a: DataFrame,
     b: DataFrame,
     item_col: str,
-    depth: int = 4,
     width: int = 256,
 ) -> DataFrame:
     """JOIN-SIZE ESTIMATION by Count-Min inner product (the classic
     streaming join-cardinality estimator — Alon/Gibbons/Matias/Szegedy
     sketch lineage, CMS form per Cormode & Muthukrishnan 2005 §4.2):
-    |A ⋈_k B| = Σ_v f_A(v)·f_B(v), estimated as min over the d hash
+    |A ⋈_k B| = Σ_v f_A(v)·f_B(v), estimated as min over the 4 hash
     rows of Σ_w cmsA[i][w]·cmsB[i][w]. The estimate NEVER
     underestimates (every collision adds non-negative cross terms),
     and E[error] ≤ ||f_A||₁·||f_B||₁ / width per row — the property
@@ -355,7 +353,7 @@ def cms_join_size_estimate(
     cms_estimate, rel_err). Exact side = one groupBy per input + a
     key join over NDV-sized frames; sketch side = two cms_cells
     passes (md5-portable buckets — a SQL engine replays every cell)
-    joined on (row, bucket), d·w-bounded. At 100 TB the exact side is
+    joined on (row, bucket), 4·w-bounded. At 100 TB the exact side is
     the expensive path (full NDV shuffle both inputs) and exists here
     as the report's ground truth; the sketches are mergeable
     micro-state a stream maintains for free."""
@@ -371,8 +369,8 @@ def cms_join_size_estimate(
         .cast("long")
         .alias("exact_size")
     )
-    ca = cms_cells(a.select(key), "item", depth=depth, width=width)
-    cb = cms_cells(b.select(key), "item", depth=depth, width=width)
+    ca = cms_cells(a.select(key), "item", width=width)
+    cb = cms_cells(b.select(key), "item", width=width)
     est = (
         ca.alias("x")
         .join(
@@ -470,7 +468,6 @@ def hdr_quantile_report(
     value_col: str,
     half_col: str,
     probes: list[tuple[int, int]],
-    mantissa_bits: int = 7,
 ) -> DataFrame:
     """Quantile report from the HDR sketch, the count_min_report merge-
     law harness shape: for each probe quantile num/den report
@@ -489,21 +486,21 @@ def hdr_quantile_report(
       cumulative exact count ≥ r), the report's ground truth — the
       expensive full-NDV path that exists HERE as proof while the
       sketch is what a stream maintains;
-    - rel_err = (exact − est)/exact ∈ [0, 2^−b) — the sketch
+    - rel_err = (exact − est)/exact ∈ [0, 2^−7) — the sketch
       guarantee as a checked number (pytest-pinned bound).
 
     Everything after the per-value aggregates is cell-table-sized
-    (≤ (64−b)·2^b rows), broadcast into the probe joins."""
+    (≤ 7,296 rows), broadcast into the probe joins."""
     h0 = F.col(half_col) % 2 == 0
     base = df.select(
         F.col(value_col).cast("long").alias("v"), h0.alias("h0")
     ).filter(F.col("v") > 0)
     spark = df.sparkSession
 
-    cells = hdr_cells(base, "v", mantissa_bits)
+    cells = hdr_cells(base, "v")
     merged = merge_hdr_cells(
-        hdr_cells(base.filter(F.col("h0")), "v", mantissa_bits),
-        hdr_cells(base.filter(~F.col("h0")), "v", mantissa_bits),
+        hdr_cells(base.filter(F.col("h0")), "v"),
+        hdr_cells(base.filter(~F.col("h0")), "v"),
     )
 
     w = Window.orderBy("blo").rowsBetween(Window.unboundedPreceding, 0)
@@ -750,7 +747,6 @@ def mg_rescored_topk(
     col: str,
     topk: int = 25,
     k: int = 256,
-    max_doublings: int = 3,
 ) -> DataFrame:
     """Sketch-ACCELERATED EXACT top-k — the two-pass production
     pattern for heavy hitters at 100 TB (candidates-then-rescore;
@@ -770,15 +766,15 @@ def mg_rescored_topk(
     provably equals the exact full-vocabulary top-k, and the oracle
     replays the plain exact SQL. Otherwise the guarantee does not
     cover ``topk`` ranks — the operator then AUTO-ESCALATES, retrying
-    with doubled k up to ``max_doublings`` times (VERDICT r11 #6: the
+    with doubled k up to three times (VERDICT r11 #6: the
     ×30 growth run refused at k=256 and needed a manual k=1024; the
     escalation makes the lane run unattended while the certificate
     semantics are unchanged — the returned answer is still provably
     exact, never silently approximate). Only when the doubled ladder
     is exhausted does it REFUSE loudly (raise, not an approximate
-    answer) — raise k or max_doublings."""
+    answer) — raise k."""
     last_err = ""
-    for attempt in range(max_doublings + 1):
+    for attempt in range(4):
         k_try = k << attempt
         cands = sorted(
             r["item"] for r in misra_gries_topk(df, col, k_try).collect()
@@ -801,7 +797,7 @@ def mg_rescored_topk(
         last_err = (
             f"k={k_try}, N={n_total}, kth={exact[-1][1] if exact else 0}"
         )
-        if attempt < max_doublings:
+        if attempt < 3:
             _log.warning(
                 "mg_rescored_topk: certificate failed (%s); escalating to k=%d",
                 last_err, k_try * 2,
@@ -809,8 +805,7 @@ def mg_rescored_topk(
     else:
         raise ValueError(
             f"MG guarantee does not cover {topk} ranks here after "
-            f"{max_doublings} doublings ({last_err}); "
-            "raise k or max_doublings"
+            f"3 doublings ({last_err}); raise k"
         )
     # return the top-k as a lazy re-aggregation (same plan shape the
     # action re-executes; the guard above already proved exactness)

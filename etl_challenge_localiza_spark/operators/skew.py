@@ -4,13 +4,13 @@ overwhelms one shuffle partition even after AQE).
 
 Technique: the build (dim) side is replicated once per salt value; the
 probe (fact) side derives a deterministic salt from a high-cardinality
-column, so each hot key's rows spread over ``n_salts`` partitions. The
+column, so each hot key's rows spread over 8 partitions. The
 join result is IDENTICAL to the unsalted join — which is exactly how
 the registry verifies it (the oracle is the plain SQL join).
 
 Use when: key frequency is power-law (user events, null-ish defaults)
 and the hot keys are not broadcastable away. Cost: build side grows
-×n_salts — keep n_salts small (8-32) and the build side slim.
+×8 — keep the build side slim.
 """
 
 from __future__ import annotations
@@ -25,9 +25,6 @@ def planner_join_audit(
     key_col: str,
     join_name: str,
     broadcast_rows: int = 100_000,
-    hot_share_salt: float = 0.10,
-    depth: int = 4,
-    width: int = 256,
 ) -> DataFrame:
     """One-row 'PLANNER INPUTS' report for an equi-join (VERDICT r13
     #6): the decision table a 100 TB operator reads before committing
@@ -38,7 +35,7 @@ def planner_join_audit(
       key cardinalities (one map-side-combined groupBy per side, the
       key_skew_profile altitude — NDV-sized frames, never data);
     - exact_join_rows: Σ_k na(k)·nb(k), the ground truth;
-    - cms_estimate + cms_rel_err: the d×w Count-Min inner-product
+    - cms_estimate + cms_rel_err: the 4×256 Count-Min inner-product
       estimate (cms_join_size_estimate's sketch path) — what a planner
       would ACTUALLY have at plan time, shown against the truth it
       estimates;
@@ -49,11 +46,10 @@ def planner_join_audit(
     - strategy: the deterministic recommendation those inputs imply —
       'broadcast' when either side fits the row threshold (rows as the
       testable proxy for AQE's byte threshold), else 'shuffle_salted'
-      when hot_key_share exceeds ``hot_share_salt``, else
-      'shuffle_hash'.
+      when hot_key_share exceeds 0.10, else 'shuffle_hash'.
 
-    Thresholds are illustrative planner defaults, surfaced as
-    parameters; the REPORT is the point — exact vs estimate in one row
+    Thresholds are illustrative planner defaults; the REPORT is the
+    point — exact vs estimate in one row
     per join, so estimator drift is a visible number (pytest drives
     the salted/shuffle branches on constructed skew).
 
@@ -122,10 +118,10 @@ def planner_join_audit(
                         F.struct(
                             F.lit(i).alias("row"),
                             _cms_bucket(
-                                i, F.col("k").cast("string"), width
+                                i, F.col("k").cast("string"), 256
                             ).alias("bucket"),
                         )
-                        for i in range(depth)
+                        for i in range(4)
                     ]
                 )
             ).alias("c"),
@@ -180,7 +176,7 @@ def planner_join_audit(
                 <= F.lit(broadcast_rows),
                 F.lit("broadcast"),
             )
-            .when(hot_share > F.lit(hot_share_salt), F.lit("shuffle_salted"))
+            .when(hot_share > F.lit(0.10), F.lit("shuffle_salted"))
             .otherwise(F.lit("shuffle_hash"))
             .alias("strategy"),
         )
@@ -193,12 +189,10 @@ def salted_join(
     fact_key: str,
     dim_key: str,
     salt_source: str,
-    n_salts: int = 8,
-    how: str = "inner",
     force_shuffle: bool = False,
 ) -> DataFrame:
-    """Equi-join ``fact ⋈ dim`` with the fact side salted on
-    xxhash64(salt_source) % n_salts and the dim side replicated.
+    """Inner equi-join ``fact ⋈ dim`` with the fact side salted on
+    xxhash64(salt_source) % 8 and the dim side replicated 8 times.
 
     ``salt_source`` must be a (near-)unique fact column (an id) so the
     salt spreads rows evenly and deterministically. ``force_shuffle``
@@ -208,15 +202,15 @@ def salted_join(
     """
     spark = fact.sparkSession
     fact_s = fact.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts)).cast("int")
+        "__salt", F.pmod(F.xxhash64(F.col(salt_source)), F.lit(8)).cast("int")
     )
-    salts = spark.range(n_salts).select(F.col("id").cast("int").alias("__salt"))
+    salts = spark.range(8).select(F.col("id").cast("int").alias("__salt"))
     dim_s = dim.crossJoin(salts)
     if force_shuffle:
         dim_s = dim_s.hint("shuffle_hash")
     out = fact_s.join(
         dim_s,
         (fact_s[fact_key] == dim_s[dim_key]) & (fact_s["__salt"] == dim_s["__salt"]),
-        how,
+        "inner",
     )
     return out.drop("__salt")

@@ -76,8 +76,8 @@ def doc_quality(docs: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Exact TF-IDF with top-k terms per document.
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Exact TF-IDF with the top 3 terms per document.
 
     tf = term count in doc; idf = ln((N+1)/(df+1)) + 1 (smoothed);
     exact integer counts + a fixed-form double expression → engine-
@@ -115,7 +115,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("token").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
         .select("doc_id", "token", "tf", "df", "tfidf", "rank")
     )
 
@@ -320,21 +320,19 @@ def bm25_topk(
     docs: DataFrame,
     terms: list[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    round_digits: int = 6,
 ) -> DataFrame:
     """BM25 ranked retrieval (Robertson/Okapi, idf = ln((N-df+0.5)/
-    (df+0.5)+1)) for one query over the corpus — the scoring layer the
-    inverted-index build feeds. Returns the top-``k`` (doc_id, bm25).
+    (df+0.5)+1), k1 = 1.2, b = 0.75) for one query over the corpus —
+    the scoring layer the inverted-index build feeds. Returns the
+    top-``k`` (doc_id, bm25).
 
     Plan shape: the exploded token stream is filtered to the query
     terms BEFORE the (doc, term) aggregation — per-term work is
     |query| wide, not |vocab|; corpus stats (N, avgdl) and per-term df
     are tiny aggregates broadcast back (scalar-broadcast pattern);
-    the per-doc sum is rounded before ranking (engine-portability
-    rule for float reductions) with a doc_id tiebreak, and the top-k
-    is TakeOrderedAndProject — no global sort."""
+    the per-doc sum is rounded to 6 dp before ranking
+    (engine-portability rule for float reductions) with a doc_id
+    tiebreak, and the top-k is TakeOrderedAndProject — no global sort."""
     toks = docs.select("doc_id", tokens(F.col("text")).alias("tk"))
     dl = toks.select("doc_id", F.size("tk").cast("long").alias("dl"))
     stats = dl.agg(
@@ -350,8 +348,8 @@ def bm25_topk(
     dfreq = wc.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("df"))
     part = (
         F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-        * (F.col("tf") * F.lit(k1 + 1.0))
-        / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl")))
+        * (F.col("tf") * F.lit(2.2))
+        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.col("avgdl")))
     )
     return (
         wc.join(F.broadcast(dfreq), "w")
@@ -359,7 +357,7 @@ def bm25_topk(
         .crossJoin(F.broadcast(stats))
         .select("doc_id", part.alias("part"))
         .groupBy("doc_id")
-        .agg(F.round(F.sum("part"), round_digits).alias("bm25"))
+        .agg(F.round(F.sum("part"), 6).alias("bm25"))
         .orderBy(F.col("bm25").desc(), "doc_id")
         .limit(k)
     )

@@ -74,8 +74,8 @@ def gap_fill_hourly(events: DataFrame, keep_null_sum: bool = False) -> DataFrame
     )
 
 
-def rolling_daily_revenue(orders: DataFrame, days: int = 7) -> DataFrame:
-    """Daily order revenue plus a trailing ``days``-day rolling sum.
+def rolling_daily_revenue(orders: DataFrame) -> DataFrame:
+    """Daily order revenue plus a trailing 7-day rolling sum.
 
     The range frame is expressed on epoch-day integers (identical frame
     semantics in Spark and ANSI SQL engines); revenue accumulates in
@@ -85,26 +85,26 @@ def rolling_daily_revenue(orders: DataFrame, days: int = 7) -> DataFrame:
         F.sum(F.col("o_totalprice").cast("decimal(14,2)")).alias("rev")
     )
     day_no = F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date"))
-    w = Window.orderBy(day_no).rangeBetween(-(days - 1), 0)
+    w = Window.orderBy(day_no).rangeBetween(-6, 0)
     return daily.select(
         "o_orderdate",
         F.col("rev").cast("double").alias("day_revenue"),
-        F.sum("rev").over(w).cast("double").alias(f"rolling_{days}d_revenue"),
+        F.sum("rev").over(w).cast("double").alias("rolling_7d_revenue"),
     )
 
 
 def rolling_distinct_users(
-    events: DataFrame, days: int = 7, ts_col: str = "ts", user_col: str = "user_id"
+    events: DataFrame, ts_col: str = "ts", user_col: str = "user_id"
 ) -> DataFrame:
-    """Exact trailing-``days``-day DISTINCT-user count per observed day
+    """Exact trailing-7-day DISTINCT-user count per observed day
     (rolling DAU/WAU) — the rolling metric a RANGE window cannot
     express (SUM distributes over frames; COUNT(DISTINCT) does not)
     and a sketch only approximates.
 
-    Plan shape: dedup to (user, day) pairs, then a BOUNDED ×``days``
-    explode (each pair contributes to the ``days`` target days it
+    Plan shape: dedup to (user, day) pairs, then a BOUNDED ×7
+    explode (each pair contributes to the 7 target days it
     stays visible in) followed by a second dedup and a tiny per-day
-    count. Cost at any scale: two keyed shuffles on frames ≤ days ×
+    count. Cost at any scale: two keyed shuffles on frames ≤ 7 ×
     |user-days| — no global window, no per-user history rescan, no
     quadratic self-join on days. The observed-day filter is a
     broadcast semi-join (days are few even at 100 TB).
@@ -114,17 +114,17 @@ def rolling_distinct_users(
     obs = ud.select("day").distinct()
     tgt = ud.select(
         F.explode(
-            F.sequence(F.col("day"), F.date_add(F.col("day"), days - 1))
+            F.sequence(F.col("day"), F.date_add(F.col("day"), 6))
         ).alias("day"),
         "user_id",
     ).distinct()
     win = (
         tgt.join(F.broadcast(obs), "day")
         .groupBy("day")
-        .agg(F.count(F.lit(1)).cast("long").alias(f"users_{days}d"))
+        .agg(F.count(F.lit(1)).cast("long").alias("users_7d"))
     )
     dau = ud.groupBy("day").agg(F.count(F.lit(1)).cast("long").alias("dau"))
-    return dau.join(win, "day").select("day", "dau", f"users_{days}d")
+    return dau.join(win, "day").select("day", "dau", "users_7d")
 
 
 def rolling_interval_exact(
@@ -132,24 +132,23 @@ def rolling_interval_exact(
     key: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    interval_us: int = 3_600_000_000,
 ) -> DataFrame:
-    """Trailing-interval count + exact decimal sum per event, as the
+    """Trailing-hour count + exact decimal sum per event, as the
     DIFFERENCE OF TWO ADD-ONLY PREFIX FRAMES instead of one sliding
     RANGE frame.
 
-    Why: ``rangeBetween(-interval, 0)`` has a moving LOWER bound, so
+    Why: ``rangeBetween(-1 h, 0)`` has a moving LOWER bound, so
     Spark's SlidingWindowFunctionFrame must re-aggregate the frame
     whenever rows fall out (count/sum have no retract path) — O(rows x
     frame size) per partition, the one near-linear scaler in the
     round-5 relscale experiment (x16.5 wall at x30 data). Both frames
     here keep the lower bound PINNED at unboundedPreceding — one with
-    upper bound 0, one with upper bound -(interval+1) µs — so each is
+    upper bound 0, one with upper bound -(1 h + 1 µs) — so each is
     an add-only UnboundedPrecedingWindowFunctionFrame: O(rows) total,
     independent of event density. Same single shuffle on ``key``, same
     sort, two accumulators instead of one; and
 
-        rolling(t) = prefix(t) - prefix(t - interval - 1µs)
+        rolling(t) = prefix(t) - prefix(t - 1 h - 1 µs)
 
     is EXACT because both prefixes accumulate in decimal — the
     difference is the same rational as the direct frame sum, so the
@@ -176,7 +175,7 @@ def rolling_interval_exact(
     events = events.repartition(width, key)
     base = Window.partitionBy(key).orderBy(ts_us)
     w_cum = base.rangeBetween(Window.unboundedPreceding, 0)
-    w_before = base.rangeBetween(Window.unboundedPreceding, -(interval_us + 1))
+    w_before = base.rangeBetween(Window.unboundedPreceding, -3_600_000_001)
     return events.select(
         "*",
         (
@@ -192,9 +191,7 @@ def rolling_interval_exact(
     )
 
 
-def ewma_final(
-    events: DataFrame, alpha: float = 0.25, round_digits: int = 6
-) -> DataFrame:
+def ewma_final(events: DataFrame, alpha: float = 0.25) -> DataFrame:
     """Final exponentially-weighted moving average of ``value`` per
     user (the streaming-metric smoother: s1 = x1,
     s_n = α·x_n + (1-α)·s_{n-1}).
@@ -208,7 +205,7 @@ def ewma_final(
     O(rows) total, no driver loop, no recursive structure. Old terms
     underflow to 0.0 gracefully ((1-α)^k → 0), matching the math.
     The float reduction's accumulation order is engine-dependent, so
-    the result is rounded (engine-portability rule); counts pin the
+    the result is rounded to 6 dp (engine-portability rule); counts pin the
     partition structure exactly."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wall = Window.partitionBy("user_id")
@@ -224,7 +221,7 @@ def ewma_final(
     ).otherwise(F.lit(1.0))
     return rows.groupBy("user_id").agg(
         F.max("n").cast("long").alias("n_events"),
-        F.round(F.sum(F.col("x") * weight), round_digits).alias("ewma_value"),
+        F.round(F.sum(F.col("x") * weight), 6).alias("ewma_value"),
     )
 
 

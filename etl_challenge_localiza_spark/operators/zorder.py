@@ -34,12 +34,12 @@ def normalize_16(x: Column, lo: Column | int, hi: Column | int) -> Column:
     return F.floor(((x - lo_c) * F.lit(MAXV)).cast("long") / span).cast("long")
 
 
-def morton(a: Column, b: Column, bits: int = BITS) -> Column:
-    """Interleave the low ``bits`` bits of two non-negative ints:
+def morton(a: Column, b: Column) -> Column:
+    """Interleave the low ``BITS`` bits of two non-negative ints:
     bit i of ``a`` lands at position 2i, bit i of ``b`` at 2i+1."""
     one = F.lit(1).cast("long")
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(BITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(a, i).bitwiseAND(one), 2 * i).cast("long")
         )
@@ -49,19 +49,17 @@ def morton(a: Column, b: Column, bits: int = BITS) -> Column:
     return z
 
 
-def morton_sql(a: str, b: str, bits: int = BITS) -> str:
+def morton_sql(a: str, b: str) -> str:
     """The identical interleave as DuckDB SQL text (for oracles)."""
     terms = []
-    for i in range(bits):
+    for i in range(BITS):
         terms.append(f"((({a} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({b} >> {i}) & 1) << {2 * i + 1})")
     return " | ".join(terms)
 
 
-def zorder_write(
-    df: DataFrame, path: str, zcol: Column, n_files: int = 16
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files range-partitioned and
+def zorder_write(df: DataFrame, path: str, zcol: Column) -> None:
+    """Write ``df`` as 16 parquet files range-partitioned and
     sorted by the z-value — the OPTIMIZE ZORDER layout. Each file then
     covers a compact z-range, i.e. a compact box in (a, b) space, so
     its parquet column min/max statistics prune on BOTH dimensions.
@@ -69,7 +67,7 @@ def zorder_write(
     build balanced file-sized ranges — the same job shape at 100 TB."""
     (
         df.withColumn("__z", zcol)
-        .repartitionByRange(n_files, F.col("__z"))
+        .repartitionByRange(16, F.col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite")

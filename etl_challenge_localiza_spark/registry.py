@@ -821,7 +821,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     block doc-frequency > 100 dropped on BOTH sides — df-capped
     jaccard, the quadratic-hot-key guard)."""
     return ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.2, max_df=100
+        load_table(spark, sf_dir, "documents"), n=3, threshold=0.2
     )
 
 
@@ -1325,7 +1325,6 @@ def q_cms_join_size_estimate(spark, sf_dir):
         ev.filter(F.col("event_type") == "click").select("user_id"),
         ev.filter(F.col("event_type") == "purchase").select("user_id"),
         "user_id",
-        depth=4,
         width=256,
     )
 
@@ -1757,7 +1756,7 @@ def q_tfidf_top_terms(spark, sf_dir):
     """Exact TF-IDF, top-3 terms per document (smoothed ln idf)."""
     from .operators.textops import tfidf_top_terms
 
-    return tfidf_top_terms(load_table(spark, sf_dir, "documents"), k=3)
+    return tfidf_top_terms(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -1932,7 +1931,7 @@ def q_salted_revenue_by_region(spark, sf_dir):
     joined = salted_join(
         orders, customer,
         fact_key="o_custkey", dim_key="c_custkey",
-        salt_source="o_orderkey", n_salts=8, force_shuffle=True,
+        salt_source="o_orderkey", force_shuffle=True,
     )
     dec = F.col("o_totalprice").cast("decimal(14,2)")
     return (
@@ -2147,7 +2146,6 @@ def q_benchmark_contamination(spark, sf_dir):
     100 TB the benchmark side stays broadcastable while the training
     side streams through."""
     from .functions.text import shingles, tokens
-    from .operators.dedup import doc_shingles
 
     docs = load_table(spark, sf_dir, "documents")
     sh = docs.select(
@@ -2212,7 +2210,7 @@ def q_events_followup_pairs(spark, sf_dir):
     The oracle is the naive range join — result equivalence proven."""
     from .operators.rangejoin import events_within_window_pairs
 
-    return events_within_window_pairs(load_table(spark, sf_dir, "events"), 30)
+    return events_within_window_pairs(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -3050,7 +3048,7 @@ def q_user_rolling_hour_stats(spark, sf_dir):
     from .operators.timeseries import rolling_interval_exact
 
     ev = load_table(spark, sf_dir, "events")
-    return rolling_interval_exact(ev, interval_us=3_600_000_000).select(
+    return rolling_interval_exact(ev).select(
         "event_id",
         "user_id",
         F.col("__n_trail").cast("long").alias("n_last_hour"),
@@ -4438,7 +4436,7 @@ def q_rolling_7d_revenue(spark, sf_dir):
     both sums exact — see operators.timeseries."""
     from .operators.timeseries import rolling_daily_revenue
 
-    return rolling_daily_revenue(load_table(spark, sf_dir, "orders"), days=7)
+    return rolling_daily_revenue(load_table(spark, sf_dir, "orders"))
 
 
 @register(
@@ -7053,16 +7051,10 @@ def q_dsir_importance_weights(spark, sf_dir):
     exact int64 sums of 1e-6-scaled per-bucket log-ratios —
     order-independent, so the oracle hash-matches despite ln() in the
     pipeline (the 256 ln calls happen once per model row, not per
-    doc). The fit is memoized per session keyed by the table path
-    (curation.py:_DSIR_MODEL_CACHE — VERDICT r10 #2): repeated
-    dispatches and the curation_funnel sibling reuse the d literals
-    instead of re-running the two fit jobs."""
+    doc)."""
     from .operators.curation import dsir_log_weights
 
-    return dsir_log_weights(
-        load_table(spark, sf_dir, "documents"),
-        model_cache_key=f"{sf_dir}/documents",
-    )
+    return dsir_log_weights(load_table(spark, sf_dir, "documents"))
 
 
 def _km_sweep(prev: str, out: str, d: int = 64) -> str:
@@ -7240,7 +7232,7 @@ def q_curation_funnel(spark, sf_dir):
     keep_quality = quality_gate(docs).filter(F.col("keep")).select("doc_id")
     keep_model = hashed_feature_logit(docs).filter(F.col("model_pass")).select("doc_id")
     keep_dsir = (
-        dsir_log_weights(docs, model_cache_key=f"{sf_dir}/documents")
+        dsir_log_weights(docs)
         .filter(F.col("target_leaning"))
         .select("doc_id")
     )
@@ -7866,7 +7858,7 @@ def q_multimodal_video_frames(spark, sf_dir):
     from .operators.multimodal import sample_video_frames, synthetic_ppm_stream_assets
 
     docs = load_table(spark, sf_dir, "documents")
-    return sample_video_frames(synthetic_ppm_stream_assets(docs), stride=2)
+    return sample_video_frames(synthetic_ppm_stream_assets(docs))
 
 
 @register(
@@ -10553,7 +10545,7 @@ def q_eval_decontaminate_docs(spark, sf_dir):
         == "f"
     )
     return eval_decontaminate(
-        docs.filter(~is_eval), docs.filter(is_eval), w=5
+        docs.filter(~is_eval), docs.filter(is_eval)
     ).orderBy("doc_id")
 
 
@@ -11315,7 +11307,7 @@ def q_hybrid_rrf_topk(spark, sf_dir):
     semantic = knn_cosine(emb, query_vec_id=0, k=100).select(
         F.col("vec_id").alias("doc_id"), "cos_sim"
     )
-    return rrf_fuse([lexical, semantic], "doc_id", k=15, c=60, r=100)
+    return rrf_fuse([lexical, semantic], "doc_id", k=15, r=100)
 
 
 @register(
@@ -11343,7 +11335,7 @@ def q_rolling_7d_active_users(spark, sf_dir):
     rescan. The oracle replays the identical explode in SQL."""
     from .operators.timeseries import rolling_distinct_users
 
-    out = rolling_distinct_users(load_table(spark, sf_dir, "events"), days=7)
+    out = rolling_distinct_users(load_table(spark, sf_dir, "events"))
     # DATE stays the library type; the cross-engine compare projects it
     # as an ISO string (pandas round-trips DuckDB DATE as Timestamp)
     return out.select(
@@ -11506,9 +11498,7 @@ def q_mmr_diverse_topk(spark, sf_dir):
     pytest."""
     from .operators.similarity import mmr_rerank
 
-    return mmr_rerank(
-        load_table(spark, sf_dir, "embeddings"), query_vec_id=0, k=10, lam=0.7, r=50
-    )
+    return mmr_rerank(load_table(spark, sf_dir, "embeddings"), k=10, r=50)
 
 
 @register(
@@ -12053,7 +12043,7 @@ def q_interval_coactivity_pairs(spark, sf_dir):
     from .operators.sessions import interval_coactivity_pairs
 
     ev = load_table(spark, sf_dir, "events")
-    out = interval_coactivity_pairs(ev, event_type="purchase", min_events=2)
+    out = interval_coactivity_pairs(ev)
     return out.select(
         F.date_format("day", "yyyy-MM-dd").alias("day"), "n_pairs"
     )
@@ -12546,7 +12536,7 @@ def q_dedup_threshold_sweep(spark, sf_dir):
     from .operators.dedup import ngram_jaccard_pairs
 
     pairs = ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), n=3, threshold=0.05, max_df=100
+        load_table(spark, sf_dir, "documents"), n=3, threshold=0.05
     )
     th = F.explode(F.array(*[F.lit(float(t)) for t in _SWEEP_THRESHOLDS]))
     sweep = (
@@ -12671,7 +12661,7 @@ def q_interval_coactivity_counts(spark, sf_dir):
     from .operators.sessions import interval_coactivity_counts
 
     ev = load_table(spark, sf_dir, "events")
-    out = interval_coactivity_counts(ev, event_type="purchase", min_events=2)
+    out = interval_coactivity_counts(ev)
     return out.select(
         F.date_format("day", "yyyy-MM-dd").alias("day"), "n_pairs"
     )
@@ -17550,9 +17540,7 @@ def q_hdr_quantile_sketch(spark, sf_dir):
         .alias("cents"),
         F.col("o_orderkey").alias("hk"),
     )
-    return hdr_quantile_report(
-        vals, "cents", "hk", probes=_QUANTILE_PROBES, mantissa_bits=7
-    )
+    return hdr_quantile_report(vals, "cents", "hk", probes=_QUANTILE_PROBES)
 
 
 @register("kll_quantile_ranks", oracle=None)

@@ -186,20 +186,19 @@ def tune(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:
 def get_spark(
     app_name: str = "etl-challenge-localiza-spark",
     cpus: int | None = None,
-    driver_memory: str | None = None,
 ) -> SparkSession:
     """Create (or fetch) a local SparkSession tuned for this engine.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS, else the machine's CPU
-    count. On a real cluster the builder master/memory settings come
-    from spark-submit instead; only RUNTIME_CONF matters there.
+    count; the driver heap is $SPARK_DRIVER_MEMORY, else 8g. On a real
+    cluster the builder master/memory settings come from spark-submit
+    instead; only RUNTIME_CONF matters there.
     """
     cpus = cpus or DEFAULT_CPUS
-    driver_memory = driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.driver.memory", driver_memory)
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )

@@ -149,20 +149,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def spread_small_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
+def spread_small_scan(df: DataFrame) -> DataFrame:
     """Repartition a low-parallelism scan before per-row-heavy work.
 
     Parquet scan parallelism is bounded by file/row-group structure; the
     local test tables are single-row-group files, so an expensive
     projection chain (tokenize → hash → explode) would otherwise run on
     ONE core while 31 idle. On a cluster-scale table the scan already
-    has >= ``parts`` splits and this returns the input unchanged — the
-    round-robin shuffle only fires when the scan is narrow, i.e. exactly
-    when its payload is small.
+    has >= half the session's shuffle width in splits and this returns
+    the input unchanged — the round-robin shuffle only fires when the
+    scan is narrow, i.e. exactly when its payload is small.
     """
-    spark = df.sparkSession
-    if parts is None:
-        parts = shuffle_width(spark)
+    parts = shuffle_width(df.sparkSession)
     # getNumPartitions triggers physical planning of the scan (split
     # computation through py4j) — memoized on the DataFrame object, so
     # the load_table-cached frames pay it once per session, not once

@@ -30,6 +30,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.readers import load_table, ts_nanos_to_micros
 
+#: event-time watermark delay of the watermarked stream shapes.
+WATERMARK_DELAY = "2 hours"
+
 
 def _event_stream(
     spark: SparkSession, sf_dir: str, options: dict[str, str] | None = None
@@ -183,13 +186,13 @@ def run_streaming_dedup(
 
 
 def run_streaming_dedup_within_watermark(
-    spark: SparkSession, sf_dir: str, delay: str = "2 hours", timeout_sec: int = 300
+    spark: SparkSession, sf_dir: str, timeout_sec: int = 300
 ) -> DataFrame:
     """Production streaming dedup for UNBOUNDED key spaces:
     ``dropDuplicatesWithinWatermark`` keyed on (user_id, event_type)
-    with an event-time watermark, so each key's state is EVICTED once
-    the watermark passes it — bounded state forever, at the cost of
-    re-admitting a duplicate that arrives later than ``delay`` after
+    with a 2-hour event-time watermark, so each key's state is EVICTED
+    once the watermark passes it — bounded state forever, at the cost of
+    re-admitting a duplicate that arrives later than the delay after
     its first occurrence (the documented trade; exact global dedup over
     an unbounded stream is impossible with finite state).
 
@@ -206,16 +209,14 @@ def run_streaming_dedup_within_watermark(
     deduped = (
         _event_stream(spark, sf_dir, options={"maxFilesPerTrigger": "1000000000"})
         .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", delay)
+        .withWatermark("ts", WATERMARK_DELAY)
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
     return _run_to_memory(deduped, "append", "stream_dedup_wm", timeout_sec)
 
 
-def hourly_stream_with_watermark(
-    spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
-) -> DataFrame:
+def hourly_stream_with_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode-ready windowed aggregate with late-data handling.
 
     Watermarks require TIMESTAMP (not NTZ) event time — with the UTC
@@ -224,18 +225,17 @@ def hourly_stream_with_watermark(
     stream = _event_stream(spark, sf_dir).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
-    return _hourly_agg(stream.withWatermark("ts", watermark))
+    return _hourly_agg(stream.withWatermark("ts", WATERMARK_DELAY))
 
 
 def interval_join_streams(
     clicks: DataFrame,
     purchases: DataFrame,
-    window_minutes: int = 30,
-    watermark: str = "2 hours",
+    watermark: str = WATERMARK_DELAY,
     how: str = "inner",
 ) -> DataFrame:
     """Watermarked stream-stream interval join: for every click, the
-    same-user purchases within ``window_minutes`` after it.
+    same-user purchases within 30 minutes after it.
 
     Both sides carry an event-time watermark and the join condition
     bounds purchase time to [click_ts, click_ts + W), so Spark can
@@ -269,7 +269,7 @@ def interval_join_streams(
             p,
             (F.col("c_user") == F.col("p_user"))
             & (F.col("p_ts") >= F.col("c_ts"))
-            & (F.col("p_ts") < F.col("c_ts") + F.expr(f"interval {window_minutes} minutes")),
+            & (F.col("p_ts") < F.col("c_ts") + F.expr("interval 30 minutes")),
             how,
         )
         .select("click_id", "purchase_id")
@@ -287,7 +287,7 @@ def run_streaming_interval_join(
     operators/rangejoin.py)."""
     clicks = _event_stream(spark, sf_dir).filter(F.col("event_type") == "click")
     purchases = _event_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
-    joined = interval_join_streams(clicks, purchases, window_minutes=30)
+    joined = interval_join_streams(clicks, purchases)
     return _run_to_memory(joined, "append", "stream_ivjoin", timeout_sec)
 
 

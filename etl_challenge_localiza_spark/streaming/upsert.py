@@ -318,22 +318,21 @@ def run_streaming_mv_refresh(
 def run_streaming_hdr_refresh(
     spark: SparkSession,
     sf_dir: str,
-    probes: list[tuple[int, int]] | None = None,
     timeout_sec: int = 300,
     n_input_files: int = 4,
-    mantissa_bits: int = 7,
     state_base: str | None = None,
 ) -> DataFrame:
     """Continuously-maintained STREAMING quantile sketch: each
     micro-batch of orders builds its own HDR cell table
     (operators/sketches.hdr_cells over price cents) and merges it into
     the accumulating sketch by cellwise count sum (merge_hdr_cells) —
-    bounded state (≤ (64−b)·2^b cells) regardless of volume, the same
+    bounded state (≤ 7,296 cells) regardless of volume, the same
     contract as the streaming CMS refresher but for QUANTILES. Because
     value-binned merge is EXACTLY the whole-corpus build, the final
     sketch — and therefore every quantile answer — is bit-identical
     under ANY micro-batch slicing, which is what the oracle checks
-    (the whole-corpus SQL replica must agree on every probe).
+    (the whole-corpus SQL replica must agree on every probe quantile:
+    0.01, 0.25, 0.5, 0.75, 0.9 and 0.99).
     Versioned-parquet state via apply_versioned_batch (exactly-once
     under foreachBatch retry); ``state_base`` as in
     run_streaming_mv_refresh."""
@@ -341,8 +340,6 @@ def run_streaming_hdr_refresh(
 
     from ..operators.sketches import hdr_cells, merge_hdr_cells
 
-    if probes is None:
-        probes = [(1, 100), (1, 4), (1, 2), (3, 4), (9, 10), (99, 100)]
     with _staged_stream(
         spark, sf_dir, "orders", _ORDER_COLS, n_input_files, base=state_base
     ) as (stream, base):
@@ -353,7 +350,7 @@ def run_streaming_hdr_refresh(
                     .cast("bigint")
                     .alias("v")
                 )
-                delta = hdr_cells(cents, "v", mantissa_bits)
+                delta = hdr_cells(cents, "v")
                 return merge_hdr_cells(prev, delta) if prev is not None else delta
 
             apply_versioned_batch(batch_df.sparkSession, base, "hdr", batch_id, compute)
@@ -364,7 +361,8 @@ def run_streaming_hdr_refresh(
         cum = cells.select("blo", F.sum("cell_n").over(w).alias("cum"))
         n = cells.agg(F.sum("cell_n").cast("long").alias("n"))
         pr = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in probes], "num long, den long"
+            [(1, 100), (1, 4), (1, 2), (3, 4), (9, 10), (99, 100)],
+            "num long, den long",
         )
         r = pr.crossJoin(F.broadcast(n)).select(
             "num",
@@ -395,8 +393,6 @@ def run_streaming_ivf_refresh(
     sf_dir: str,
     timeout_sec: int = 300,
     n_input_files: int = 4,
-    n_centroids: int = 8,
-    nprobe: int = 2,
     state_base: str | None = None,
 ) -> DataFrame:
     """Streaming ANN-INDEX freshness (VERDICT r13 #4): a foreachBatch
@@ -410,7 +406,7 @@ def run_streaming_ivf_refresh(
     Design:
 
     - the codebook is a MODEL, trained offline and persisted once at
-      bootstrap (here: the ivf_search_vec0 seed centroids, kept
+      bootstrap (here: the 8 ivf_search_vec0 seed centroids, kept
       oracle-replayable; a production job would persist kmeans_fit
       output — same table shape);
     - each micro-batch runs the zero-shuffle argmin against the loaded
@@ -431,7 +427,7 @@ def run_streaming_ivf_refresh(
 
     At 100 TB: per batch the work is one scan of the batch (the
     codebook broadcasts as a literal); the index grows append-only as
-    bucket-partitioned files; queries prune to nprobe directories via
+    bucket-partitioned files; queries prune to the 2 probed directories via
     PartitionFilters (pytest-guarded)."""
     from pyspark.sql import Window
 
@@ -450,10 +446,10 @@ def run_streaming_ivf_refresh(
         cents_path = os.path.join(base, "centroids")
         emb = load_table(spark, sf_dir, "embeddings")
         if not os.path.exists(os.path.join(cents_path, "_SUCCESS")):
-            emb.filter(F.col("vec_id") < n_centroids).select(
+            emb.filter(F.col("vec_id") < 8).select(
                 F.col("vec_id").alias("centroid_id"), "embedding"
             ).write.mode("overwrite").parquet(cents_path)
-        # model fetch: n_centroids rows
+        # model fetch: 8 rows
         crows = spark.read.parquet(cents_path).collect()
         cents = F.array(
             *[
@@ -501,7 +497,7 @@ def run_streaming_ivf_refresh(
                         Window.orderBy(F.col("qdist").asc(), F.col("centroid_id").asc())
                     ),
                 )
-                .filter(F.col("rn") <= nprobe)
+                .filter(F.col("rn") <= 2)
                 .select("centroid_id")
                 .collect()  # bounded model probe, not a data collect
             )
@@ -528,24 +524,22 @@ def run_streaming_ivf_refresh(
 def run_streaming_cms_refresh(
     spark: SparkSession,
     sf_dir: str,
-    terms: tuple[str, ...] = ("spark", "hash", "join", "quantum"),
     timeout_sec: int = 300,
     n_input_files: int = 4,
-    depth: int = 4,
-    width: int = 64,
     state_base: str | None = None,
 ) -> DataFrame:
     """Continuously-maintained STREAMING Count-Min sketch: each
-    micro-batch tokenizes its documents, builds its own d×w cell
+    micro-batch tokenizes its documents, builds its own 4×64 cell
     table (operators.sketches.cms_cells) and merges it into the
     accumulating sketch by cellwise integer sum
-    (merge_cms_cells) — so the refresh state is d×w longs REGARDLESS
+    (merge_cms_cells) — so the refresh state is 4×64 longs REGARDLESS
     of corpus size or vocabulary, the defining property that makes
     CMS the streaming frequency sketch. Because the cellwise sum is
     exactly associative, the final sketch equals the batch-built
     sketch under ANY micro-batch slicing — the oracle point-queries
-    the full-corpus SQL replica and must match exactly, including the
-    never-seen probe term (which honestly reads whatever its buckets
+    the full-corpus SQL replica for spark, hash, join and quantum and
+    must match exactly, including the never-seen probe term quantum
+    (which honestly reads whatever its buckets
     accumulated). Versioned-parquet state, same plain-parquet
     stand-in as the CDC/MV sinks — exactly-once under foreachBatch
     retry via the batch_id marker (apply_versioned_batch).
@@ -560,7 +554,7 @@ def run_streaming_cms_refresh(
         def _apply(batch_df: DataFrame, batch_id: int) -> None:
             def compute(prev: DataFrame | None) -> DataFrame:
                 items = batch_df.select(F.explode(_tokens(F.col("text"))).alias("item"))
-                delta = cms_cells(items, "item", depth=depth, width=width)
+                delta = cms_cells(items, "item")
                 return merge_cms_cells(prev, delta) if prev is not None else delta
 
             apply_versioned_batch(batch_df.sparkSession, base, "cms", batch_id, compute)
@@ -568,21 +562,20 @@ def run_streaming_cms_refresh(
         _run_foreach_batch(stream, base, _apply, timeout_sec, "streaming CMS refresh")
         cells = _final_version(spark, base, "cms", "streaming CMS refresh")
         return cms_point_query(
-            cells, list(terms), depth=depth, width=width
+            cells, ["spark", "hash", "join", "quantum"]
         ).localCheckpoint(eager=True)
 
 
 def run_streaming_kmv_refresh(
     spark: SparkSession,
     sf_dir: str,
-    k: int = 256,
     timeout_sec: int = 300,
     n_input_files: int = 4,
     state_base: str | None = None,
 ) -> DataFrame:
     """Continuously-maintained STREAMING distinct-count sketch: each
     micro-batch of orders folds its keys into the bounded KMV bottom-k
-    state (operators/sketches.kmv_bottomk) — merge = bottom-k of the
+    (k = 256) state (operators/sketches.kmv_bottomk) — merge = bottom-k of the
     union of the previous k-row state and the batch's k-row delta,
     which is EXACTLY the bottom-k of all keys seen so far (any hash
     among the running bottom-k is in its own batch's bottom-k), so
@@ -597,6 +590,7 @@ def run_streaming_kmv_refresh(
     after write); ``state_base`` as in run_streaming_mv_refresh."""
     from ..operators.sketches import kmv_bottomk
 
+    k = 256
     with _staged_stream(
         spark, sf_dir, "orders", _ORDER_COLS, n_input_files, base=state_base
     ) as (stream, base):

@@ -76,7 +76,7 @@ def test_salted_join_spreads_hot_key(spark):
     )
     dim = spark.createDataFrame([(0, "hot")], ["key", "name"])
 
-    out = salted_join(fact, dim, "key", "key", "row_id", n_salts=8, force_shuffle=True)
+    out = salted_join(fact, dim, "key", "key", "row_id", force_shuffle=True)
     assert out.count() == 10_000
 
     # the salted fact side distributes the hot key over all 8 salts

@@ -82,9 +82,7 @@ def test_quality_gate_reason_precedence(spark):
 
 def test_quality_gate_token_bounds(spark):
     many = " ".join(["the cat sat on the mat"] * 1000)  # 6000 tokens
-    out = quality_gate(
-        _docs(spark, [(9, many, "en", "s", len(many))]), max_tokens=5000
-    ).first()
+    out = quality_gate(_docs(spark, [(9, many, "en", "s", len(many))])).first()
     assert out["reason"] == "too_long"
 
 
@@ -379,32 +377,37 @@ def test_implicit_negatives_exclude_seen_interactions(spark):
     assert len(out) < 300  # at this SF some candidates WERE seen and dropped
 
 
-def test_dsir_model_memo_skips_refit(spark):
-    """VERDICT r10 #2: with model_cache_key set, a second call must
-    reuse the session-scoped fitted model — proven by planting a fake
-    model under the key and observing the scorer embed it (no refit),
-    and by cache-key isolation (None never caches)."""
-    from etl_challenge_localiza_spark.operators.curation import (
-        _DSIR_MODEL_CACHE,
-        dsir_log_weights,
-    )
+def test_dsir_weights_follow_a_table_rewrite(spark, sf0001, tmp_path):
+    """Rewriting the documents table in place and dispatching
+    dsir_importance_weights again scores with a model fit on the NEW
+    table: both dispatches equal the DuckDB oracle on the file as it
+    stands at that moment."""
+    import shutil
 
-    docs = spark.createDataFrame(
-        [(1, "aaa bbb", "en", "s", 7)],
-        "doc_id long, text string, lang string, source string, n_chars long",
+    import duckdb
+
+    from etl_challenge_localiza_spark.registry import QUERIES
+    from tests.oracle_harness import compare
+
+    q = QUERIES["dsir_importance_weights"]
+    src = f"{sf0001}/documents.parquet"
+    path = tmp_path / "documents.parquet"
+    shutil.copy(src, path)
+
+    def problems() -> list[str]:
+        con = duckdb.connect()
+        con.execute(f"create view documents as select * from '{path}'")
+        oracle = con.sql(q.oracle).fetchdf()
+        return compare(q.name, q.fn(spark, str(tmp_path)).toPandas(), oracle)
+
+    assert problems() == []
+    staged = tmp_path / "rewrite.parquet"
+    duckdb.connect().execute(
+        f"copy (select * from '{src}' where lang = 'en' or doc_id % 2 = 0) "
+        f"to '{staged}' (format parquet)"
     )
-    key = ("test-fake-model", 256, 1.0)
-    _DSIR_MODEL_CACHE[key] = [7_000_000] * 256  # every bucket: +7.0
-    try:
-        r = dsir_log_weights(docs, model_cache_key="test-fake-model").first()
-        # 2 unigrams + 1 bigram = 3 features x 7.0 — only explainable
-        # by the planted literals, a real fit gives log-ratios ~0
-        assert r["n_feats"] == 3 and r["log_weight"] == 21.0
-    finally:
-        del _DSIR_MODEL_CACHE[key]
-    # default: no caching
-    dsir_log_weights(docs).first()
-    assert all(k[0] != None for k in _DSIR_MODEL_CACHE)  # noqa: E711
+    staged.replace(path)
+    assert problems() == []
 
 
 def test_eval_decontaminate_flags_shared_ngram(spark):
@@ -425,7 +428,7 @@ def test_eval_decontaminate_flags_shared_ngram(spark):
         ],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: r for r in eval_decontaminate(corpus, eval_docs, w=5).collect()}
+    rows = {r["doc_id"]: r for r in eval_decontaminate(corpus, eval_docs).collect()}
     assert set(rows) == {1}
     r = rows[1]
     # doc 1 has 10 tokens -> 6 distinct 5-grams; 4 of them appear in eval
@@ -453,6 +456,6 @@ def test_eval_decontaminate_plan_shape(spark):
 
     eval_docs = spark.createDataFrame([(9, "a b c d e f")], "doc_id long, text string")
     corpus = spark.createDataFrame([(1, "a b c d e f g")], "doc_id long, text string")
-    plan = eval_decontaminate(corpus, eval_docs, w=5)._jdf.queryExecution().executedPlan().toString()
+    plan = eval_decontaminate(corpus, eval_docs)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "SortMergeJoin" not in plan

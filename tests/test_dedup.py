@@ -106,7 +106,7 @@ def test_containment_catches_quote_jaccard_misses(spark):
     }
     cont = {
         (r["doc_id_a"], r["doc_id_b"]): r["containment"]
-        for r in ngram_containment_pairs(docs, threshold=0.8).collect()
+        for r in ngram_containment_pairs(docs).collect()
     }
     # every shingle of doc 1 appears in doc 2 -> containment 1.0
     assert cont == {(1, 2): 1.0}

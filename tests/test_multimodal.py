@@ -191,13 +191,13 @@ def test_wav_decode_and_audio_features(spark, tmp_path):
 
     # closed-form check: 8000 Hz mono, 4000 samples of a square wave
     sq = [16384 if i % 2 else -16384 for i in range(4000)]
-    ch, rate, bits, dur, amp = decode_wav(make_wav(1, 8000, sq))
+    ch, rate, bits, dur, amp = decode_wav(make_wav(1, sq))
     assert (ch, rate, bits) == (1, 8000, 16)
     assert dur == pytest.approx(0.5)
     assert amp == pytest.approx(16384 / 32768.0)
 
     # stereo frame counting: 2 channels halve the duration
-    ch, rate, bits, dur, _ = decode_wav(make_wav(2, 8000, sq))
+    ch, rate, bits, dur, _ = decode_wav(make_wav(2, sq))
     assert (ch, dur) == (2, pytest.approx(0.25))
 
     with pytest.raises(ValueError):
@@ -210,7 +210,7 @@ def test_wav_decode_and_audio_features(spark, tmp_path):
     want = {}
     for i, n in enumerate([800, 1600, 2400]):
         tone = [int(10000 * math.sin(i + j / 5)) for j in range(n)]
-        (d / f"clip{i}.wav").write_bytes(make_wav(1, 8000, tone))
+        (d / f"clip{i}.wav").write_bytes(make_wav(1, tone))
         want[i] = n / 8000
     assets = read_binary_assets(spark, str(d), glob="*.wav").select(
         F.regexp_extract("asset_id", r"(\d+)$", 1).cast("long").alias("asset_id"),
@@ -234,11 +234,11 @@ def test_wav_truncated_chunk_refuses():
         make_wav,
     )
 
-    full = make_wav(1, 8000, [1000] * 100)
+    full = make_wav(1, [1000] * 100)
     with pytest.raises(ValueError, match="truncated"):
         decode_wav(full[:-10])
     # min-int16 samples must not overflow the abs computation
-    _, _, _, _, amp = decode_wav(make_wav(1, 8000, [-32768] * 10))
+    _, _, _, _, amp = decode_wav(make_wav(1, [-32768] * 10))
     assert amp == pytest.approx(1.0)
 
 
@@ -351,7 +351,7 @@ def test_sample_video_frames_stride(spark):
     )
 
     docs = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
-    out = sample_video_frames(synthetic_ppm_stream_assets(docs), stride=2).collect()
+    out = sample_video_frames(synthetic_ppm_stream_assets(docs)).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r["asset_id"], []).append(r["frame_index"])

@@ -351,7 +351,7 @@ def test_rrf_fuse_known_rankings(spark):
     sem = spark.createDataFrame(
         [(20, 0.9), (40, 0.8), (10, 0.7)], "doc_id int, c double"
     )
-    out = rrf_fuse([lex, sem], "doc_id", k=4, c=60, r=100).collect()
+    out = rrf_fuse([lex, sem], "doc_id", k=4, r=100).collect()
     got = {r["doc_id"]: r["rrf_score"] for r in out}
     exp = {
         10: round(1 / 61 + 1 / 63, 6),
@@ -371,7 +371,7 @@ def test_rrf_fuse_respects_r_cut(spark):
         [(i, float(100 - i)) for i in range(1, 6)], "doc_id int, s double"
     )
     # r=2 → only doc 1 and 2 survive the lexical cut
-    out = rrf_fuse([lex], "doc_id", k=10, c=60, r=2).collect()
+    out = rrf_fuse([lex], "doc_id", k=10, r=2).collect()
     assert [r["doc_id"] for r in out] == [1, 2]
 
 
@@ -405,7 +405,7 @@ def test_mmr_rerank_prefers_diverse(spark):
     knn2 = [r["vec_id"] for r in knn_cosine(emb, query_vec_id=0, k=2).collect()]
     assert knn2 == [1, 2]  # the clone pair
 
-    out = mmr_rerank(emb, query_vec_id=0, k=2, lam=0.7, r=10).collect()
+    out = mmr_rerank(emb, k=2, r=10).collect()
     assert [r["vec_id"] for r in out] == [1, 3]
     assert [r["mmr_rank"] for r in out] == [1, 2]
     # rank 1 pays no similarity penalty (score = λ·rel, unrounded —
@@ -419,8 +419,8 @@ def test_mmr_rerank_deterministic_on_real_data(spark, sf0001):
     from etl_challenge_localiza_spark.sources.readers import load_table
 
     emb = load_table(spark, sf0001, "embeddings")
-    a = mmr_rerank(emb, query_vec_id=0, k=10, lam=0.7, r=50).collect()
-    b = mmr_rerank(emb, query_vec_id=0, k=10, lam=0.7, r=50).collect()
+    a = mmr_rerank(emb, k=10, r=50).collect()
+    b = mmr_rerank(emb, k=10, r=50).collect()
     assert a == b
     assert len(a) == 10 and [r["mmr_rank"] for r in a] == list(range(1, 11))
 
@@ -438,7 +438,7 @@ def test_rrf_fuse_tolerates_duplicate_ids(spark):
         [(1, 0.9), (1, 0.8), (2, 0.7)], ["id", "s"]
     )
     clean = spark.createDataFrame([(2, 0.5), (1, 0.4)], ["id", "s"])
-    out = rrf_fuse([dup, clean], "id", k=10, c=60, r=100).collect()
+    out = rrf_fuse([dup, clean], "id", k=10, r=100).collect()
     assert [r["id"] for r in out] == sorted(
         [r["id"] for r in out], key=lambda i: -[x["rrf_score"] for x in out][[y["id"] for y in out].index(i)]
     )

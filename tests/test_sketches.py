@@ -128,7 +128,7 @@ def test_bloom_membership_no_false_negatives(spark):
     probes = vocab[:5] + ["absent_one", "absent_two", "absent_three"]
     got = {
         r["item"]: (r["in_filter"], r["actually_present"])
-        for r in bloom_membership_report(df, "item", probes, n_bits=64, k=4).collect()
+        for r in bloom_membership_report(df, "item", probes, n_bits=64).collect()
     }
 
     def bits(w):
@@ -190,10 +190,10 @@ def test_cms_join_size_never_underestimates_and_exact_when_wide(spark):
     fa = {k: sum(1 for i in range(100) if i % 7 == k) for k in range(7)}
     fb = {k: sum(1 for i in range(60) if i % 5 == k) for k in range(5)}
     exact = sum(fa[k] * fb[k] for k in range(5))
-    narrow = cms_join_size_estimate(a, b, "k", depth=4, width=2).first()
+    narrow = cms_join_size_estimate(a, b, "k", width=2).first()
     assert narrow["exact_size"] == exact
     assert narrow["cms_estimate"] >= exact
-    wide = cms_join_size_estimate(a, b, "k", depth=4, width=4096).first()
+    wide = cms_join_size_estimate(a, b, "k", width=4096).first()
     assert wide["cms_estimate"] == exact and wide["rel_err"] == 0.0
 
 

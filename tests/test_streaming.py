@@ -147,7 +147,7 @@ def test_stream_stream_join_matches_across_micro_batches(spark, tmp_path):
         c = spark.readStream.schema(schema).parquet(click_src + "/run*")
         p = spark.readStream.schema(schema).parquet(buy_src + "/run*")
         q = (
-            interval_join_streams(c, p, window_minutes=30)
+            interval_join_streams(c, p)
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", sink)
@@ -286,7 +286,7 @@ def test_left_outer_interval_join_emits_abandoned_clicks(spark, tmp_path):
         c = spark.readStream.schema(schema).parquet(click_src + "/run*")
         p = spark.readStream.schema(schema).parquet(buy_src + "/run*")
         joined = interval_join_streams(
-            c, p, window_minutes=30, watermark="10 minutes", how="leftOuter"
+            c, p, watermark="10 minutes", how="leftOuter"
         )
         q = (
             joined.writeStream.outputMode("append")

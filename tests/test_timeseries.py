@@ -49,7 +49,7 @@ def test_rolling_daily_revenue_trailing_window(spark):
     )
     out = {
         r["o_orderdate"].day: (r["day_revenue"], r["rolling_7d_revenue"])
-        for r in rolling_daily_revenue(orders, days=7).collect()
+        for r in rolling_daily_revenue(orders).collect()
     }
     assert out[1] == (150.0, 150.0)
     assert out[5] == (10.0, 160.0)   # Jan 1 still inside the 7-day frame
@@ -266,7 +266,7 @@ def test_rolling_distinct_users_hand_computed(spark):
     )
     got = {
         str(r["day"]): (r["dau"], r["users_7d"])
-        for r in rolling_distinct_users(ev, days=7).collect()
+        for r in rolling_distinct_users(ev).collect()
     }
     assert got == {
         "2024-01-01": (2, 2),           # u1,u2

@@ -8,6 +8,7 @@ from etl_challenge_localiza_spark.functions.vectors import (
     cosine_fixed,
     dot,
     dot_fixed,
+    embedding_dim,
     norm_sq,
     norm_sq_fixed,
 )
@@ -38,3 +39,24 @@ def test_fixed_folds_equal_hof_folds(spark):
         assert r["dot_f"] == r["dot_h"]
         assert r["nsq_f"] == r["nsq_h"]
         assert r["cos_f"] == r["cos_h"]
+
+
+def test_embedding_dim_probes_once_per_frame(spark):
+    """The width probe is one Spark job the first time a frame is asked
+    and none after: the width is memoized on the DataFrame object."""
+    emb = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (2, None), (3, [0.5, 0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    widths = []
+    try:
+        for group in ("embedding-dim-first", "embedding-dim-second"):
+            sc.setJobGroup(group, "embedding_dim probe")
+            widths.append(embedding_dim(emb))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert widths == [3, 3]
+    assert len(tracker.getJobIdsForGroup("embedding-dim-first")) >= 1
+    assert tracker.getJobIdsForGroup("embedding-dim-second") == []

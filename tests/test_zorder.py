@@ -80,7 +80,7 @@ def test_zorder_layout_prunes_second_dimension(spark, tmp_path):
         [(x, y) for x in range(64) for y in range(64)], "x long, y long"
     )
     zpath, xpath = str(tmp_path / "zsorted"), str(tmp_path / "xsorted")
-    zorder_write(grid, zpath, morton(F.col("x"), F.col("y")), n_files=16)
+    zorder_write(grid, zpath, morton(F.col("x"), F.col("y")))
     (
         grid.repartitionByRange(16, F.col("x"))
         .sortWithinPartitions("x")
