@@ -68,132 +68,11 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def _purchase_intervals(events: DataFrame) -> DataFrame:
-    """Per-(day, user) purchase interval [s, e] in integer µs, for users
-    with at least two purchases that day."""
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.to_date("ts").alias("day"), "user_id", us.alias("t"))
-        .groupBy("day", "user_id")
-        .agg(
-            F.min("t").alias("s"),
-            F.max("t").alias("e"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .filter(F.col("n") >= 2)
-        .drop("n")
-    )
-
-
-def interval_coactivity_pairs(
-    events: DataFrame,
-    bin_us: int | None = None,
-    salt: int | None = None,
-) -> DataFrame:
-    """BUCKETED interval-overlap self-join (the bin-based range-join
-    technique): build per-(user, day) purchase intervals
-    [first, last] (users with ≥ 2 purchases that day), then count, per
-    day, the unordered user pairs whose intervals OVERLAP — co-activity
-    detection.
-
-    The scale move is the equi-join surrogate for the range predicate:
-    each interval explodes into the TIME BINS it spans (bounded rows,
-    bin ≥ typical interval length), candidate pairs form by
-    (day, bin[, salt]) equi-join — never a per-day cross join — and
-    the exact overlap predicate (s₁ ≤ e₂ ∧ s₂ ≤ e₁) then verifies
-    candidates. Completeness: overlapping intervals share the bin of
-    max(s₁,s₂), so every true pair appears in ≥1 shared bin; pairs
-    meeting in several bins are deduped by DISTINCT.
-
-    **Bin width is derived at runtime** (``bin_us=None``, the default)
-    via :func:`operators.rangejoin.auto_bin_us`: one bounded-memory
-    aggregate reads the median interval length and span off the
-    (already grouped) interval frame, and the bin is
-    ``max(median_len, span/shuffle_width)`` — never below the interval
-    length (candidate volume), never so wide that occupied
-    (day, bin) keys fall under the shuffle width (parallelism). The
-    two faces of the knob, measured (PERF.md round-10, ×100 tier,
-    ~7.8 h median intervals, 30-day span): 10-min bins 67.84 s /
-    1 h 43.97 s / 6 h 15.84 s / 24 h 8.71 s — identical output all
-    four, because candidates scale as interval²/(span·bin) below the
-    interval length; but day-wide bins on a 30-day calendar cap the
-    join at ~30 tasks (7 % util@32 measured at ×30). The derived
-    ~22 h bin keeps the candidate optimum while filling the shuffle
-    width. When the faces conflict (median interval longer than
-    span/width — long intervals, short calendar), the candidate face
-    wins the bin and a SALT restores the floor: side a is salted by
-    hash(u1), side b replicated ``salt`` times, so the key space is
-    (day, bin, salt) and each true pair still meets exactly once per
-    shared bin (at salt = hash(u1) % S). ``salt=None`` derives it via
-    :func:`operators.rangejoin.salt_for_bin` (1 = no-op whenever the
-    bin already meets the floor).
-
-    Exact integer microsecond endpoints; returns (day, n_pairs) —
-    values are bin- and salt-independent (plan knobs only)."""
-    from .rangejoin import auto_bin_us, derive_interval_stats, salt_for_bin
-
-    width = shuffle_width(events.sparkSession)
-    iv = _purchase_intervals(events)
-    if bin_us is None or salt is None:
-        # The stats job materializes iv anyway; cache it so the two
-        # join sides below reuse the grouped frame instead of each
-        # rescanning events (iv is the per-(day,user) aggregate —
-        # key-bounded, small).
-        iv = iv.cache()
-        med_us, span_us = derive_interval_stats(iv, "s", "e")
-        if bin_us is None:
-            bin_us = auto_bin_us(med_us, span_us, width, n_coarse_keys=1)
-        if salt is None:
-            salt = salt_for_bin(bin_us, span_us, width)
-    bin_us, salt = int(bin_us), max(int(salt), 1)
-    binned = iv.withColumn(
-        "bin",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("s") / F.lit(bin_us)),
-                F.floor(F.col("e") / F.lit(bin_us)),
-            )
-        ),
-    )
-    # Explicit repartition on the join keys: a user repartition is
-    # exempt from AQE's byte-based coalescing, which otherwise
-    # collapses this CPU-dense-per-byte pair join to ONE task at the
-    # ×30 tier (same class as the sessionize pin above — measured
-    # there 8.87 s → 1.66 s; here 10% → see PERF.md round-11 row).
-    a = binned.select(
-        "day", "bin",
-        F.pmod(F.xxhash64(F.col("user_id")), F.lit(salt))
-        .cast("int").alias("salt"),
-        F.col("user_id").alias("u1"),
-        F.col("s").alias("s1"), F.col("e").alias("e1"),
-    ).repartition(width, "day", "bin", "salt")
-    b = binned.select(
-        "day", "bin",
-        F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("salt"),
-        F.col("user_id").alias("u2"),
-        F.col("s").alias("s2"), F.col("e").alias("e2"),
-    ).repartition(width, "day", "bin", "salt")
-    pairs = (
-        a.join(b, ["day", "bin", "salt"])
-        .filter(
-            (F.col("u1") < F.col("u2"))
-            & (F.col("s1") <= F.col("e2"))
-            & (F.col("s2") <= F.col("e1"))
-        )
-        .select("day", "u1", "u2")
-        .distinct()
-    )
-    return pairs.groupBy("day").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs")
-    )
-
-
 def interval_coactivity_counts(events: DataFrame) -> DataFrame:
-    """COUNT overlapping same-day interval pairs WITHOUT materializing
-    them — the O(n log n) counting complement to
-    interval_coactivity_pairs (use that when downstream needs the pair
-    list; use this for the metric): per day,
+    """COUNT, per day, the unordered user pairs whose purchase
+    intervals [first, last] overlap (users with ≥ 2 purchases that
+    day) — co-activity detection — WITHOUT materializing the pairs:
+    an O(n log n) plan in place of a pair self-join. Per day,
 
         n_overlap = C(n,2) − #{(a,b) : e_a < s_b}
 
@@ -206,9 +85,22 @@ def interval_coactivity_counts(events: DataFrame) -> DataFrame:
     concurrent_open_orders, and the plan DuckDB's specialized
     IEJoin gets for free — expressed in Spark as one per-day window
     over 2n endpoint rows. Exact integer µs endpoints; returns
-    (day, n_pairs), identical values to the pair-materializing plan
-    (the registry pins both to the same oracle)."""
-    iv = _purchase_intervals(events)
+    (day, n_pairs) for days with at least one overlapping pair, the
+    answer of the direct overlap self-join the registry's oracle
+    runs."""
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    iv = (
+        events.filter(F.col("event_type") == "purchase")
+        .select(F.to_date("ts").alias("day"), "user_id", us.alias("t"))
+        .groupBy("day", "user_id")
+        .agg(
+            F.min("t").alias("s"),
+            F.max("t").alias("e"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .filter(F.col("n") >= 2)
+        .drop("n")
+    )
     endpoints = iv.select(
         "day", F.col("s").alias("t"), F.lit(0).alias("kind")
     ).unionByName(iv.select("day", F.col("e").alias("t"), F.lit(1).alias("kind")))

@@ -2,7 +2,9 @@
 
 - :func:`knn_cosine` — exact brute-force top-k for one query vector.
   Linear scan, JVM-side higher-order functions, TakeOrderedAndProject
-  for the top-k (no global sort). This is the correctness baseline.
+  for the top-k (no global sort). This is the correctness baseline;
+  its re-rank, :func:`cosine_topk`, also ranks the IVF candidates that
+  :func:`ivf_probe` selects.
 - :func:`cosine_nn_within_label` — exact nearest neighbour per vector,
   restricted by a blocking column to stay sub-quadratic.
 - :func:`brp_lsh_ann_pairs` — approximate pair search via
@@ -14,7 +16,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.localrel import values_table
@@ -22,26 +24,30 @@ from ..functions.vectors import cosine, cosine_fixed, embedding_dim, l2_norm
 from ..session import shuffle_width
 
 
-def knn_cosine(
-    emb: DataFrame, query_vec_id: int = 0, k: int = 10, round_digits: int = 6
-) -> DataFrame:
-    """Exact cosine top-k neighbours of one stored vector.
-
-    The 1-row query side is broadcast; the scan side never shuffles.
-    Similarity is rounded before ranking so ordering (and therefore the
-    selected top-k set) is stable across engines/runs; ties break on
-    vec_id.
-    """
+def knn_cosine(emb: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
+    """Exact cosine top-k neighbours of one stored vector: the whole
+    corpus but the query itself through :func:`cosine_topk`."""
     q = emb.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q_embedding")
     )
+    return cosine_topk(emb.filter(F.col("vec_id") != query_vec_id), q, k)
+
+
+def cosine_topk(cand: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Cosine top-k of the candidate rows (vec_id, label, embedding)
+    against the 1-row query frame ``q`` (q_embedding).
+
+    The query side is broadcast; the candidate side never shuffles.
+    Similarity is rounded to 6 dp before ranking so ordering (and
+    therefore the selected top-k set) is stable across engines/runs;
+    ties break on vec_id. Returns (vec_id, label, cos_sim).
+    """
     return (
-        emb.filter(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(q))
+        cand.crossJoin(F.broadcast(q))
         .select(
             "vec_id",
             "label",
-            F.round(cosine("embedding", "q_embedding"), round_digits).alias("cos_sim"),
+            F.round(cosine("embedding", "q_embedding"), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
         .limit(k)
@@ -158,8 +164,6 @@ def rrf_fuse(
     full-outer join; the dedup runs on the ≤ r-row ranked frame, so
     the guard costs one tiny exchange, never a corpus shuffle.
     """
-    from pyspark.sql.window import Window
-
     contribs = []
     for i, df in enumerate(rankings):
         score = [col for col in df.columns if col != id_col]
@@ -231,6 +235,31 @@ def centroid_literal(emb: DataFrame, n_centroids: int = 8) -> F.Column:
             )
             for r in sorted(rows, key=lambda r: r.vec_id)
         ]
+    )
+
+
+def ivf_probe(q: DataFrame, cents: DataFrame) -> DataFrame:
+    """IVF probe: the ids of the 2 centroids (nprobe = 2) nearest the
+    1-row query frame ``q`` (q_embedding), as a lazy frame of
+    centroid_id. ``cents`` is the codebook (centroid_id, c_emb); it is
+    broadcast. Distances are rounded to 6 dp and ties break on
+    centroid_id, the oracle's ``row_number`` order. A caller reading a
+    centroid-partitioned index collects the ids into literals, so its
+    bucket filter prunes index partitions at plan time."""
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .select(
+            "centroid_id",
+            F.round(F.sqrt(euclidean_sq("q_embedding", "c_emb")), 6).alias("qdist"),
+        )
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.orderBy(F.col("qdist").asc(), F.col("centroid_id").asc())
+            ),
+        )
+        .filter(F.col("rn") <= 2)
+        .select("centroid_id")
     )
 
 

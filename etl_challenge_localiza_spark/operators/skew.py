@@ -55,10 +55,12 @@ def planner_join_audit(
 
     Plan shape: the per-key count frame feeds three consumers
     (size/NDV stats, the exact-cardinality join, the sketch cells).
-    It is persisted DISK_ONLY — computed once, disk-backed, re-read
-    by each consumer — after two measured failures at the ×1000 tier
-    (150M+ keys/side): an eager localCheckpoint PINNED the NDV-sized
-    frames in storage memory until the spillable hash aggregates
+    It is materialized once by an eager DISK_ONLY localCheckpoint —
+    computed once, disk-backed, re-read by each consumer, and no
+    CacheManager entry left behind — after two measured failures at
+    the ×1000 tier (150M+ keys/side): an eager localCheckpoint at the
+    default MEMORY_AND_DISK level PINNED the NDV-sized frames in
+    storage memory until the spillable hash aggregates
     starved (SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY — cached
     blocks under construction are un-evictable), while no
     materialization at all recomputed the full fact-scan aggregate
@@ -82,13 +84,13 @@ def planner_join_audit(
         left.select(k)
         .groupBy("k")
         .agg(F.count(F.lit(1)).cast("long").alias("na"))
-        .persist(StorageLevel.DISK_ONLY)
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
     fb = (
         right.select(k)
         .groupBy("k")
         .agg(F.count(F.lit(1)).cast("long").alias("nb"))
-        .persist(StorageLevel.DISK_ONLY)
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
     sl = fa.agg(
         F.sum("na").cast("long").alias("left_rows"),

@@ -606,7 +606,10 @@ select o_custkey from orders where o_orderstatus = 'O'
 """,
 )
 def q_custkeys_with_both_statuses(spark, sf_dir):
-    """Set operation (INTERSECT — implicitly distinct in both engines)."""
+    """INTERSECT set operation (implicitly distinct in both engines;
+    complements custkeys_f_except_o's EXCEPT): customers holding both
+    an 'F' and an 'O' order. Catalyst rewrites INTERSECT to an
+    aggregate + left-semi join (EXCEPT gets the left-anti form)."""
     orders = load_table(spark, sf_dir, "orders")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
@@ -2242,6 +2245,24 @@ def q_status_priority_grouping_sets(spark, sf_dir):
     )
 
 
+def _dup_edges(docs: DataFrame) -> DataFrame:
+    """The exact∪near duplicate edge set (src, dst) over documents:
+    blocked 3-gram Jaccard ≥ 0.2 pairs (operators/dedup.py:
+    ngram_jaccard_pairs) plus, per md5(text) group, an edge from the
+    lowest doc_id (the keeper) to every other member."""
+    near = ngram_jaccard_pairs(docs, n=3, threshold=0.2).select(
+        F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
+    )
+    w = Window.partitionBy("h")
+    exact = (
+        docs.select("doc_id", F.md5("text").alias("h"))
+        .withColumn("keeper", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") != F.col("keeper"))
+        .select(F.col("keeper").alias("src"), F.col("doc_id").alias("dst"))
+    )
+    return near.union(exact)
+
+
 @register(
     "near_dup_components",
     headline=True,
@@ -2273,22 +2294,9 @@ def q_near_dup_components(spark, sf_dir):
     (iterative min-label propagation, driver-checked fixpoint) over the
     union of exact-dup and blocked near-dup edges. The oracle is a
     recursive CTE — the same fixpoint computed declaratively."""
-    from pyspark.sql import Window
-
     from .operators.components import connected_components
 
-    docs = load_table(spark, sf_dir, "documents")
-    near = ngram_jaccard_pairs(docs, n=3, threshold=0.2).select(
-        F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
-    )
-    w = Window.partitionBy("h")
-    exact = (
-        docs.select("doc_id", F.md5("text").alias("h"))
-        .withColumn("keeper", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") != F.col("keeper"))
-        .select(F.col("keeper").alias("src"), F.col("doc_id").alias("dst"))
-    )
-    comp = connected_components(near.union(exact))
+    comp = connected_components(_dup_edges(load_table(spark, sf_dir, "documents")))
     return comp.select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("component"),
@@ -2518,10 +2526,7 @@ def q_ivf_search_vec0(spark, sf_dir):
     candidates only — the sub-linear search path, fully deterministic,
     oracle-checked end-to-end (nprobe=2 of 8 buckets → ~4× less work
     than brute force; recall measured against knn_cosine_vec0)."""
-    from pyspark.sql import Window
-
-    from .functions.vectors import cosine
-    from .operators.similarity import euclidean_sq, ivf_assign
+    from .operators.similarity import cosine_topk, ivf_assign, ivf_probe
 
     emb = load_table(spark, sf_dir, "embeddings")
     assign = ivf_assign(emb, n_centroids=8)
@@ -2531,37 +2536,12 @@ def q_ivf_search_vec0(spark, sf_dir):
     qvec = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_embedding")
     )
-    qprobe = (
-        qvec.crossJoin(F.broadcast(cents))
-        .select(
-            "centroid_id",
-            F.round(F.sqrt(euclidean_sq("q_embedding", "c_emb")), 6).alias("qdist"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.orderBy(F.col("qdist").asc(), F.col("centroid_id").asc())
-            ),
-        )
-        .filter(F.col("rn") <= 2)
-        .select("centroid_id")
-    )
     cand = (
-        assign.join(F.broadcast(qprobe), "centroid_id")
+        assign.join(F.broadcast(ivf_probe(qvec, cents)), "centroid_id")
         .filter(F.col("vec_id") != 0)
         .select("vec_id")
     )
-    return (
-        emb.join(cand, "vec_id")
-        .crossJoin(F.broadcast(qvec))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine("embedding", "q_embedding"), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
+    return cosine_topk(emb.join(cand, "vec_id"), qvec, 10)
 
 
 @register(
@@ -4566,25 +4546,6 @@ def q_winsorized_event_values(spark, sf_dir):
 
 
 @register(
-    "custkeys_f_intersect_o",
-    oracle="""
-select o_custkey from orders where o_orderstatus = 'F'
-intersect
-select o_custkey from orders where o_orderstatus = 'O'
-""",
-)
-def q_custkeys_f_intersect_o(spark, sf_dir):
-    """INTERSECT set operation (complements custkeys_f_except_o's
-    EXCEPT): customers holding both an 'F' and an 'O' order. Catalyst
-    rewrites INTERSECT to an aggregate + left-semi join with both
-    distincts pushed below — same plan family as the EXCEPT variant."""
-    o = load_table(spark, sf_dir, "orders")
-    f_keys = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
-    o_keys = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")
-    return f_keys.intersect(o_keys)
-
-
-@register(
     "streaming_upsert_latest",
     oracle="""
 select user_id, event_id, ts, event_type, value
@@ -6215,22 +6176,10 @@ def _doc_components(spark, sf_dir):
     """doc_id → component over the exact∪near-dup edge set, singletons
     included (a doc with no duplicate is its own cluster) — the shared
     Spark half of the cluster-granular curation queries."""
-    from pyspark.sql import Window
-
     from .operators.components import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    near = ngram_jaccard_pairs(docs, n=3, threshold=0.2).select(
-        F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
-    )
-    w = Window.partitionBy("h")
-    exact = (
-        docs.select("doc_id", F.md5("text").alias("h"))
-        .withColumn("keeper", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") != F.col("keeper"))
-        .select(F.col("keeper").alias("src"), F.col("doc_id").alias("dst"))
-    )
-    comp = connected_components(near.union(exact)).select(
+    comp = connected_components(_dup_edges(docs)).select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("component"),
     )
@@ -10445,19 +10394,11 @@ def q_split_leakage_audit(spark, sf_dir):
     the assignment tables."""
     _docs, comp_all = _doc_components(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
-    near = ngram_jaccard_pairs(docs, n=3, threshold=0.2).select(
-        F.col("doc_id_a").alias("a"), F.col("doc_id_b").alias("b")
+    pairs = (
+        _dup_edges(docs)
+        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .distinct()
     )
-    w = Window.partitionBy("h")
-    exact = (
-        docs.select("doc_id", F.md5("text").alias("h"))
-        .withColumn("keeper", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") != F.col("keeper"))
-        .select(F.col("keeper").alias("a"), F.col("doc_id").alias("b"))
-    )
-    pairs = near.union(exact).distinct()
 
     def bucket(key_col):
         nib = F.substring(F.md5(key_col.cast("string").cast("binary")), 1, 1)
@@ -11995,61 +11936,6 @@ def q_token_kl_drift(spark, sf_dir):
 
 
 @register(
-    "interval_coactivity_pairs",
-    oracle="""
-with iv as (
-  select cast(ts as date) as day, user_id,
-         min(epoch_us(ts)) as s, max(epoch_us(ts)) as e
-  from events where event_type = 'purchase'
-  group by 1, 2 having count(*) >= 2
-)
-select strftime(a.day, '%Y-%m-%d') as day,
-       cast(count(*) as bigint) as n_pairs
-from iv a join iv b
-  on a.day = b.day and a.user_id < b.user_id
- and a.s <= b.e and b.s <= a.e
-group by a.day
-""",
-)
-def q_interval_coactivity_pairs(spark, sf_dir):
-    """Interval-overlap SELF-join via hour-bin bucketing
-    (operators/sessions.py:interval_coactivity_pairs): per day, count
-    user pairs whose same-day purchase-burst intervals [first, last]
-    overlap — co-activity / fraud-ring style detection, and the
-    repo's explicit demonstration of the BIN-BASED RANGE JOIN (the
-    equi-join surrogate production engines use for interval
-    predicates): intervals explode into the ≤24 hour bins they span,
-    candidates form by (day, hour) equi-join, the exact overlap
-    predicate verifies, DISTINCT dedups multi-bin pairs. Candidate
-    volume is Σ_bin n², not Σ_day n² — the bin width is the tuning
-    knob, and it must track the INTERVAL LENGTH: this data's bursts
-    span most of their day, so sub-day bins only replicate each
-    interval into every bin it covers while per-bin density barely
-    drops (measured at ×100: 1 h bins 43.97 s, 10 min 67.84 s, 6 h
-    15.84 s, 24 h 8.71 s — all the same 11.5M verified pairs;
-    PERF.md round-10). Second face of the same knob: the join key is
-    (day, bin), so BIN COUNT also sets join parallelism — stage
-    attribution at ×30 read 7% util@32 with pinned day bins
-    (floor-bound: ~30 distinct keys cap the join at ~30 tasks). Since
-    round 11 the bin is DERIVED AT RUNTIME (operators/rangejoin.py:
-    auto_bin_us — max(median interval, span/shuffle_width), one
-    bounded stats aggregate): on this data that lands at ~22 h bins,
-    the candidate optimum AND ≥ shuffle-width keys; when the two
-    faces conflict (long intervals, short calendar) the operator
-    salts the key to the width instead (salt_for_bin). Completeness:
-    overlapping intervals share the bin of max(s₁,s₂). The oracle
-    replays the mathematically equal direct overlap join — output is
-    bin- and salt-independent, so the tuning is pure plan choice."""
-    from .operators.sessions import interval_coactivity_pairs
-
-    ev = load_table(spark, sf_dir, "events")
-    out = interval_coactivity_pairs(ev)
-    return out.select(
-        F.date_format("day", "yyyy-MM-dd").alias("day"), "n_pairs"
-    )
-
-
-@register(
     "basket_lift_pairs",
     oracle="""
 with b as (select distinct l_orderkey, l_partkey from lineitem),
@@ -12577,10 +12463,7 @@ def q_ivf_index_roundtrip(spark, sf_dir):
     import shutil
     import tempfile
 
-    from pyspark.sql import Window
-
-    from .functions.vectors import cosine
-    from .operators.similarity import euclidean_sq, ivf_assign
+    from .operators.similarity import cosine_topk, ivf_assign, ivf_probe
 
     emb = load_table(spark, sf_dir, "embeddings")
     d = tempfile.mkdtemp(prefix="ivfidx_")
@@ -12599,43 +12482,15 @@ def q_ivf_index_roundtrip(spark, sf_dir):
         qvec = emb.filter(F.col("vec_id") == 0).select(
             F.col("embedding").alias("q_embedding")
         )
-        probe_ids = [
-            int(r["centroid_id"])
-            for r in (
-                qvec.crossJoin(F.broadcast(cents))
-                .select(
-                    "centroid_id",
-                    F.round(F.sqrt(euclidean_sq("q_embedding", "c_emb")), 6).alias(
-                        "qdist"
-                    ),
-                )
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.orderBy(F.col("qdist").asc(), F.col("centroid_id").asc())
-                    ),
-                )
-                .filter(F.col("rn") <= 2)
-                .select("centroid_id")
-                .collect()  # nprobe=2 ids — a bounded model-probe fetch,
-                # materialized as literals so the bucket filter prunes
-                # index PARTITIONS at plan time (not a data collect)
-            )
-        ]
+        # nprobe=2 ids — a bounded model-probe fetch, materialized as
+        # literals so the bucket filter prunes index PARTITIONS at plan
+        # time (not a data collect)
+        probe_ids = [int(r["centroid_id"]) for r in ivf_probe(qvec, cents).collect()]
         cand = assign.filter(
             F.col("centroid_id").isin(probe_ids) & (F.col("vec_id") != 0)
         ).select("vec_id")
-        return (
-            emb.join(cand, "vec_id")
-            .crossJoin(F.broadcast(qvec))
-            .select(
-                "vec_id",
-                "label",
-                F.round(cosine("embedding", "q_embedding"), 6).alias("cos_sim"),
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-            .limit(10)
-            .localCheckpoint(eager=True)
+        return cosine_topk(emb.join(cand, "vec_id"), qvec, 10).localCheckpoint(
+            eager=True
         )
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -12643,21 +12498,33 @@ def q_ivf_index_roundtrip(spark, sf_dir):
 
 @register(
     "interval_coactivity_counts",
-    oracle=QUERIES["interval_coactivity_pairs"].oracle,
+    oracle="""
+with iv as (
+  select cast(ts as date) as day, user_id,
+         min(epoch_us(ts)) as s, max(epoch_us(ts)) as e
+  from events where event_type = 'purchase'
+  group by 1, 2 having count(*) >= 2
+)
+select strftime(a.day, '%Y-%m-%d') as day,
+       cast(count(*) as bigint) as n_pairs
+from iv a join iv b
+  on a.day = b.day and a.user_id < b.user_id
+ and a.s <= b.e and b.s <= a.e
+group by a.day
+""",
 )
 def q_interval_coactivity_counts(spark, sf_dir):
-    """The O(n log n) COUNTING plan for the same co-activity answer as
-    `interval_coactivity_pairs` (operators/sessions.py:
-    interval_coactivity_counts): n_overlap = C(n,2) − disjoint pairs,
-    disjoint counted by a per-day endpoint-sweep merge rank — one
-    window over 2n endpoint rows, NO pair stream at all. This is the
-    plan class DuckDB's specialized IEJoin applies automatically
-    (measured at ×30: the bin join materializes 4M pairs in ~4.6 s;
-    this sweep answers in sub-second, engine-parity with IEJoin — see
-    PERF.md), and the reason the repo carries BOTH: materialize pairs
-    when downstream consumes them, sweep-count when it only needs the
-    metric. Oracle: the identical SQL as the pair plan — two
-    independent Spark plans pinned to one cross-engine answer."""
+    """Interval co-activity (operators/sessions.py:
+    interval_coactivity_counts): per day, count the user pairs whose
+    same-day purchase-burst intervals [first, last] overlap —
+    co-activity / fraud-ring style detection. n_overlap = C(n,2) −
+    disjoint pairs, disjoint counted by a per-day endpoint-sweep merge
+    rank — one window over 2n endpoint rows, NO pair stream at all.
+    This is the plan class DuckDB's specialized IEJoin applies
+    automatically (measured at ×30: a bin-bucketed pair join
+    materialized 4M pairs in ~4.6 s; this sweep answers in sub-second,
+    engine-parity with IEJoin — see PERF.md round 10). The oracle runs
+    the direct overlap self-join."""
     from .operators.sessions import interval_coactivity_counts
 
     ev = load_table(spark, sf_dir, "events")

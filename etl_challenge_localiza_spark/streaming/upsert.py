@@ -429,10 +429,7 @@ def run_streaming_ivf_refresh(
     codebook broadcasts as a literal); the index grows append-only as
     bucket-partitioned files; queries prune to the 2 probed directories via
     PartitionFilters (pytest-guarded)."""
-    from pyspark.sql import Window
-
-    from ..functions.vectors import cosine
-    from ..operators.similarity import euclidean_sq, ivf_assign_against
+    from ..operators.similarity import cosine_topk, ivf_assign_against, ivf_probe
 
     with _staged_stream(
         spark,
@@ -481,43 +478,15 @@ def run_streaming_ivf_refresh(
         qvec = emb.filter(F.col("vec_id") == 0).select(
             F.col("embedding").alias("q_embedding")
         )
-        probe_ids = [
-            int(r["centroid_id"])
-            for r in (
-                qvec.crossJoin(F.broadcast(cents_df))
-                .select(
-                    "centroid_id",
-                    F.round(F.sqrt(euclidean_sq("q_embedding", "c_emb")), 6).alias(
-                        "qdist"
-                    ),
-                )
-                .withColumn(
-                    "rn",
-                    F.row_number().over(
-                        Window.orderBy(F.col("qdist").asc(), F.col("centroid_id").asc())
-                    ),
-                )
-                .filter(F.col("rn") <= 2)
-                .select("centroid_id")
-                .collect()  # bounded model probe, not a data collect
-            )
-        ]
+        # bounded model probe, not a data collect
+        probe_ids = [int(r["centroid_id"]) for r in ivf_probe(qvec, cents_df).collect()]
         cand = (
             spark.read.parquet(idx_path)
             .filter(F.col("centroid_id").isin(probe_ids) & (F.col("vec_id") != 0))
             .select("vec_id")
         )
-        return (
-            emb.join(cand, "vec_id")
-            .crossJoin(F.broadcast(qvec))
-            .select(
-                "vec_id",
-                "label",
-                F.round(cosine("embedding", "q_embedding"), 6).alias("cos_sim"),
-            )
-            .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-            .limit(10)
-            .localCheckpoint(eager=True)
+        return cosine_topk(emb.join(cand, "vec_id"), qvec, 10).localCheckpoint(
+            eager=True
         )
 
 

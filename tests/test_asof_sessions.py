@@ -78,43 +78,56 @@ def test_asof_nearest_direction_and_ties(spark):
 
 
 def test_interval_coactivity_matches_direct_join(spark):
-    """The hour-bin bucketed overlap join must equal the direct
-    quadratic overlap join — completeness (overlapping intervals share
-    max(s1,s2)'s hour) and the multi-bin DISTINCT dedup."""
+    """The endpoint-sweep count must equal the direct quadratic overlap
+    join on planted days, including intervals that only touch
+    (s_b == e_a overlaps: starts sort before ends at equal t)."""
     import itertools
+    from datetime import datetime
 
     from pyspark.sql import functions as F
 
     from etl_challenge_localiza_spark.operators.sessions import (
-        interval_coactivity_pairs,
+        interval_coactivity_counts,
     )
 
+    planted = {
+        # u1 [1:00, 5:00], u2 [4:30, 6:00] overlap; u3 [7:00, 8:00] not
+        "2024-01-01": [(1, ["01:00", "05:00"]), (2, ["04:30", "06:00"]),
+                       (3, ["07:00", "08:00"])],
+        # u1 [1:00, 1:10], u2 [1:05, 1:20] overlap; u4 has one event
+        # -> no interval
+        "2024-01-02": [(1, ["01:00", "01:10"]), (2, ["01:05", "01:20"]),
+                       (4, ["01:07"])],
+        # u1 [2:00, 3:00], u2 [3:00, 4:00] touch; u3 [4:30, 5:00] not
+        "2024-01-03": [(1, ["02:00", "03:00"]), (2, ["03:00", "04:00"]),
+                       (3, ["04:30", "05:00"])],
+    }
     rows = []
-    eid = 0
-    # day 1: u1 [1:00, 5:00], u2 [4:30, 6:00] (overlap, 2 shared bins),
-    # u3 [7:00, 8:00] (no overlap with u1/u2)
-    for u, times in [
-        (1, ["01:00", "05:00"]),
-        (2, ["04:30", "06:00"]),
-        (3, ["07:00", "08:00"]),
-    ]:
-        for hm in times:
-            rows.append((eid, f"2024-01-01 {hm}:00", u, "purchase", 1.0))
-            eid += 1
-    # day 2: u1 [1:00, 1:10], u2 [1:05, 1:20] overlap within ONE bin;
-    # u4 has only one event -> excluded by min_events
-    for u, times in [(1, ["01:00", "01:10"]), (2, ["01:05", "01:20"]), (4, ["01:07"])]:
-        for hm in times:
-            rows.append((eid, f"2024-01-02 {hm}:00", u, "purchase", 1.0))
-            eid += 1
+    want = {}
+    for day, users in planted.items():
+        intervals = []
+        for u, times in users:
+            for hm in times:
+                rows.append((len(rows), f"{day} {hm}:00", u, "purchase", 1.0))
+            if len(times) >= 2:
+                ts = [datetime.fromisoformat(f"{day} {hm}") for hm in times]
+                intervals.append((min(ts), max(ts)))
+        n = sum(
+            1
+            for (s1, e1), (s2, e2) in itertools.combinations(intervals, 2)
+            if s1 <= e2 and s2 <= e1
+        )
+        if n:
+            want[day] = n
+    assert want == {"2024-01-01": 1, "2024-01-02": 1, "2024-01-03": 1}
     ev = spark.createDataFrame(
         rows, ["event_id", "ts", "user_id", "event_type", "value"]
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     got = {
         r["day"].isoformat(): r["n_pairs"]
-        for r in interval_coactivity_pairs(ev).collect()
+        for r in interval_coactivity_counts(ev).collect()
     }
-    assert got == {"2024-01-01": 1, "2024-01-02": 1}
+    assert got == want
 
 
 def test_nucleus_subset_exact_half_and_top_row(spark):
@@ -131,97 +144,6 @@ def test_nucleus_subset_exact_half_and_top_row(spark):
     )
     out = {r["id"]: r["kept"] for r in nucleus_subset_by_group(df, "g", "w", "id").collect()}
     assert out == {1: True, 2: False, 3: False, 4: False, 5: False, 6: True}
-
-
-def test_auto_bin_us_rule():
-    """The shared bin-width rule for bucketized interval joins
-    (operators/rangejoin.py:auto_bin_us): candidate-volume face
-    (never below the interval length), parallelism face (occupied
-    keys >= shuffle width), high-cardinality-key degenerate case, and
-    the conflict -> salt handoff."""
-    from etl_challenge_localiza_spark.operators.rangejoin import (
-        auto_bin_us,
-        salt_for_bin,
-    )
-
-    DAY = 86_400_000_000
-    # Short calendar: 2-day span, 10-min median intervals, width 32.
-    # Parallelism face wins: bin = span/32 = 5400 s, and the chosen
-    # bin count (span // bin) must be >= the shuffle width.
-    bin_us = auto_bin_us(600_000_000, 2 * DAY, 32, n_coarse_keys=1)
-    assert bin_us == 2 * DAY // 32
-    assert (2 * DAY) // bin_us >= 32  # the directive's floor assertion
-    assert salt_for_bin(bin_us, 2 * DAY, 32) == 1  # floor met -> no-op
-
-    # Long calendar, long intervals: candidate face wins (bin = median
-    # interval), floor still met because span/bin >= width.
-    bin_us = auto_bin_us(7 * 3600 * 1_000_000, 30 * DAY, 32, n_coarse_keys=1)
-    assert bin_us == (1 * 30 * DAY) // 32  # 22.5 h > 7 h median
-    assert (30 * DAY) // bin_us >= 32
-
-    # High-cardinality join key (user-keyed range joins): no floor
-    # needed, rule degenerates to exactly the interval length.
-    assert auto_bin_us(1_800_000_000, n_coarse_keys=None) == 1_800_000_000
-
-    # Conflict: 1-day intervals on a 2-day calendar, width 32. The
-    # candidate face keeps bin = interval; the salt restores the floor
-    # (occupied keys ~2, so S = ceil(32/2) = 16).
-    bin_us = auto_bin_us(DAY, 2 * DAY, 32, n_coarse_keys=1)
-    assert bin_us == DAY
-    assert salt_for_bin(bin_us, 2 * DAY, 32) == 16
-
-
-def test_interval_coactivity_salted_matches_unsalted(spark):
-    """Salting the (day, bin) key is a pure plan knob: explicit
-    salt=4 with narrow bins must produce the identical (day, n_pairs)
-    answer as the unsalted auto path — every true pair still meets at
-    salt = hash(u1) % S, and DISTINCT dedups multi-bin meetings."""
-    from pyspark.sql import functions as F
-
-    from etl_challenge_localiza_spark.operators.sessions import (
-        interval_coactivity_pairs,
-    )
-
-    rows, eid = [], 0
-    for u, times in [
-        (1, ["01:00", "05:00"]),
-        (2, ["04:30", "06:00"]),
-        (3, ["05:30", "07:00"]),
-        (4, ["22:00", "23:00"]),
-    ]:
-        for hm in times:
-            rows.append((eid, f"2024-03-01 {hm}:00", u, "purchase", 1.0))
-            eid += 1
-    ev = spark.createDataFrame(
-        rows, ["event_id", "ts", "user_id", "event_type", "value"]
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    def as_dict(df):
-        return {r["day"].isoformat(): r["n_pairs"] for r in df.collect()}
-
-    auto = as_dict(interval_coactivity_pairs(ev))
-    salted = as_dict(
-        interval_coactivity_pairs(ev, bin_us=1_800_000_000, salt=4)
-    )
-    # u1-u2 overlap, u1-u3 overlap (5:00 vs 5:30-7? u1 ends 05:00,
-    # u3 starts 05:30 -> disjoint), u2-u3 overlap, u4 disjoint.
-    assert auto == {"2024-03-01": 2}
-    assert salted == auto
-
-
-def test_derive_interval_stats(spark):
-    """Runtime stats feeding auto_bin_us: median interval length and
-    total span in exact integer microseconds."""
-    from etl_challenge_localiza_spark.operators.rangejoin import (
-        derive_interval_stats,
-    )
-
-    iv = spark.createDataFrame(
-        [(0, 100), (50, 250), (1000, 1300)], ["s", "e"]
-    )
-    med, span = derive_interval_stats(iv, "s", "e")
-    assert med == 200  # lengths 100/200/300
-    assert span == 1300
 
 
 def test_asof_duplicate_time_rows_resolve_deterministically(spark):

@@ -405,23 +405,6 @@ def test_asof_nearest_single_key_exchange(spark):
     assert "EvalPython" not in plan
 
 
-def test_interval_coactivity_is_equi_join(spark):
-    """interval_coactivity_pairs: the overlap predicate must ride the
-    (day, bin) equi-join — a SortMergeJoin/ShuffledHashJoin with the
-    range conditions as post-join filters — never a cartesian or
-    broadcast-nested-loop fallback."""
-    plan = _plan(spark, "interval_coactivity_pairs")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # any EQUALITY-keyed join is fine (AQE may broadcast the tiny-SF
-    # side); the range conditions must be the join's post-filter
-    assert (
-        "SortMergeJoin" in plan
-        or "ShuffledHashJoin" in plan
-        or "BroadcastHashJoin [day" in plan
-    )
-
-
 def test_time_decay_attribution_bounds_enumeration(spark):
     """attribution_time_decay shares the capped family's enumeration
     bound: the <=cap slot explode is in the plan, the density2
